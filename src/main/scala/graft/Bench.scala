@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /**
  * Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
- * prints ONE JSON line {"metric","value","unit","queries","sf",...}.
+ * prints the full JSON line {"metric":"total_full","value","unit","queries",
+ * "sf",...}, then a compact {"metric":"total",...} summary line last.
  *
  * Each query is forced through the noop DataSourceV2 sink — unlike
  * count(), noop computes every output column (count() lets Catalyst prune
@@ -63,7 +64,7 @@ import org.apache.spark.sql.SparkSession
  * WALL BUDGET + INCREMENTAL ARTIFACT (r15 verdict #1): the r15 driver
  * capture timed out (rc=124) with ZERO data — the line was only emitted
  * after a completed sweep and nothing bounded the sweep's cost. Now (a)
- * the structured line is flushed to BENCH_latest_local.json before EVERY
+ * the structured line is flushed to [[artifactPath]] before EVERY
  * query (full sweeps only), marked "partial":true and carrying
  * "in_progress" = the query being measured, so an external kill still
  * leaves totals-so-far + provenance + the culprit query; (b) a wall
@@ -218,12 +219,22 @@ object Bench {
     runs.toMap
   }
 
+  val DefaultCpus = "32"
+
+  /** The full-sweep artifact for a core count: the default count writes
+    * BENCH_latest_local.json, any other BENCH_latest_local_c<N>.json, so a
+    * c8 capture never overwrites the default one (and plans its budget
+    * from its own prior medians). */
+  def artifactPath(cpus: String): String =
+    if (cpus == DefaultCpus) "BENCH_latest_local.json"
+    else s"BENCH_latest_local_c$cpus.json"
+
   /** Per-query medians of the last committed full capture
     * (BENCH_latest_local.json's "queries" object) — [[planRuns]]'s
     * projection source. Flat "name":float pairs, so a tiny hand parser
     * suffices; absent/malformed file → empty map (the plan then
     * projects on the fallback estimate). */
-  def priorMedians(path: String = "BENCH_latest_local.json"): Map[String, Double] =
+  def priorMedians(path: String): Map[String, Double] =
     try {
       val s = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(path)), "UTF-8")
@@ -563,19 +574,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // reference dialect is non-ANSI: x % 0 and bad casts yield NULL
-      // (cudf semantics), not errors (Spark 4 flipped the default)
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus)
+    val artifact = artifactPath(cpus)
+    val spark = EngineContext.session(s"local[$cpus]")
+    spark.conf.set("spark.sql.shuffle.partitions", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // Ad-hoc session conf (diagnostic captures only — e.g. the r15 guard
     // on/off table sets graft.dedup.candidatePairBudget=0): "k=v;k=v".
@@ -736,7 +738,7 @@ object Bench {
     def elapsed: Double = (System.nanoTime() - sweepT0) / 1e9
     // Run plan against the budget (reserving 20% headroom for dirty-query
     // re-attempts); the committed prior capture provides the projection.
-    val estimates = priorMedians()
+    val estimates = priorMedians(artifact)
     val runsPlan = planRuns(selected, estimates, StableTwoRuns, budget * 0.8)
     val plannedDemotions = selected.count(q =>
       runsPlan(q) < (if (StableTwoRuns(q)) 2 else 3))
@@ -825,7 +827,7 @@ object Bench {
         "\"" + n + f"""":$r%.3f""" }.mkString("{", ",", "}")
       val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
 
-      f"""{"metric":"total","value":$total%.3f,"effective_core_sec":$effTotal%.3f""" +
+      f"""{"metric":"total_full","value":$total%.3f,"effective_core_sec":$effTotal%.3f""" +
       f""","control_ratio":$controlRatio%.3f,"control_adjusted_total_sec":$adjTotal%.3f""" +
       f""","controls":$controlsJson,"failed":$failedJson,"unit":"sec","queries":$qs,"sf":"$sfDir"""" +
       f""","partial":$partial,"measured":${results.size},"of":${selected.size}""" +
@@ -841,7 +843,7 @@ object Bench {
     def flushArtifact(inProgress: String): Unit =
       if (fullSweep)
         try java.nio.file.Files.write(
-          java.nio.file.Paths.get("BENCH_latest_local.json"),
+          java.nio.file.Paths.get(artifact),
           (buildLine(partial = true, inProgress, calEnd = 0.0) + "\n")
             .getBytes("UTF-8"))
         catch { case e: Exception =>
@@ -912,7 +914,7 @@ object Bench {
     // line keeps the totals, the control normalization, and the failure
     // state under 1 KB so the tail capture ends with one parseable JSON
     // object; the per-query map stays in the full line and in the
-    // committed BENCH_latest_local.json artifact (named here). No
+    // committed [[artifactPath]] artifact (named here). No
     // "queries" key on purpose — a truncated per-query subset could read
     // as dropped queries downstream, absence cannot.
     locally {
@@ -926,7 +928,7 @@ object Bench {
         f""","control_ratio":$controlRatio%.3f,"control_adjusted_total_sec":$adjTotal%.3f""" +
         f""","effective_core_sec":${total * parEff}%.3f,"parallel_efficiency":$parEff%.2f""" +
         f""","measured":${results.size},"of":${selected.size},"contaminated":$contaminated""" +
-        f""","failed":$failedJson,"compact":true,"full_line":"BENCH_latest_local.json"}""")
+        f""","failed":$failedJson,"compact":true,"full_line":"$artifact"}""")
     }
     // The driver's BENCH_rN.json records only a 2000-char tail of this
     // process's output, which the full JSON line outgrows ("parsed":
@@ -939,7 +941,7 @@ object Bench {
     // can never masquerade as a full capture.
     if (fullSweep)
       try java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_latest_local.json"),
+        java.nio.file.Paths.get(artifact),
         (line + "\n").getBytes("UTF-8"))
       catch { case e: Exception =>
         System.err.println(s"[bench] artifact write skipped: ${e.getMessage}") }

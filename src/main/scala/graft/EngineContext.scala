@@ -722,20 +722,9 @@ class EngineContext(val spark: SparkSession) {
 
 object EngineContext {
 
-  /** Tuned session for this engine. shuffle.partitions sized for the local
-    * harness (32 cores); on a real cluster this is cores×2-3 or AQE-coalesced.
-    * Hive support is on (the reference's create_table(name, hive_cursor)
-    * path needs a metastore — context.py:2212-2247), which makes spark-hive
-    * a runtime classpath requirement for sessions built here. Metastore
-    * startup is lazy — sessions that never touch a metastore table pay
-    * nothing. Note getOrCreate semantics: if a session already exists in
-    * the JVM, it is returned as-is (possibly without Hive support).
-    *
-    * The embedded Derby metastore + warehouse are anchored to the engine
-    * home — `graft.engine.home` system property, else GRAFT_ENGINE_HOME
-    * env, else `<java.io.tmpdir>/graft-engine` — NOT the process CWD, so
-    * library consumers launching from arbitrary directories don't scatter
-    * metastore_db/ dirs around; repeated runs from any CWD reuse one
+  /** Where [[session]] anchors the embedded Derby metastore + warehouse:
+    * `graft.engine.home` system property, else GRAFT_ENGINE_HOME env, else
+    * `<java.io.tmpdir>/graft-engine`. Repeated runs from any CWD reuse one
     * metastore. */
   def engineHome: String =
     sys.props.get("graft.engine.home")
@@ -743,6 +732,48 @@ object EngineContext {
       .getOrElse(new java.io.File(
         sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft-engine").getAbsolutePath)
 
+  /** Generated-class cache capacity (`spark.sql.codegen.cache.maxEntries`).
+    * Spark's `CodeGenerator` caches compiled classes keyed by (class
+    * loader, source text) with LRU eviction, 100 entries by default. Every
+    * whole-stage pipeline is compiled twice — once on the driver under the
+    * app class loader and once in the task under the executor loader — so
+    * the working set is about 2 × the distinct pipeline sources. The TPC-H
+    * texts alone reach ~250 entries, and at 100 the LRU evicted each entry
+    * before its next use: every run of a repeated query recompiled, and
+    * the JIT then re-warmed every fresh class. 2000 holds the largest
+    * measured working set (253) with room for a session's operator mix. */
+  val CodegenCacheEntries = 2000
+
+  /** One session factory for the engine, its mains and its tests.
+    *
+    * Shuffle partitions default to 32 (the local harness); callers sizing
+    * for their core count set `spark.sql.shuffle.partitions` as a runtime
+    * conf on the returned session. Hive support is on (the reference's
+    * create_table(name, hive_cursor) path needs a metastore —
+    * context.py:2212-2247), which makes spark-hive a runtime classpath
+    * requirement; metastore startup is lazy, so sessions that never touch a
+    * metastore table pay nothing.
+    *
+    * Two fixed codegen settings make each generated class compile once per
+    * JVM rather than once per query:
+    *  - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]], so
+    *    the driver + executor class-loader working set (2 × distinct
+    *    sources) fits the LRU instead of thrashing it;
+    *  - `spark.sql.codegen.useIdInClassName` = false. AQE assigns
+    *    `codegenStageId` in stage-materialization order, which can differ
+    *    between runs of one query, and the ID is part of the class name —
+    *    so an identical pipeline got a new source text and missed the
+    *    cache. With the flag off the ID goes only into the comment map,
+    *    which `CodeAndComment` equality ignores.
+    *
+    * Caveat: `getOrCreate` returns an existing session as-is (possibly
+    * without Hive support or these settings), and the cache size is read
+    * once, when `CodeGenerator` first initializes in the JVM. A JVM that
+    * compiled generated code before calling this keeps its earlier size.
+    *
+    * The embedded Derby metastore + warehouse are anchored to
+    * [[engineHome]], not the process CWD, so library consumers launching
+    * from arbitrary directories don't scatter metastore_db/ dirs around. */
   def session(master: String = "local[32]", appName: String = "graft"): SparkSession = {
     val target = new java.io.File(engineHome).getAbsolutePath
     // derby.log otherwise lands in the process CWD
@@ -755,6 +786,8 @@ object EngineContext {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // Parquet TIMESTAMP(NANOS) portability: older Spark honors this conf
       // and reads ns as LongType; the installed 4.1.2 ignores it and reads
       // TIMESTAMP_NTZ. Tables.normalizeTs lands BOTH modes on the same

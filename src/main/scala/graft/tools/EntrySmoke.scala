@@ -4,9 +4,7 @@ import graft.{EngineContext, SparkEntry}
 
 /** Flagship smoke main — the driver's `entry()` rows>0 check, runnable
   * locally: builds a session, runs [[SparkEntry.entry]] on sf0.001, and
-  * exits non-zero on an empty result. One of the four shipped entry
-  * points (with Bench / Verify / ScalingBench); the dev-scratch probe
-  * mains live un-compiled under tools/probes/. */
+  * exits non-zero on an empty result. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
     val spark = EngineContext.session()

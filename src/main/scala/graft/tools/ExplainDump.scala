@@ -2,9 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{QuerySelect, SparkEntry}
+import graft.{EngineContext, QuerySelect, SparkEntry}
 
 /** Builder tooling (optimization rounds): dump `.explain("formatted")` for
   * declared queries to an output directory, one file per query — the plan
@@ -23,16 +21,8 @@ object ExplainDump {
     val outDir = args(1)
     val suffix = if (args.length > 2) args(2) else "before"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
+    val spark = EngineContext.session(s"local[$cpus]")
+    spark.conf.set("spark.sql.shuffle.partitions", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     val only = QuerySelect.parse(sys.env.get("SPARK_GRAFT_ONLY"))

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, length}
 
-import graft.SparkEntry
+import graft.{EngineContext, SparkEntry}
 import graft.operators.Dedup
 
 /**
@@ -220,16 +220,9 @@ object ScalingBench {
 
   def main(args: Array[String]): Unit = {
     val tenxDir = args.headOption.getOrElse("/tmp/graft_scaling_10x")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = EngineContext.session(s"local[$cpus]")
+    spark.conf.set("spark.sql.shuffle.partitions", cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     // SPARK_GRAFT_SCALING_NDOCS overrides the corpus size (default 50k =

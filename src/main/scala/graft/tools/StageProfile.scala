@@ -1,7 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+
+import graft.EngineContext
 
 /** Empirical per-stage profile of one registered query (guide §1: decide
   * whether time goes to shuffle, compute, or scheduling before touching
@@ -19,16 +20,8 @@ object StageProfile {
     val query = args(1)
     val runs = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
+    val spark = EngineContext.session(s"local[$cpus]")
+    spark.conf.set("spark.sql.shuffle.partitions", cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     final case class St(id: Int, name: String, wallMs: Long, runMs: Long,

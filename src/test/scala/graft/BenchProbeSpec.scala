@@ -104,6 +104,11 @@ class BenchProbeSpec extends AnyFunSuite {
     assert(r15.size > 100 && math.abs(r15("q143_suffix_ranks") - 12.537) < 1e-9)
   }
 
+  test("artifactPath: a non-default core count never overwrites the default capture") {
+    assert(Bench.artifactPath(Bench.DefaultCpus) == "BENCH_latest_local.json")
+    assert(Bench.artifactPath("8") == "BENCH_latest_local_c8.json")
+  }
+
   test("StableTwoRuns ⊆ the headline set (a stale entry would silently plan nothing)") {
     assert(Bench.StableTwoRuns.subsetOf(Bench.headline.toSet))
   }
