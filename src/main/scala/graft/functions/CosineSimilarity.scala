@@ -116,12 +116,25 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 2, "graft_sorted_intersect_count takes exactly 2 arguments")
         SortedIntersectCount(children.head, children(1))
       }))
+    // one name per (k, wide) signature kernel: k = a banding profile's
+    // numHashes, wide = mod-P reduction first (MinHashSignature.name)
+    for (k <- 1 to MinHashSignature.MaxK; wide <- Seq(false, true)) {
+      val name = MinHashSignature.name(k, wide)
+      ext.injectFunction((
+        new FunctionIdentifier(name),
+        new ExpressionInfo(classOf[MinHashSignature].getName, name),
+        (children: Seq[Expression]) => {
+          require(children.length == 1, s"$name takes exactly 1 argument")
+          MinHashSignature(children.head, k, wide)
+        }))
+    }
     ext.injectFunction((
-      new FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash_sig"),
+      new FunctionIdentifier("graft_token_shingle_hash_set"),
+      new ExpressionInfo(classOf[TokenShingleHashSet].getName, "graft_token_shingle_hash_set"),
       (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_minhash_sig takes exactly 1 argument")
-        MinHashSignature(children.head)
+        require(children.length == 2, "graft_token_shingle_hash_set takes (tokens, k)")
+        TokenShingleHashSet(children.head,
+          intLit("graft_token_shingle_hash_set", children(1), "k"))
       }))
     ext.injectFunction((
       new FunctionIdentifier("graft_max_r6_cosine"),
@@ -129,13 +142,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 2, "graft_max_r6_cosine takes exactly 2 arguments")
         MaxRoundedCosine(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash_sig30"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash_sig30"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_minhash_sig30 takes exactly 1 argument")
-        MinHashSignature(children.head, k = 30)
       }))
     ext.injectFunction((
       new FunctionIdentifier("graft_simhash32"),
@@ -163,17 +169,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[HexLong].getName, "graft_hex_long"),
       (children: Seq[Expression]) => {
         require(children.length == 3, "graft_hex_long takes (hex, start, digits)")
-        def intLit(e: Expression, what: String): Int = {
-          require(e.foldable, s"graft_hex_long: $what must be a literal")
-          e.eval() match {
-            case i: Integer => i.intValue()
-            case l: java.lang.Long => l.intValue()
-            case other => throw new IllegalArgumentException(
-              s"graft_hex_long: $what must be an integer literal, got $other")
-          }
-        }
-        HexLong(children.head,
-          intLit(children(1), "start"), intLit(children(2), "digits"))
+        HexLong(children.head, intLit("graft_hex_long", children(1), "start"),
+          intLit("graft_hex_long", children(2), "digits"))
       }))
     ext.injectFunction((
       new FunctionIdentifier("graft_pq_argmin"),
@@ -221,5 +218,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // parquet scan's PushedFilters).
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsof)
     ext.injectOptimizerRule(_ => graft.plans.PruneAsofColumns)
+  }
+
+  /** The value of a plan-time integer-literal argument of function `fn`. */
+  private def intLit(fn: String, e: Expression, what: String): Int = {
+    require(e.foldable, s"$fn: $what must be a literal")
+    e.eval() match {
+      case i: Integer => i.intValue()
+      case l: java.lang.Long => l.intValue()
+      case other => throw new IllegalArgumentException(
+        s"$fn: $what must be an integer literal, got $other")
+    }
   }
 }

@@ -79,14 +79,19 @@ object GramHashSet {
         else c1 * 65536L + c2 * 256L + c3
       i += 1
     }
+    sortedDistinct(hs)
+  }
+
+  /** `hs` sorted and deduped in place, as an array value — the set form
+    * every gram-hash-set kernel returns. */
+  private[functions] def sortedDistinct(hs: Array[Long]): ArrayData = {
     java.util.Arrays.sort(hs)
-    // dedupe in place on the sorted array
     var w = 0
-    i = 0
-    while (i < g) {
+    var i = 0
+    while (i < hs.length) {
       if (w == 0 || hs(i) != hs(w - 1)) { hs(w) = hs(i); w += 1 }
       i += 1
     }
-    new GenericArrayData(if (w == g) hs else java.util.Arrays.copyOf(hs, w))
+    new GenericArrayData(if (w == hs.length) hs else java.util.Arrays.copyOf(hs, w))
   }
 }

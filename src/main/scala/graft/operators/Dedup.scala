@@ -40,6 +40,15 @@ final class ManagedPairs private[operators] (
     }.foreach(_.unpersist(blocking = true))
 }
 
+/** A verify candidate names a doc id that has no gram set in the sets
+  * relation it is scored against — the candidates and the sets were not
+  * derived from the same corpus (a caller-assembled minHashVerify input
+  * or DedupIndex). Raised by the broadcast merge-walk verify instead of
+  * a bare "key not found". */
+final class MissingGramSetException(val id: Long) extends IllegalStateException(
+  s"dedup verify: candidate doc id $id has no gram set in the verify sets " +
+  "relation; candidates and sets must come from the same corpus")
+
 object Dedup {
 
   /** Materialization barrier + lineage truncation for pipeline
@@ -134,20 +143,23 @@ object Dedup {
     * Computed by the codegen'd one-pass graft_gram_hash_set expression;
     * semantics (and the DuckDB oracle) are those of the composable
     * sort_array(array_distinct(transform(shingles3(text), gramHash))) —
-    * GramHashSpec pins the equivalence. */
+    * GramHashSpec pins the equivalence.
+    *
+    * Null text drops out. The set kernels are null-in → null-out and never
+    * null otherwise, so every set builder filters its INPUT: a filter on
+    * `gs` would be pushed below the projection and evaluate the kernel
+    * twice per row (PlanAuditSpec pins one evaluation). */
   def gramSets(docs: DataFrame, id: String, text: String): DataFrame =
-    docs.select(col(id).as("sid"),
-        call_function("graft_gram_hash_set", col(text)).as("gs"))
-      .filter(col("gs").isNotNull)
+    docs.filter(col(text).isNotNull).select(col(id).as("sid"),
+      call_function("graft_gram_hash_set", col(text)).as("gs"))
 
   /** Codepoint-safe gram sets (base-2^21 polynomial, injective over full
     * Unicode — the base-256 form collides on codepoints > 255, so its
     * hash-set Jaccard drifts from true gram Jaccard on CJK-heavy text;
     * SURVEY §8.5). Same one-pass codegen'd kernel, wide mode. */
   def gramSetsCp(docs: DataFrame, id: String, text: String): DataFrame =
-    docs.select(col(id).as("sid"),
-        call_function("graft_gram_hash_set_cp", col(text)).as("gs"))
-      .filter(col("gs").isNotNull)
+    docs.filter(col(text).isNotNull).select(col(id).as("sid"),
+      call_function("graft_gram_hash_set_cp", col(text)).as("gs"))
 
   /** MinHash-LSH near-dup pairs over CODEPOINT shingles — the CJK-faithful
     * variant of [[minHashLshPairs]]: wide injective gram hashes, and the
@@ -177,9 +189,7 @@ object Dedup {
                                threshold: Double,
                                maxBucket: Long = 0L): ManagedPairs = {
     val sets = truncateLineage(gramSetsCp(docs, id, text))
-    val sigs = sets.select(col("sid") +: size(col("gs")).as("gn") +:
-      MinHashParams.indices.map(j =>
-        array_min(transform(col("gs"), h => minHashJWide(h, j))).as(s"m$j")): _*)
+    val sigs = signaturesFromSets(sets, LshBanding.Default, wide = true)
     // persisted for the same reason as the managed pipeline: the band
     // self-join reads it on BOTH sides and it carries the 16-hash
     // signature computation. The eager localCheckpoint below materializes
@@ -214,24 +224,15 @@ object Dedup {
 
   /** (sid, gs) with gs = sorted distinct md5-48 TOKEN k-shingle hashes —
     * the token-universe gram sets (TextHashing.tokenShingleHashSet has
-    * the saturation rationale). Null text drops out like the other set
-    * builders. */
+    * the saturation rationale). Computed by the codegen'd one-pass
+    * graft_token_shingle_hash_set kernel, whose semantics (and the
+    * DuckDB oracle's) are TextHashing.tokenShingleHashes — TokenShingleSpec
+    * pins the equivalence. Null text drops out like in [[gramSets]]. */
   def tokenShingleSets(docs: DataFrame, id: String, text: String,
                        k: Int = 3): DataFrame =
-    docs.select(col(id).as("sid"), split(col(text), " ").as("_ts"))
-      .select(col("sid"), TextHashing.tokenShingleHashes(col("_ts"), k).as("gs"))
-      .filter(col("gs").isNotNull)
-
-  /** Signature projection for WIDE (up to 2⁴⁸) gram hashes under an
-    * arbitrary banding profile: mod-P reduction before the affine map
-    * (minHashJWide — h·a on a wide hash would overflow 64 bits). The
-    * composable array-fold form; shared by the token-shingle pipeline
-    * and the ScalingBench bucket diagnostics. */
-  private[graft] def wideSignaturesFromSets(sets: DataFrame,
-                                            banding: LshBanding): DataFrame =
-    sets.select(col("sid") +: size(col("gs")).as("gn") +:
-      (0 until banding.numHashes).map(j =>
-        array_min(transform(col("gs"), h => minHashJWide(h, j))).as(s"m$j")): _*)
+    docs.filter(col(text).isNotNull).select(col(id).as("sid"),
+      call_function("graft_token_shingle_hash_set", split(col(text), " "), lit(k))
+        .as("gs"))
 
   /** MinHash-LSH near-dup pairs over TOKEN k-shingles — the profile for
     * corpora whose CHARACTER-gram universe saturates (narrow alphabets,
@@ -266,7 +267,7 @@ object Dedup {
                                    banding: LshBanding = LshBanding.Scaled,
                                    maxBucket: Long = 0L): ManagedPairs = {
     val sets = truncateLineage(tokenShingleSets(docs, id, text, k))
-    val bandRel = bandRelation(wideSignaturesFromSets(sets, banding),
+    val bandRel = bandRelation(signaturesFromSets(sets, banding, wide = true),
       sizeAware = true, banding).persist()
     try {
       val sizes = sharedSizes(bandRel, maxBucket)
@@ -291,19 +292,24 @@ object Dedup {
   def minHashSignatures(docs: DataFrame, id: String, text: String): DataFrame =
     signaturesFromSets(gramSets(docs, id, text))
 
-  def signaturesFromSets(sets: DataFrame): DataFrame =
-    signaturesFromSets(sets, LshBanding.Default)
-
-  def signaturesFromSets(sets: DataFrame, banding: LshBanding): DataFrame = {
-    // One-pass codegen'd kernel for all k mins (graft_minhash_sig /
-    // graft_minhash_sig30 per the banding profile); the composable
-    // per-hash form below is the spec oracle. Two projections:
+  /** THE signature entry point for every shingle profile: the
+    * `banding.numHashes` mins of each doc's set, `wide` = true for the
+    * wide-hash profiles (token md5-48 and codepoint base-2^21 sets:
+    * minHashJWide reduces h mod P before the affine map, since h·a on a
+    * wide hash would overflow 64 bits), false for the narrow char
+    * profile (minHashJ). */
+  def signaturesFromSets(sets: DataFrame, banding: LshBanding = LshBanding.Default,
+                         wide: Boolean = false): DataFrame = {
+    // One-pass codegen'd kernel for all k mins (graft_minhash_sig* for
+    // this (k, wide)); the composable per-hash forms are the spec
+    // oracles. Two projections:
     // _s is non-cheap and referenced k×, so CollapseProject keeps the
     // barrier instead of inlining the kernel once per element_at
     // (MinHashSigSpec pins single evaluation by plan text).
     // gn = |gram set| rides along for the candidate-stage size prefilter.
     sets.select(col("sid"), size(col("gs")).as("gn"),
-        call_function(banding.kernelName, col("gs")).as("_s"))
+        call_function(graft.functions.MinHashSignature.name(banding.numHashes, wide),
+          col("gs")).as("_s"))
       .select(col("sid") +: col("gn") +:
         (0 until banding.numHashes).map(j =>
           element_at(col("_s"), j + 1).as(s"m$j")): _*)
@@ -313,12 +319,12 @@ object Dedup {
     * (16 walks of gs, 16 intermediate arrays). Semantically identical to
     * signaturesFromSets; kept as the equivalence oracle for the one-pass
     * kernel (MinHashSigSpec) and as documentation of the semantics. */
-  def signaturesFromSetsComposable(sets: DataFrame): DataFrame =
-    signaturesFromSetsComposable(sets, LshBanding.Default)
-
-  def signaturesFromSetsComposable(sets: DataFrame, banding: LshBanding): DataFrame = {
+  def signaturesFromSetsComposable(sets: DataFrame,
+                                   banding: LshBanding = LshBanding.Default,
+                                   wide: Boolean = false): DataFrame = {
     val sigs = (0 until banding.numHashes).map(j =>
-      array_min(transform(col("gs"), h => minHashJ(h, j))).as(s"m$j"))
+      array_min(transform(col("gs"),
+        h => if (wide) minHashJWide(h, j) else minHashJ(h, j))).as(s"m$j"))
     sets.select(col("sid") +: size(col("gs")).as("gn") +: sigs: _*)
   }
 
@@ -583,6 +589,28 @@ object Dedup {
       if (sampleDocs == 0L) 0.0 else estPairs.toDouble / sampleDocs
   }
 
+  /** Gram sets of a shingle profile ("char" | "codepoint" | "token") —
+    * the one dispatch table the probe, the auto index and its incremental
+    * batches share. */
+  private def profileSets(profile: String, docs: DataFrame, id: String,
+                          text: String): DataFrame = profile match {
+    case "token"     => tokenShingleSets(docs, id, text)
+    case "codepoint" => gramSetsCp(docs, id, text)
+    case _           => gramSets(docs, id, text)
+  }
+
+  /** Banding an auto-dispatched profile runs under: Scaled for char (the
+    * profile the probe's own estimate is computed under) and token,
+    * Default for codepoint. */
+  private def profileBanding(profile: String): LshBanding =
+    if (profile == "codepoint") LshBanding.Default else LshBanding.Scaled
+
+  /** Signatures of a profile's sets: the token and codepoint hashes are
+    * wide, the char hashes narrow. */
+  private def profileSignatures(profile: String, sets: DataFrame,
+                                banding: LshBanding): DataFrame =
+    signaturesFromSets(sets, banding, wide = profile != "char")
+
   /** Shingle-profile auto-selection — the round-13 saturation discovery
     * (SCALING.md "Gram-universe saturation") shipped as an operator. A
     * bounded content-keyed sample (top `sampleDocs` by md5 of text — a
@@ -649,7 +677,6 @@ object Dedup {
     val g = sample
       .select(col("_half"),
         call_function("graft_gram_hash_set", col("t")).as("gs"))
-      .filter(col("gs").isNotNull)
       .select(col("_half"), explode(col("gs")).as("g"))
     val gr = g.agg(countDistinct(col("g")),
       countDistinct(when(col("_half"), col("g")))).collect()(0)
@@ -665,17 +692,10 @@ object Dedup {
       else "char"
 
     // band-bucket histogram on the sample under the chosen profile
-    val bandRel = profile match {
-      case "token" => bandRelation(
-        wideSignaturesFromSets(tokenShingleSets(sample, "sid", "t"),
-          LshBanding.Scaled), sizeAware = false, LshBanding.Scaled)
-      case "codepoint" => bandRelation(
-        wideSignaturesFromSets(gramSetsCp(sample, "sid", "t"),
-          LshBanding.Default), sizeAware = false, LshBanding.Default)
-      case _ => bandRelation(
-        signaturesFromSets(gramSets(sample, "sid", "t"), LshBanding.Scaled),
-        sizeAware = false, LshBanding.Scaled)
-    }
+    val banding = profileBanding(profile)
+    val bandRel = bandRelation(profileSignatures(profile,
+      profileSets(profile, sample, "sid", "t"), banding),
+      sizeAware = false, banding)
     val (estPairs, _, _) = candidatePairStats(bandRel, maxBucket = 0L)
     DedupProfileRecommendation(profile,
       // estPairsPerDoc > 16 ⇔ estPairs > 16·n, integer-exact
@@ -959,8 +979,12 @@ object Dedup {
     cands.select(col("id_a").cast("long"), col("id_b").cast("long")).as[(Long, Long)]
       .mapPartitions { it =>
         val m = bc.value
+        // a candidate id without a gram set is reachable through the public
+        // minHashVerify (DedupSpec) and through a hand-built DedupIndex whose
+        // sets miss some of its bands' ids
+        def set(id: Long) = m.getOrElse(id, throw new MissingGramSetException(id))
         it.flatMap { case (a, b) =>
-          val ga = m(a); val gb = m(b)
+          val ga = set(a); val gb = set(b)
           // jaccard >= r requires min(|A|,|B|) >= r * max(|A|,|B|): skip
           // the merge walk for pairs that cannot qualify
           if (math.min(ga.length, gb.length) < ratio * math.max(ga.length, gb.length)) None
@@ -1240,15 +1264,10 @@ object Dedup {
     log.info(s"dedupIndexAuto: profile=${rec.profile} maxBucket=${rec.maxBucket} " +
       f"(sample=${rec.sampleDocs} nonAsciiRate=${rec.nonAsciiRate}%.3f " +
       f"newGramRate=${rec.newGramRate}%.3f estPairsPerDoc=${rec.estPairsPerDoc}%.1f)")
-    val (sets, banding) = rec.profile match {
-      case "token"     => (tokenShingleSets(docs, id, text), LshBanding.Scaled)
-      case "codepoint" => (gramSetsCp(docs, id, text), LshBanding.Default)
-      case _           => (gramSets(docs, id, text), LshBanding.Scaled)
-    }
-    val sigs =
-      if (rec.profile == "char") signaturesFromSets(sets, banding)
-      else wideSignaturesFromSets(sets, banding)
-    val bands = bandRelation(sigs, sizeAware = true, banding)
+    val sets = profileSets(rec.profile, docs, id, text)
+    val banding = profileBanding(rec.profile)
+    val bands = bandRelation(profileSignatures(rec.profile, sets, banding),
+      sizeAware = true, banding)
     DedupIndex(bands, sets, Some(indexBandSizes(bands)),
       rec.profile, banding, rec.maxBucket)
   }
@@ -1302,19 +1321,14 @@ object Dedup {
     // (r15 verdict #4): band sigs only collide within one (profile,
     // banding) family, so a mismatched batch would silently probe nothing
     // — consistency is the index's contract, not a caller obligation.
-    val inSets = (index.profile match {
-      case "token"     => tokenShingleSets(incoming, id, text)
-      case "codepoint" => gramSetsCp(incoming, id, text)
-      case _           => gramSets(incoming, id, text)
-    }).persist()
+    val inSets = profileSets(index.profile, incoming, id, text).persist()
     try {
       // Persisted for the same reason as the main pipeline's band relation:
       // the probe join and the within-batch self-join (both sides) share
       // one signature pass over the batch.
-      val inSigs =
-        if (index.profile == "char") signaturesFromSets(inSets, index.banding)
-        else wideSignaturesFromSets(inSets, index.banding)
-      val inBands = bandRelation(inSigs, sizeAware = true, index.banding).persist()
+      val inBands = bandRelation(
+        profileSignatures(index.profile, inSets, index.banding),
+        sizeAware = true, index.banding).persist()
       try {
         // same pre-flight as the batch pipelines: a saturated BATCH would
         // quadratically blow up the within-batch self-join below (message

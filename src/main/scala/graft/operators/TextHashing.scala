@@ -66,9 +66,6 @@ object TextHashing {
     val numHashes: Int = numBands * rowsPerBand
     require(numHashes <= MinHashParamsScaled.length,
       s"profile needs $numHashes hashes; only ${MinHashParamsScaled.length} parameter pairs exist")
-    /** Registered one-pass kernel computing this profile's signature. */
-    def kernelName: String =
-      if (numHashes == 16) "graft_minhash_sig" else "graft_minhash_sig30"
   }
   object LshBanding {
     /** The oracle-frozen default: 16 hashes, 4 bands × 4 rows. */
@@ -226,7 +223,13 @@ object TextHashing {
     * per doc — absorbed by the similarity threshold. A doc with fewer
     * than k tokens degenerates to ONE whole-doc shingle (greatest(…,1)),
     * so short docs stay in the dedup universe instead of silently
-    * dropping out. Row-local projection: no explode, no shuffle. */
+    * dropping out. Row-local projection: no explode, no shuffle.
+    *
+    * This composable form is the reference semantics (specs, DuckDB SQL
+    * mirror); Dedup.tokenShingleSets runs the one-pass
+    * graft_token_shingle_hash_set kernel, which equals it on non-null
+    * token arrays and maps a null array to null (this form hashes it as
+    * the empty string). */
   def tokenShingleHashes(ts: Column, k: Int): Column = {
     require(k >= 1, "tokenShingleHashes needs k >= 1")
     sort_array(array_distinct(transform(

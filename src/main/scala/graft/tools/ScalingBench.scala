@@ -395,7 +395,7 @@ object ScalingBench {
         try {
           val b = LshBanding.Scaled
           val sizes = Dedup.bandRelation(
-              Dedup.wideSignaturesFromSets(tsets, b), sizeAware = false, b)
+              Dedup.signaturesFromSets(tsets, b, wide = true), sizeAware = false, b)
             .groupBy(fcol("sig")).agg(fcount(flit(1)).as("s"))
           val agg = sizes.agg(
             fsum(org.apache.spark.sql.functions.expr("s * (s - 1) div 2"))

@@ -530,6 +530,31 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("TakeOrdered"), p.take(3000)) // top-k never global-sorts
   }
 
+  test("token, codepoint and char MinHash: set and signature kernels run once per row, no interpreted lambda") {
+    import graft.operators.{Dedup, TextHashing}
+    import TextHashing.LshBanding
+    // file-backed scan: a LocalRelation would be constant-folded away
+    val docs = Tables.load(spark, TestSpark.sfDir, "documents")
+    def once(p: String, fn: String): Unit = {
+      val evals = s"$fn\\(".r.findAllIn(p).size
+      assert(evals == 1, s"$fn evaluated $evals times:\n${p.take(3000)}")
+    }
+    val token = Dedup.signaturesFromSets(Dedup.tokenShingleSets(docs, "doc_id", "text"),
+      LshBanding.Scaled, wide = true).queryExecution.executedPlan.toString
+    val cp = Dedup.signaturesFromSets(Dedup.gramSetsCp(docs, "doc_id", "text"),
+      LshBanding.Default, wide = true).queryExecution.executedPlan.toString
+    val char = Dedup.signaturesFromSets(Dedup.gramSets(docs, "doc_id", "text"),
+      LshBanding.Scaled).queryExecution.executedPlan.toString
+    for (p <- Seq(token, cp, char))
+      assert(!p.toLowerCase.contains("lambdafunction"), p.take(3000))
+    once(token, "graft_token_shingle_hash_set")
+    once(token, "graft_minhash_sig30_wide")
+    once(cp, "graft_gram_hash_set_cp")
+    once(cp, "graft_minhash_sig_wide")
+    once(char, "graft_gram_hash_set")
+    once(char, "graft_minhash_sig30")
+  }
+
   test("q190 mean pool: one aggregation, no join, map-side partials") {
     val p = plan("q190_mean_pool")
     assert(!p.contains("Join"), p.take(2000))

@@ -87,6 +87,24 @@ class DedupSpec extends AnyFunSuite {
     assert(verify.count() == 2)
   }
 
+  test("broadcast verify: a candidate id missing from the sets map is a named error") {
+    // The pipelines derive candidates from the bands of the same sets they
+    // verify against, but the public verify (and a hand-built DedupIndex)
+    // accept any candidate relation, so a missing id is reachable.
+    val sets = Dedup.gramSets(docs, "doc_id", "text")
+    val cands = Seq((0L, 1L), (0L, 99L)).toDF("id_a", "id_b")
+    val e = intercept[org.apache.spark.SparkException](
+      Dedup.minHashVerify(cands, sets, useBroadcastMap = true).collect())
+    val named = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[MissingGramSetException])
+    assert(named || e.getMessage.contains("MissingGramSetException"), e.toString)
+    assert(e.getMessage.contains("candidate doc id 99"), e.getMessage)
+    // the shuffle verify's inner joins drop the pair instead
+    val shuffled = Dedup.minHashVerify(cands, sets, useBroadcastMap = false)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(shuffled === Seq((0L, 1L)))
+  }
+
   test("canonicalizeKeepBest keeps the highest-score member, ties to larger id") {
     import spark.implicits._
     // docs 1/2/3 are near-identical (one-token edits of 40 shared

@@ -6,10 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /**
-  * graft_minhash_sig (one-pass 16-min kernel) must be value-identical to
-  * the composable array_min(transform(...)) formulation it replaces — on
-  * the real corpus, on unicode/degenerate strings, and in plan shape
-  * (evaluated once per row, not once per extracted element).
+  * graft_minhash_sig* (one-pass k-min kernels, narrow and wide) must be
+  * value-identical to the composable array_min(transform(...))
+  * formulations they replace — on the real corpus, on unicode/degenerate
+  * strings, on wide and out-of-range hashes, under the default, scaled
+  * and a non-default banding, and in plan shape (evaluated once per row,
+  * not once per extracted element).
   */
 class MinHashSigSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -70,9 +72,74 @@ class MinHashSigSpec extends AnyFunSuite {
     assert(prefix == defSig)
   }
 
+  private def sigCols(b: TextHashing.LshBanding) =
+    "sid" +: "gn" +: (0 until b.numHashes).map(j => s"m$j")
+
+  /** kernel rows vs composable rows, ordered by sid */
+  private def kernelVsComposable(sets: org.apache.spark.sql.DataFrame,
+                                 b: TextHashing.LshBanding, wide: Boolean) = {
+    val c = sigCols(b).map(col)
+    (Dedup.signaturesFromSets(sets, b, wide).select(c: _*).orderBy("sid").collect().toSeq,
+      Dedup.signaturesFromSetsComposable(sets, b, wide).select(c: _*)
+        .orderBy("sid").collect().toSeq)
+  }
+
+  private val bandings = {
+    import TextHashing.LshBanding
+    Seq(LshBanding.Default, LshBanding.Scaled, LshBanding(5, 4))
+  }
+
+  test("wide kernel equals array_min(transform(gs, minHashJWide)) on token and codepoint sets") {
+    val docs = graft.Tables.load(spark, TestSpark.sfDir, "documents")
+    val cjk = spark.sparkContext.parallelize(Seq(
+      (1L, "日本語のテキスト断片"), (2L, "\uDBFF\uDFFF\uDBFF\uDFFF\uDBFF\uDFFF x"),
+      (3L, "répétition déjà vu ü"), (4L, ""), (5L, "中"))).toDF("doc_id", "text")
+    val tokenSets = Dedup.tokenShingleSets(docs, "doc_id", "text")
+    val cpSets = Dedup.gramSetsCp(docs, "doc_id", "text").unionByName(
+      Dedup.gramSetsCp(cjk, "doc_id", "text").withColumn("sid", col("sid") + 1000000L))
+    // a codepoint gram of three U+10FFFF chars is close to 2^63 - 1
+    assert(cpSets.agg(max(array_max(col("gs")))).collect()(0).getLong(0) > (1L << 62))
+    for (b <- bandings; sets <- Seq(tokenSets, cpSets)) {
+      val (a, c) = kernelVsComposable(sets, b, wide = true)
+      assert(a.nonEmpty && a == c, s"${b.numBands}x${b.rowsPerBand}")
+    }
+  }
+
+  test("wide kernel on hashes >= P, up to 2^63 - 1, negative, and the empty set") {
+    val p = TextHashing.P
+    // an RDD, not a LocalRelation: the projection must run through codegen,
+    // not be constant-folded by the optimizer
+    val sets = spark.sparkContext.parallelize(Seq(
+      (1L, Seq(p, p + 1, 2 * p, 3 * p - 1)),
+      (2L, Seq(Long.MaxValue, Long.MaxValue - p, (1L << 48) - 1)),
+      (3L, Seq(0L, 1L, p - 1)),
+      (4L, Seq(Long.MinValue, -p, -1L, 5L)),
+      (5L, Seq.empty[Long]))).toDF("sid", "gs")
+    for (b <- bandings) {
+      val (a, c) = kernelVsComposable(sets, b, wide = true)
+      assert(a.size == 5 && a == c, s"${b.numBands}x${b.rowsPerBand}")
+      // the empty set gives a null signature, like array_min(empty)
+      val empty = a.find(_.getLong(0) == 5L).get
+      assert((2 until empty.length).forall(empty.isNullAt))
+    }
+  }
+
+  test("narrow kernel computes exactly numHashes mins for a non-default banding") {
+    val b = TextHashing.LshBanding(5, 4)
+    val docs = graft.Tables.load(spark, TestSpark.sfDir, "documents")
+    val sets = Dedup.gramSets(docs, "doc_id", "text")
+    val (a, c) = kernelVsComposable(sets, b, wide = false)
+    assert(a.nonEmpty && a == c)
+    // the profile's kernel is the k = 20 one, not a 30-min superset
+    val plan = Dedup.signaturesFromSets(sets, b).queryExecution.executedPlan.toString
+    assert("graft_minhash_sig20\\(".r.findAllIn(plan).size == 1, plan.take(2000))
+  }
+
   test("empty gram set yields null signature (array_min semantics)") {
-    val empty = spark.sql(
-      "SELECT graft_minhash_sig(CAST(array() AS ARRAY<BIGINT>)) AS s").collect()(0)
-    assert(empty.isNullAt(0))
+    for (f <- Seq("graft_minhash_sig", "graft_minhash_sig30_wide")) {
+      val empty = spark.sql(
+        s"SELECT $f(CAST(array() AS ARRAY<BIGINT>)) AS s").collect()(0)
+      assert(empty.isNullAt(0), f)
+    }
   }
 }

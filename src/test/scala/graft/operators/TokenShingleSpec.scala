@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** Token-shingle MinHash (the universe-growing dedup profile): set
-  * construction vs a direct Scala reference, degenerate short docs,
+  * construction vs a direct Scala reference and vs the composable SQL
+  * form, null and degenerate short docs,
   * high-similarity recall vs exact token-shingle Jaccard, and the
   * structural claim itself — the token universe GROWS where the char-3
   * universe saturates. */
@@ -54,6 +55,46 @@ class TokenShingleSpec extends AnyFunSuite {
     // a <k-token doc keeps exactly ONE whole-doc shingle
     assert(got(100L).length === 1)
     assert(got(101L).length === 1)
+  }
+
+  test("kernel equals the composable form for k in {1, 2, 3, 5}") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val corpus = graft.Tables.load(spark, TestSpark.sfDir, "documents")
+      .select(col("doc_id"), col("text"))
+    // an RDD, not a LocalRelation: the projection runs through codegen
+    val edge = spark.sparkContext.parallelize(Seq(
+      (-1L, ""), (-2L, "solo"), (-3L, "   "), (-4L, " lead  and  trail "),
+      (-5L, "répétition déjà vu ü ü"), (-6L, "日本語 の テキスト 断片"),
+      (-7L, "a b"), (-8L, "x y z w v u"))).toDF("doc_id", "text")
+    val docs = corpus.unionByName(edge)
+    for (k <- Seq(1, 2, 3, 5)) {
+      val kernel = Dedup.tokenShingleSets(docs, "doc_id", "text", k)
+        .orderBy("sid").collect().toSeq
+      val composable = docs.select(col("doc_id").as("sid"),
+          TextHashing.tokenShingleHashSet(col("text"), k).as("gs"))
+        .orderBy("sid").collect().toSeq
+      assert(kernel.size > 8 && kernel == composable, s"k=$k")
+    }
+  }
+
+  test("null text drops out; the composable form hashed it as the empty string") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val docs = spark.sparkContext.parallelize(Seq(
+      (1L, null: String), (2L, null: String), (3L, ""),
+      (4L, "something else entirely different here"))).toDF("doc_id", "text")
+    val sets = Dedup.tokenShingleSets(docs, "doc_id", "text")
+      .collect().map(r => r.getLong(0)).sorted.toSeq
+    assert(sets === Seq(3L, 4L))
+    // what the composable form gives a null text: md5-48 of ""
+    val composable = docs.filter(col("text").isNull)
+      .select(TextHashing.tokenShingleHashSet(col("text"), 3)).collect()
+      .map(_.getSeq[Long](0)).toSeq
+    assert(composable === Seq(Seq(h48("")), Seq(h48(""))))
+    // so null-text docs no longer pair with each other or with empty docs
+    val pairs = Dedup.minHashLshPairsTokens(docs, "doc_id", "text", 0.7).collect()
+    assert(pairs.isEmpty, pairs.mkString(","))
   }
 
   test("exact duplicates of tiny docs still pair at jaccard 1.0") {
