@@ -34,10 +34,112 @@ final class ManagedPairs private[operators] (
       * enforced the budget, surfaced so the guard's one job also serves
       * observability (r14 verdict #1). */
     val guardEstPairs: Long = -1L) extends AutoCloseable {
-  override def close(): Unit =
-    df.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = true))
+  override def close(): Unit = Dedup.releaseTruncated(df, blocking = true)
+}
+
+/** The shingle universe of a near-dup profile: the kernel that builds
+  * each doc's sorted distinct gram-hash set, whether those hashes are
+  * wide (token md5-48 and codepoint base-2^21: the signature reduces
+  * mod P before the affine map — Dedup.signaturesFromSets), the escape
+  * hatches the banding pre-flight guard names for it, and its default
+  * verify budget. */
+sealed abstract class Shingles(val wide: Boolean,
+                               /** Default byte budget of the broadcast
+                                 * merge-walk verify; 0 = shuffle verify,
+                                 * with no sizing aggregate. */
+                               val verifyBudget: Long,
+                               private[operators] val hatches: String) {
+  /** (sid, gs) gram sets of the non-null texts of `docs`. */
+  def sets(docs: DataFrame, id: String, text: String): DataFrame
+}
+
+object Shingles {
+  /** Character 3-grams, base-256 gram hashes (q44/q194). Broadcast
+    * verify up to Dedup.BroadcastVerifyMaxBytes. */
+  case object Char extends Shingles(wide = false, Dedup.BroadcastVerifyMaxBytes,
+    "Escape hatches, in preference order: (1) switch to token shingles — " +
+    "NearDupProfile.Token, whose gram universe grows with the vocabulary so hot " +
+    "buckets cannot form (q199: max bucket 2 at every measured tier); (2) set " +
+    "maxBucket (500 kept 99.7% planted recall at the tier that killed uncapped " +
+    "char banding); (3) raise graft.dedup.candidatePairBudget if this volume is " +
+    "genuinely intended.") {
+    def sets(docs: DataFrame, id: String, text: String): DataFrame =
+      Dedup.gramSets(docs, id, text)
+  }
+
+  /** Codepoint 3-grams, injective over full Unicode (q139). Shuffle
+    * verify — the q44b-proven shape. */
+  case object Codepoint extends Shingles(wide = true, 0L,
+    "Escape hatches: (1) set maxBucket (500 kept 99.7% planted recall at the " +
+    "tier that killed uncapped char banding; token shingles are NOT an option " +
+    "here — codepoint-profile text is typically unsegmented, so whitespace " +
+    "tokenization degenerates); (2) raise graft.dedup.candidatePairBudget if " +
+    "this volume is genuinely intended.") {
+    def sets(docs: DataFrame, id: String, text: String): DataFrame =
+      Dedup.gramSetsCp(docs, id, text)
+  }
+
+  /** Whitespace-token 3-shingles, md5-48 hashes (q199) — for corpora
+    * whose CHARACTER-gram universe saturates (narrow alphabets,
+    * templated/synthetic text). SCALING.md round 13 measured the failure
+    * it fixes: at a fixed ~1,580-gram char-3 universe, band candidates
+    * grow exactly n² under any (b, r) because the fixed minhash functions
+    * concentrate on ubiquitous grams; the token universe grows with the
+    * vocabulary (Heaps), so hot buckets cannot form structurally. Its
+    * Jaccard is token-shingle resemblance (coarser-grained,
+    * word-order-sensitive), not char-3-gram resemblance. Shuffle verify:
+    * routing it through the broadcast map measured slower on the
+    * curation benchmark. */
+  case object Token extends Shingles(wide = true, 0L,
+    "This is already the token profile, so the universe cannot saturate " +
+    "structurally — the volume is a genuine duplicate storm. Escape hatches: " +
+    "(1) set maxBucket (hot buckets here are exact-dup families, the " +
+    "low-information region); (2) raise graft.dedup.candidatePairBudget if " +
+    "this volume is genuinely intended.") {
+    def sets(docs: DataFrame, id: String, text: String): DataFrame =
+      Dedup.tokenShingleSets(docs, id, text)
+  }
+}
+
+/** Everything [[Dedup.nearDupPairs]] varies by: the shingle universe,
+  * the LSH banding, and the hot-bucket cap (0 = exact banding; see
+  * Dedup.pairsFromBands). The returned `jaccard` is the resemblance of
+  * `shingles` — char-3-gram, codepoint-gram or token-shingle Jaccard. */
+final case class NearDupProfile(shingles: Shingles,
+                                banding: TextHashing.LshBanding =
+                                  TextHashing.LshBanding.Default,
+                                maxBucket: Long = 0L) {
+  /** (sid, [gn,] sig) band relation of this profile's gram sets. */
+  private[operators] def bands(sets: DataFrame, sizeAware: Boolean = true): DataFrame =
+    Dedup.bandRelation(Dedup.signaturesFromSets(sets, banding, shingles.wide),
+      sizeAware, banding)
+}
+
+object NearDupProfile {
+  /** Char 3-grams under the Default banding (q44). */
+  val Char: NearDupProfile = NearDupProfile(Shingles.Char)
+  /** Char 3-grams under the Scaled banding (q194) — the large-corpus
+    * selectivity setting (TextHashing.LshBanding has the (b, r) math). */
+  val CharScaled: NearDupProfile =
+    NearDupProfile(Shingles.Char, TextHashing.LshBanding.Scaled)
+  /** Codepoint 3-grams under the Default banding (q139). */
+  val Codepoint: NearDupProfile = NearDupProfile(Shingles.Codepoint)
+  /** Token 3-shingles under the Scaled banding (q199): the token
+    * profile exists for large corpora. */
+  val Token: NearDupProfile =
+    NearDupProfile(Shingles.Token, TextHashing.LshBanding.Scaled)
+
+  /** The profile the auto front door runs for a recommended shingle
+    * universe (a [[Dedup.DedupProfileRecommendation]] profile string) and
+    * cap: Scaled banding for char (the banding the probe's
+    * own Σ C(bucket,2) estimate is computed under) and token, Default
+    * for codepoint. */
+  def recommended(profile: String, maxBucket: Long): NearDupProfile =
+    (profile match {
+      case "token"     => Token
+      case "codepoint" => Codepoint
+      case _           => CharScaled
+    }).copy(maxBucket = maxBucket)
 }
 
 /** A verify candidate names a doc id that has no gram set in the sets
@@ -61,12 +163,8 @@ object Dedup {
     * the checkpoint store on recovery. Checkpoint files are managed by
     * Spark's normal cleanup (`spark.cleaner.referenceTracking.cleanCheckpoints`),
     * not by ManagedPairs.close(). */
-  private[operators] def truncateLineage(df: DataFrame): DataFrame = {
-    val sess = df.sparkSession
-    val reliable = sess.conf.getOption("graft.dedup.reliableCheckpoint").contains("true") &&
-      sess.sparkContext.getCheckpointDir.isDefined
-    if (reliable) df.checkpoint() else df.localCheckpoint()
-  }
+  private[operators] def truncateLineage(df: DataFrame): DataFrame =
+    if (reliableCheckpoint(df)) df.checkpoint() else df.localCheckpoint()
 
   /** Lazy variant of [[truncateLineage]]: the lineage is truncated at call
     * time but the blocks materialize with the CALLER's next action instead
@@ -74,12 +172,25 @@ object Dedup {
     * action of their own (connectedComponents' convergence checksum), the
     * barrier and that action share one job instead of paying two
     * (guide §2: per-round job overhead in iterative operators). */
-  private[operators] def truncateLineageLazy(df: DataFrame): DataFrame = {
-    val sess = df.sparkSession
-    val reliable = sess.conf.getOption("graft.dedup.reliableCheckpoint").contains("true") &&
-      sess.sparkContext.getCheckpointDir.isDefined
-    if (reliable) df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
-  }
+  private[operators] def truncateLineageLazy(df: DataFrame): DataFrame =
+    if (reliableCheckpoint(df)) df.checkpoint(eager = false)
+    else df.localCheckpoint(eager = false)
+
+  private def reliableCheckpoint(df: DataFrame): Boolean =
+    df.sparkSession.conf.getOption("graft.dedup.reliableCheckpoint").contains("true") &&
+      df.sparkSession.sparkContext.getCheckpointDir.isDefined
+
+  /** Release a [[truncateLineage]] result's storage blocks. The
+    * checkpointed rows live in the LogicalRDD's persisted RDD —
+    * localCheckpoint registers no CacheManager entry, so a plain
+    * df.unpersist() would be a silent no-op. Reliable checkpoints pass
+    * through harmlessly (unpersist of a non-persisted RDD is a no-op;
+    * their files are cleaned by the checkpoint dir's own lifecycle). The
+    * DataFrame must not be used afterwards. */
+  private[operators] def releaseTruncated(df: DataFrame, blocking: Boolean = false): Unit =
+    df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.foreach(_.unpersist(blocking))
 
   /** Exact dedup: group identical texts (by md5 + length to keep the
     * group key narrow), keep min doc id — the Spark-native analog of a
@@ -161,66 +272,22 @@ object Dedup {
     docs.filter(col(text).isNotNull).select(col(id).as("sid"),
       call_function("graft_gram_hash_set_cp", col(text)).as("gs"))
 
-  /** MinHash-LSH near-dup pairs over CODEPOINT shingles — the CJK-faithful
-    * variant of [[minHashLshPairs]]: wide injective gram hashes, and the
-    * signature's universal hashes reduce mod P BEFORE the affine map
-    * (a wide h·a would overflow 64 bits — wrapping here, erroring in the
-    * oracle). Same banding, same size prefilter, same merge-walk verify
-    * kernel (sorted-long intersections are hash-width-agnostic); the
-    * verify join is the q44b-proven SHUFFLE_HASH shape. Sets are
-    * lineage-truncated once for their two consumers (banding + verify). */
-  def minHashLshPairsCp(docs: DataFrame, id: String, text: String,
-                        threshold: Double): DataFrame =
-    minHashLshPairsCp(docs, id, text, threshold, maxBucket = 0L)
-
-  /** maxBucket > 0 applies the standard hot-bucket cap (see
-    * [[pairsFromBands]]) — the codepoint profile's only banding escape
-    * hatch (token shingles degenerate on unsegmented text), so the auto
-    * front door needs it dispatchable here too (r15). */
-  def minHashLshPairsCp(docs: DataFrame, id: String, text: String,
-                        threshold: Double, maxBucket: Long): DataFrame =
-    minHashLshPairsCpManaged(docs, id, text, threshold, maxBucket).df
-
-  /** [[minHashLshPairsCp]] with a deterministic-release handle (and the
-    * guard's candidate estimate) — the [[ManagedPairs]] contract for the
-    * codepoint profile, so [[nearDupPairsAutoManaged]] can hand back a
-    * handle whatever profile the probe dispatches to (r15 advisor). */
-  def minHashLshPairsCpManaged(docs: DataFrame, id: String, text: String,
-                               threshold: Double,
-                               maxBucket: Long = 0L): ManagedPairs = {
-    val sets = truncateLineage(gramSetsCp(docs, id, text))
-    val sigs = signaturesFromSets(sets, LshBanding.Default, wide = true)
-    // persisted for the same reason as the managed pipeline: the band
-    // self-join reads it on BOTH sides and it carries the 16-hash
-    // signature computation. The eager localCheckpoint below materializes
-    // the verified pairs, so the finally-unpersist is safe.
-    val bandRel = bandRelation(sigs, sizeAware = true).persist()
-    try {
-      val sizes = sharedSizes(bandRel, maxBucket)
-      try {
-        val estPairs = guardCandidateBudget(bandRel, maxBucket, CpHatches, sizes)
-        val cands = pairsFromBands(bandRel, threshold, sizeAware = true,
-          maxBucket, sizes)
-        new ManagedPairs(
-          truncateLineage(minHashVerify(cands, sets, useBroadcastMap = false, threshold))
-            .select(col("id_a"), col("id_b"), jaccardCol)
-            .filter(col("jaccard") >= threshold), estPairs)
-      } finally sizes.foreach(_.unpersist(blocking = false))
-    } finally bandRel.unpersist(blocking = false)
-  }
-
   /** Persisted band-bucket histogram, but only when TWO consumers exist
     * (guard enabled AND cap set — r15 amortization: the guard's aggregate
     * and the cap's keep-filter then read one histogram instead of
     * aggregating the band relation twice). None when the cap is off (the
     * guard's one-shot aggregate needs no persist) or the guard disabled. */
   private def sharedSizes(bandRel: DataFrame, maxBucket: Long): Option[DataFrame] = {
-    val guardOn = bandRel.sparkSession.conf
-      .getOption("graft.dedup.candidatePairBudget")
-      .map(_.toLong).getOrElse(DefaultCandidatePairBudget) > 0L
-    if (guardOn && maxBucket > 0L) Some(bucketSizes(bandRel).persist())
+    if (candidatePairBudget(bandRel) > 0L && maxBucket > 0L)
+      Some(bucketSizes(bandRel).persist())
     else None
   }
+
+  /** The session's `graft.dedup.candidatePairBudget` (0 disables every
+    * banding pre-flight). */
+  private def candidatePairBudget(df: DataFrame): Long =
+    df.sparkSession.conf.getOption("graft.dedup.candidatePairBudget")
+      .map(_.toLong).getOrElse(DefaultCandidatePairBudget)
 
   /** (sid, gs) with gs = sorted distinct md5-48 TOKEN k-shingle hashes —
     * the token-universe gram sets (TextHashing.tokenShingleHashSet has
@@ -234,70 +301,15 @@ object Dedup {
       call_function("graft_token_shingle_hash_set", split(col(text), " "), lit(k))
         .as("gs"))
 
-  /** MinHash-LSH near-dup pairs over TOKEN k-shingles — the profile for
-    * corpora whose CHARACTER-gram universe saturates (narrow alphabets,
-    * templated/synthetic text). SCALING.md round 13 measured the failure
-    * it fixes: at a fixed ~1,580-gram char-3 universe, band candidates
-    * grow exactly n² under any (b, r) because the fixed minhash
-    * functions concentrate on ubiquitous grams; the token universe grows
-    * with the vocabulary (Heaps), so the min is spread across an
-    * expanding gram population and hot buckets cannot form structurally.
-    *
-    * Same banding/candidate/verify machinery as [[minHashLshPairs]]
-    * (size prefilter in the band join, optional bucket cap, sorted-array
-    * merge-walk verify — hash-width-agnostic); only the SET DEFINITION
-    * changes, so the returned `jaccard` is token-shingle resemblance,
-    * not char-3-gram resemblance — a different (coarser-grained, word-
-    * order-sensitive) similarity measure, which is why this is a new
-    * operator rather than a flag on q44's. Defaults to the Scaled
-    * banding: the token profile exists for large corpora. */
-  def minHashLshPairsTokens(docs: DataFrame, id: String, text: String,
-                            threshold: Double, k: Int = 3,
-                            banding: LshBanding = LshBanding.Scaled,
-                            maxBucket: Long = 0L): DataFrame =
-    minHashLshPairsTokensManaged(docs, id, text, threshold, k, banding,
-      maxBucket).df
-
-  /** [[minHashLshPairsTokens]] with a deterministic-release handle (and
-    * the guard's candidate estimate) — the [[ManagedPairs]] contract for
-    * the token profile (r15 advisor: the auto front door needs a handle
-    * on every dispatch path). */
-  def minHashLshPairsTokensManaged(docs: DataFrame, id: String, text: String,
-                                   threshold: Double, k: Int = 3,
-                                   banding: LshBanding = LshBanding.Scaled,
-                                   maxBucket: Long = 0L): ManagedPairs = {
-    val sets = truncateLineage(tokenShingleSets(docs, id, text, k))
-    val bandRel = bandRelation(signaturesFromSets(sets, banding, wide = true),
-      sizeAware = true, banding).persist()
-    try {
-      val sizes = sharedSizes(bandRel, maxBucket)
-      try {
-        val estPairs = guardCandidateBudget(bandRel, maxBucket, TokenHatches, sizes)
-        val cands = pairsFromBands(bandRel, threshold, sizeAware = true,
-          maxBucket, sizes)
-        new ManagedPairs(
-          truncateLineage(minHashVerify(cands, sets, useBroadcastMap = false, threshold))
-            .select(col("id_a"), col("id_b"), jaccardCol)
-            .filter(col("jaccard") >= threshold), estPairs)
-      } finally sizes.foreach(_.unpersist(blocking = false))
-    } finally bandRel.unpersist(blocking = false)
-  }
-
-  /** 16-hash MinHash signature per document, computed as array folds over
-    * the doc's own gram-hash set (array_min of transform) — a pure
-    * projection with NO shuffle. The naive shape (explode grams, groupBy
-    * doc with 16 min-aggregates) pushes |grams| rows through partial
-    * aggregation for the same result; min over a doc's grams only needs
-    * that doc's array. */
-  def minHashSignatures(docs: DataFrame, id: String, text: String): DataFrame =
-    signaturesFromSets(gramSets(docs, id, text))
-
   /** THE signature entry point for every shingle profile: the
     * `banding.numHashes` mins of each doc's set, `wide` = true for the
     * wide-hash profiles (token md5-48 and codepoint base-2^21 sets:
     * minHashJWide reduces h mod P before the affine map, since h·a on a
     * wide hash would overflow 64 bits), false for the narrow char
-    * profile (minHashJ). */
+    * profile (minHashJ). A pure projection over the doc's own gram-hash
+    * set with NO shuffle: the naive shape (explode grams, groupBy doc
+    * with k min-aggregates) pushes |grams| rows through partial
+    * aggregation for the same result. */
   def signaturesFromSets(sets: DataFrame, banding: LshBanding = LshBanding.Default,
                          wide: Boolean = false): DataFrame = {
     // One-pass codegen'd kernel for all k mins (graft_minhash_sig* for
@@ -341,25 +353,20 @@ object Dedup {
     * stage. An experiment that dropped it and deduped after the jaccard
     * threshold made q44 ~25% SLOWER despite doing one less shuffle: the
     * verify mapPartitions inherited the bucket-skewed partitioning and
-    * straggled. At 100 TB the rebalance matters even more. */
-  def lshCandidates(signatures: DataFrame): DataFrame =
-    lshCandidates(signatures, 0.0)
-
-  /** minSizeRatio > 0 pushes the verify stage's size-ratio prefilter INTO
+    * straggled. At 100 TB the rebalance matters even more.
+    *
+    * minSizeRatio > 0 pushes the verify stage's size-ratio prefilter INTO
     * the band join condition: jaccard ≥ r requires min(|A|,|B|) ≥
     * r·max(|A|,|B|), so dropping failing pairs here is result-preserving —
     * and they vanish at the join probe, before the distinct's shuffle ever
     * moves them (measured 41.5% of the shared-vocab corpus's band-collision
     * pairs at r=0.7, sf0.1). Needs the `gn` size column from
-    * signaturesFromSets; without it only the bare banding applies. */
-  def lshCandidates(signatures: DataFrame, minSizeRatio: Double): DataFrame =
-    lshCandidates(signatures, minSizeRatio, LshBanding.Default)
-
-  /** Profile-aware candidates: `signatures` must carry the profile's
-    * m0..m(k-1) columns (i.e. come from signaturesFromSets with the SAME
-    * banding). */
-  def lshCandidates(signatures: DataFrame, minSizeRatio: Double,
-                    banding: LshBanding): DataFrame = {
+    * signaturesFromSets; without it only the bare banding applies.
+    *
+    * `signatures` must carry the `banding`'s m0..m(k-1) columns (i.e. come
+    * from signaturesFromSets with the SAME banding). */
+  def lshCandidates(signatures: DataFrame, minSizeRatio: Double = 0.0,
+                    banding: LshBanding = LshBanding.Default): DataFrame = {
     val sizeAware = minSizeRatio > 0.0 && signatures.columns.contains("gn")
     pairsFromBands(bandRelation(signatures, sizeAware, banding),
       minSizeRatio, sizeAware)
@@ -371,11 +378,8 @@ object Dedup {
     * computation — so the managed pipeline persists it: the self-join
     * below consumes it on both sides, and an unmaterialized plan would run
     * the signature projection twice. */
-  private[graft] def bandRelation(signatures: DataFrame, sizeAware: Boolean): DataFrame =
-    bandRelation(signatures, sizeAware, LshBanding.Default)
-
   private[graft] def bandRelation(signatures: DataFrame, sizeAware: Boolean,
-                                  banding: LshBanding): DataFrame = {
+                                  banding: LshBanding = LshBanding.Default): DataFrame = {
     val bands = (0 until banding.numBands).map { b =>
       val cols = (0 until banding.rowsPerBand)
         .map(r => col(s"m${b * banding.rowsPerBand + r}"))
@@ -405,10 +409,6 @@ object Dedup {
       explode(array(bands: _*)).as("sig"))
   }
 
-  private def pairsFromBands(exploded: DataFrame, minSizeRatio: Double,
-                             sizeAware: Boolean): DataFrame =
-    pairsFromBands(exploded, minSizeRatio, sizeAware, 0L)
-
   /** `maxBucket` > 0 drops band rows landing in buckets LARGER than the
     * cap before the self-join — the standard industrial LSH guard for
     * corpora whose shingle universe saturates (bucket histogram: when a
@@ -424,7 +424,7 @@ object Dedup {
     * share one ubiquitous band key, not content. Cap 0 = exact banding
     * (every gate keeps 0). */
   private def pairsFromBands(exploded: DataFrame, minSizeRatio: Double,
-                             sizeAware: Boolean, maxBucket: Long,
+                             sizeAware: Boolean, maxBucket: Long = 0L,
                              sizes: Option[DataFrame] = None): DataFrame = {
     val pruned =
       if (maxBucket <= 0L) exploded
@@ -439,7 +439,17 @@ object Dedup {
           .select(col("sig"))
         exploded.join(keep, Seq("sig"))
       }
-    pairsFromBandsImpl(pruned, minSizeRatio, sizeAware)
+    val joinCond = {
+      val base = col("x.sig") === col("y.sig") && col("x.sid") < col("y.sid")
+      if (sizeAware)
+        base && least(col("x.gn"), col("y.gn")).cast("double") >=
+          lit(minSizeRatio) * greatest(col("x.gn"), col("y.gn"))
+      else base
+    }
+    pruned.as("x")
+      .join(pruned.as("y"), joinCond)
+      .select(col("x.sid").as("id_a"), col("y.sid").as("id_b"))
+      .distinct()
   }
 
   /** (sig, _bs) band-bucket histogram — the |buckets|-row relation both
@@ -485,27 +495,9 @@ object Dedup {
       if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(2))
   }
 
-  /** Escape-hatch text per guard call site (r14 advisor: the one-size
-    * message named hatches the incremental call site doesn't have). */
-  private val CharHatches =
-    "Escape hatches, in preference order: (1) switch to token shingles — " +
-    "minHashLshPairsTokens, whose gram universe grows with the vocabulary so hot " +
-    "buckets cannot form (q199: max bucket 2 at every measured tier); (2) set " +
-    "maxBucket (500 kept 99.7% planted recall at the tier that killed uncapped " +
-    "char banding); (3) raise graft.dedup.candidatePairBudget if this volume is " +
-    "genuinely intended."
-  private val CpHatches =
-    "Escape hatches: (1) set maxBucket (500 kept 99.7% planted recall at the " +
-    "tier that killed uncapped char banding; token shingles are NOT an option " +
-    "here — codepoint-profile text is typically unsegmented, so whitespace " +
-    "tokenization degenerates); (2) raise graft.dedup.candidatePairBudget if " +
-    "this volume is genuinely intended."
-  private val TokenHatches =
-    "This is already the token profile, so the universe cannot saturate " +
-    "structurally — the volume is a genuine duplicate storm. Escape hatches: " +
-    "(1) set maxBucket (hot buckets here are exact-dup families, the " +
-    "low-information region); (2) raise graft.dedup.candidatePairBudget if " +
-    "this volume is genuinely intended."
+  /** Escape-hatch text of the incremental call site (r14 advisor: the
+    * one-size message named hatches this site doesn't have); the batch
+    * pipeline's text comes with its profile (`Shingles.hatches`). */
   private val IncrementalHatches =
     "At the incremental call site the only knob is the budget itself: raise " +
     "graft.dedup.candidatePairBudget if this within-batch volume is genuinely " +
@@ -541,11 +533,9 @@ object Dedup {
     * Returns the estimate for observability (also kept in
     * [[lastGuardStats]]). */
   private def guardCandidateBudget(bandRel: DataFrame, maxBucket: Long,
-                                   hatches: String = CharHatches,
+                                   hatches: String,
                                    sizes: Option[DataFrame] = None): Long = {
-    val budget = bandRel.sparkSession.conf
-      .getOption("graft.dedup.candidatePairBudget")
-      .map(_.toLong).getOrElse(DefaultCandidatePairBudget)
+    val budget = candidatePairBudget(bandRel)
     if (budget <= 0L) { lastGuard.set((-1L, -1L, -1L)); return -1L }
     val (estPairs, maxBucketSeen, nBuckets) = sizes match {
       case Some(s) => candidatePairStatsFromSizes(s, maxBucket)
@@ -587,29 +577,9 @@ object Dedup {
       else (distinctGrams - halfSeenGrams).toDouble / distinctGrams
     def estPairsPerDoc: Double =
       if (sampleDocs == 0L) 0.0 else estPairs.toDouble / sampleDocs
+    /** The profile the auto front door runs for this recommendation. */
+    def nearDupProfile: NearDupProfile = NearDupProfile.recommended(profile, maxBucket)
   }
-
-  /** Gram sets of a shingle profile ("char" | "codepoint" | "token") —
-    * the one dispatch table the probe, the auto index and its incremental
-    * batches share. */
-  private def profileSets(profile: String, docs: DataFrame, id: String,
-                          text: String): DataFrame = profile match {
-    case "token"     => tokenShingleSets(docs, id, text)
-    case "codepoint" => gramSetsCp(docs, id, text)
-    case _           => gramSets(docs, id, text)
-  }
-
-  /** Banding an auto-dispatched profile runs under: Scaled for char (the
-    * profile the probe's own estimate is computed under) and token,
-    * Default for codepoint. */
-  private def profileBanding(profile: String): LshBanding =
-    if (profile == "codepoint") LshBanding.Default else LshBanding.Scaled
-
-  /** Signatures of a profile's sets: the token and codepoint hashes are
-    * wide, the char hashes narrow. */
-  private def profileSignatures(profile: String, sets: DataFrame,
-                                banding: LshBanding): DataFrame =
-    signaturesFromSets(sets, banding, wide = profile != "char")
 
   /** Shingle-profile auto-selection — the round-13 saturation discovery
     * (SCALING.md "Gram-universe saturation") shipped as an operator. A
@@ -692,11 +662,10 @@ object Dedup {
       else "char"
 
     // band-bucket histogram on the sample under the chosen profile
-    val banding = profileBanding(profile)
-    val bandRel = bandRelation(profileSignatures(profile,
-      profileSets(profile, sample, "sid", "t"), banding),
-      sizeAware = false, banding)
-    val (estPairs, _, _) = candidatePairStats(bandRel, maxBucket = 0L)
+    val chosen = NearDupProfile.recommended(profile, maxBucket = 0L)
+    val (estPairs, _, _) = candidatePairStats(
+      chosen.bands(chosen.shingles.sets(sample, "sid", "t"), sizeAware = false),
+      maxBucket = 0L)
     DedupProfileRecommendation(profile,
       // estPairsPerDoc > 16 ⇔ estPairs > 16·n, integer-exact
       maxBucket = if (estPairs > 16L * n) 500L else 0L,
@@ -705,7 +674,7 @@ object Dedup {
       estPairs = estPairs)
   }
 
-  /** The recommendation the auto front door ([[nearDupPairsAuto]] /
+  /** The recommendation the auto front door ([[nearDupPairsAutoManaged]] /
     * [[canonicalizeAuto]] / [[dedupIndexAuto]]) last acted on — WHY
     * fields included — in the lastDistributedRounds observability mold.
     * Diagnostics only, never control flow.
@@ -722,69 +691,44 @@ object Dedup {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** THE default near-dup entry point (r14 verdict #3): probe the corpus
-    * with [[recommendProfile]], then dispatch to the recommended shingle
-    * profile and bucket cap — so the scale-safety analysis that q202
-    * oracle-gates is what actually runs, not an advisory a caller must
-    * remember to consult. Dispatch table (AutoDispatchSpec pins
-    * dispatch-equals-manual on all three regimes):
-    *
-    *  - `token`     → [[minHashLshPairsTokens]] (Scaled banding, rec cap)
-    *  - `codepoint` → [[minHashLshPairsCp]] (rec cap)
-    *  - `char`      → [[minHashLshPairsScaled]]'s pipeline (Scaled
-    *                  banding — the large-corpus profile, and the one the
-    *                  probe's own Σ C(bucket,2) estimate was computed
-    *                  under) with the rec cap
+    * with [[recommendProfile]], then run [[nearDupPairs]] under the
+    * recommended profile (`DedupProfileRecommendation.nearDupProfile`:
+    * token → Scaled banding, codepoint → Default, char → Scaled — the
+    * banding the probe's own Σ C(bucket,2) estimate was computed under —
+    * each with the recommended cap) — so the scale-safety analysis that
+    * q202 oracle-gates is what actually runs, not an advisory a caller
+    * must remember to consult (AutoDispatchSpec pins all three regimes).
     *
     * NOTE the returned `jaccard` is the CHOSEN profile's resemblance
     * (char-3-gram, codepoint-gram, or token-shingle Jaccard) — callers
-    * needing one fixed measure should call that profile's entry point
-    * directly. The recommendation (with its WHY measurements) is logged
-    * and kept in [[lastRecommendation]]. */
-  def nearDupPairsAuto(docs: DataFrame, id: String, text: String,
-                       threshold: Double, sampleDocs: Int = 2048): DataFrame =
-    nearDupPairsAutoManaged(docs, id, text, threshold, sampleDocs).df
-
-  /** [[nearDupPairsAuto]] with a deterministic-release handle (r15
-    * advisor: the advertised default entry point used to discard the
-    * [[ManagedPairs]] on the char path, so long-lived sessions had no
-    * `close()` and lost the guard's candidate estimate). Every dispatch
-    * path now returns the handle; `guardEstPairs` carries the chosen
-    * profile's pre-flight estimate per call (no shared-register race). */
+    * needing one fixed measure should call [[nearDupPairs]] with that
+    * profile. The recommendation (with its WHY measurements) is logged
+    * and kept in [[lastRecommendation]]; `guardEstPairs` carries the
+    * chosen profile's pre-flight estimate per call. */
   def nearDupPairsAutoManaged(docs: DataFrame, id: String, text: String,
                               threshold: Double,
-                              sampleDocs: Int = 2048): ManagedPairs = {
+                              sampleDocs: Int = 2048): ManagedPairs =
+    nearDupPairs(docs, id, text, threshold,
+      probeLogged("nearDupPairsAutoManaged", docs, id, text, sampleDocs).nearDupProfile)
+
+  /** [[recommendProfile]] for an auto entry point: recorded in
+    * [[lastRecommendation]] and logged with its WHY measurements. */
+  private def probeLogged(site: String, docs: DataFrame, id: String, text: String,
+                          sampleDocs: Int): DedupProfileRecommendation = {
     val rec = recommendProfile(docs, id, text, sampleDocs)
     lastRec.set(Some(rec))
-    log.info(s"nearDupPairsAuto: profile=${rec.profile} maxBucket=${rec.maxBucket} " +
+    log.info(s"$site: profile=${rec.profile} maxBucket=${rec.maxBucket} " +
       f"(sample=${rec.sampleDocs} nonAsciiRate=${rec.nonAsciiRate}%.3f " +
       f"newGramRate=${rec.newGramRate}%.3f estPairsPerDoc=${rec.estPairsPerDoc}%.1f)")
-    rec.profile match {
-      case "token" => minHashLshPairsTokensManaged(docs, id, text, threshold,
-        k = 3, banding = LshBanding.Scaled, maxBucket = rec.maxBucket)
-      case "codepoint" => minHashLshPairsCpManaged(docs, id, text, threshold,
-        maxBucket = rec.maxBucket)
-      case _ => minHashLshPairsManaged(docs, id, text, threshold,
-        BroadcastVerifyMaxBytes, LshBanding.Scaled, rec.maxBucket)
-    }
+    rec
   }
 
-  private def pairsFromBandsImpl(exploded: DataFrame, minSizeRatio: Double,
-                                 sizeAware: Boolean): DataFrame = {
-    val joinCond = {
-      val base = col("x.sig") === col("y.sig") && col("x.sid") < col("y.sid")
-      if (sizeAware)
-        base && least(col("x.gn"), col("y.gn")).cast("double") >=
-          lit(minSizeRatio) * greatest(col("x.gn"), col("y.gn"))
-      else base
-    }
-    exploded.as("x")
-      .join(exploded.as("y"), joinCond)
-      .select(col("x.sid").as("id_a"), col("y.sid").as("id_b"))
-      .distinct()
-  }
-
-  /** Full MinHash-LSH near-dup pipeline: candidates from banding, then
-    * exact Jaccard verification restricted to candidates.
+  /** THE MinHash-LSH near-dup pipeline, for every shingle profile:
+    * gram sets → `profile.banding` signatures → band self-join (size
+    * prefilter, optional `profile.maxBucket` cap, pre-flight candidate
+    * guard) → exact-Jaccard verify restricted to candidates. Pairs
+    * (id_a < id_b, jaccard ≥ threshold), `jaccard` being the profile's
+    * resemblance measure.
     *
     * Verification keeps each doc's distinct shingles as ONE sorted hash
     * array row and computes |A∩B| with a linear merge walk. The
@@ -794,135 +738,123 @@ object Dedup {
     * shared-vocab sf0.1 corpus that was 208 s vs ~4 s for this shape. The
     * gram-set side is docs-sized (not pairs-sized), so under the byte
     * budget it ships as one broadcast map and the candidate pairs never
-    * shuffle at all.
+    * shuffle at all ([[verifiedPairs]]). `broadcastBudgetBytes` < 0 takes
+    * the profile's default (`Shingles.verifyBudget`: the char profile
+    * broadcasts up to [[BroadcastVerifyMaxBytes]], token and codepoint
+    * run the shuffle verify); 0 forces the shuffle verify (q44b).
     *
-    * Resource lifecycle: the pipeline's intermediates (the persisted
-    * gram-set scan and the verify broadcast) are released as soon as the
-    * result materializes — the analog of the reference freeing its
+    * Resource lifecycle: every intermediate (the gram-set checkpoint, the
+    * persisted band relation, the verify broadcast) is released before
+    * this returns — the analog of the reference freeing its
     * CacheMachines when the execution graph finishes
-    * (engine/src/cache_machine/CacheMachine.cpp). This return-and-forget
-    * form keeps only the materialized RESULT blocks, which the
-    * ContextCleaner reclaims once the DataFrame is unreachable; a
-    * long-lived session that wants deterministic release should use
-    * [[minHashLshPairsManaged]] and `close()` the handle. */
-  def minHashLshPairs(docs: DataFrame, id: String, text: String, threshold: Double): DataFrame =
-    minHashLshPairs(docs, id, text, threshold, BroadcastVerifyMaxBytes)
-
-  def minHashLshPairs(docs: DataFrame, id: String, text: String, threshold: Double,
-                      broadcastBudgetBytes: Long): DataFrame =
-    minHashLshPairsManaged(docs, id, text, threshold, broadcastBudgetBytes).df
-
-  /** [[minHashLshPairs]] under the SCALED banding profile (30 hashes,
-    * 6 bands × 5 rows) — the large-corpus selectivity setting
-    * (TextHashing.LshBanding scaladoc has the (b, r) math). Same gram
-    * sets, same verify stage, same exact-Jaccard semantics; only the
-    * CANDIDATE stage changes: ~6.7× fewer sub-threshold band collisions
-    * per pair, which is what keeps candidate volume near-linear once the
-    * corpus outgrows the default profile (measured: SCALING.md "Banded
-    * dedup at large absolute scale"). Recall at the s = 0.7 threshold is
-    * the same ~0.67 as the default; pairs at s ≥ 0.9 — the ones dedup
-    * exists to find — are caught with p ≥ 0.99 under both. */
-  def minHashLshPairsScaled(docs: DataFrame, id: String, text: String,
-                            threshold: Double): DataFrame =
-    minHashLshPairsManaged(docs, id, text, threshold,
-      BroadcastVerifyMaxBytes, LshBanding.Scaled).df
-
-  /** Near-dup pairs with a deterministic release handle: `df` is the final
-    * pair set backed by already-materialized blocks (every corpus-sized
-    * intermediate is freed before this returns); `close()` drops the
-    * result blocks too, leaving zero pipeline storage in the session —
-    * DedupLifecycleSpec pins both properties. */
-  def minHashLshPairsManaged(docs: DataFrame, id: String, text: String, threshold: Double,
-                             broadcastBudgetBytes: Long = BroadcastVerifyMaxBytes,
-                             banding: LshBanding = LshBanding.Default,
-                             maxBucket: Long = 0L): ManagedPairs = {
+    * (engine/src/cache_machine/CacheMachine.cpp). `df` is backed by the
+    * materialized result blocks alone; `close()` drops those too, leaving
+    * zero pipeline storage in the session (DedupLifecycleSpec pins both
+    * for every profile). A caller that only keeps `df` leaves the result
+    * blocks to the ContextCleaner, which reclaims them once the DataFrame
+    * is unreachable. */
+  def nearDupPairs(docs: DataFrame, id: String, text: String, threshold: Double,
+                   profile: NearDupProfile = NearDupProfile.Char,
+                   broadcastBudgetBytes: Long = -1L): ManagedPairs = {
     // Materialization barriers between stages, mirroring the role the
     // reference's CacheMachines play between kernels
-    // (docsrc/source/engine/caches.rst):
-    // (a) `sets` is persisted because the band self-join, the sizing agg,
-    //     and the verify stage all consume it — and the self-join reads it
-    //     on BOTH sides;
-    // (b) on the shuffle fallback the verify output is localCheckpoint'ed
-    //     because Catalyst pushes the jaccard threshold into the verify
-    //     join's condition, where alias substitution re-expands `inter`
-    //     and runs the intersect three times per candidate pair.
-    //     (~20 s vs ~205 s fused at sf0.1.) The broadcast fast path needs
-    //     no barrier: the jaccard threshold is applied INSIDE the
-    //     mapPartitions pass, so only passing pairs (~1e-3 of candidates)
-    //     ever leave the verify stage.
-    // ONE scan of docs: the persisted gram-hash sets feed the signature
-    // projection (no shuffle), the sizing aggregate (which populates the
-    // cache), and the verify stage. `cands` stays lazy — materializing it
-    // (an eager localCheckpoint) wrote 4M pairs to the block manager and
-    // read them straight back for one consumer; fusing candidate
-    // generation into the verify job saved ~2 s at sf0.1.
-    val sets = gramSets(docs, id, text).persist()
-    // The band relation is numBands narrow rows per doc but carries the
-    // k-hash signature computation; persisting it means the self-join's two
-    // sides share ONE signature pass instead of recomputing it per side.
-    val bandRel = bandRelation(signaturesFromSets(sets, banding),
-      sizeAware = true, banding).persist()
+    // (docsrc/source/engine/caches.rst): ONE scan of docs — the
+    // lineage-truncated gram sets feed the signature projection (no
+    // shuffle), the sizing aggregate and the verify stage. `cands` stays
+    // lazy — materializing it (an eager localCheckpoint) wrote 4M pairs
+    // to the block manager and read them straight back for one consumer;
+    // fusing candidate generation into the verify job saved ~2 s at sf0.1.
+    val sets = truncateLineage(profile.shingles.sets(docs, id, text))
     // try/finally, not success-path cleanup: a failed materialization
     // (executor loss mid-localCheckpoint is the documented default-mode
     // risk) must not leave corpus-sized intermediates persisted or a live
     // verify broadcast behind in a long-lived session
     try {
-      val sizes = sharedSizes(bandRel, maxBucket)
+      // The band relation is numBands narrow rows per doc but carries the
+      // k-hash signature computation; persisting it means the self-join's
+      // two sides share ONE signature pass instead of recomputing it per side.
+      val bandRel = profile.bands(sets).persist()
       try {
-      val estPairs = guardCandidateBudget(bandRel, maxBucket, CharHatches, sizes)
-      val cands = pairsFromBands(bandRel, threshold, sizeAware = true, maxBucket, sizes)
-      val integralId = docs.schema(id).dataType match {
-        case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType => true
-        case _ => false
-      }
-      // Broadcast eligibility is decided on ESTIMATED BYTES, not doc count —
-      // 8 B per distinct gram hash + fixed per-entry map overhead. A doc-count
-      // gate would mis-fire in both directions (many tiny docs: needless
-      // fallback; few huge docs: broadcast OOM). Same decision rule as the
-      // reference's scatter-vs-shuffle join budget
-      // (engine/src/execution_kernels/BatchJoinProcessing.cpp:672-830, which
-      // compares estimated bytes against MAX_JOIN_SCATTER_MEM_OVERHEAD).
-      val sizing = sets.agg(count(lit(1)), sum(size(col("gs")))).collect()(0)
-      val nDocs = sizing.getLong(0)
-      val nGrams = if (sizing.isNullAt(1)) 0L else sizing.getLong(1)
-      val estBytes = nGrams * 8L + nDocs * 64L
-      if (integralId && estBytes <= broadcastBudgetBytes) {
-        val bc = collectAndBroadcast(sets)
-        liveBc.incrementAndGet()
+        val sizes = sharedSizes(bandRel, profile.maxBucket)
         try {
-          // Materializing the (tiny) passing-pair set HERE is what lets
-          // every corpus-sized intermediate be freed before the caller
-          // sees the result: after the checkpoint, neither the persisted
-          // gram-set scan nor the broadcast map is reachable from the
-          // returned plan.
-          new ManagedPairs(mergeWalkScore(cands, bc, minSizeRatio = threshold)
-            .select(col("id_a"), col("id_b"), jaccardCol)
-            .filter(col("jaccard") >= threshold)
-            .transform(truncateLineage), estPairs)
-        } finally {
-          bc.destroy()
-          liveBc.decrementAndGet()
-        }
-      } else {
-        // localCheckpoint doubles as the materialization barrier documented
-        // above AND the point where the gram-set scan can be released
-        val verified =
-          truncateLineage(minHashVerify(cands, sets, useBroadcastMap = false, threshold))
-        new ManagedPairs(verified
-          .select(col("id_a"), col("id_b"), jaccardCol)
-          .filter(col("jaccard") >= threshold), estPairs)
+          val estPairs = guardCandidateBudget(bandRel, profile.maxBucket,
+            profile.shingles.hatches, sizes)
+          val cands = pairsFromBands(bandRel, threshold, sizeAware = true,
+            profile.maxBucket, sizes)
+          val budget =
+            if (broadcastBudgetBytes < 0L) profile.shingles.verifyBudget
+            else broadcastBudgetBytes
+          new ManagedPairs(
+            verifiedPairs(cands, sets, docs.schema(id).dataType, threshold, budget),
+            estPairs)
+        } finally sizes.foreach(_.unpersist(blocking = false))
+      } finally bandRel.unpersist(blocking = false)
+    } finally releaseTruncated(sets)
+  }
+
+  /** The verify stage of [[nearDupPairs]] and [[incrementalPairs]]: exact
+    * Jaccard of every candidate pair against `sets`, thresholded, and
+    * MATERIALIZED — the returned relation reads checkpoint blocks, so the
+    * caller may release `sets` (and this released the broadcast) as soon
+    * as it returns. Two physical strategies, output-identical (the
+    * q44/q44b contract):
+    *
+    *  - broadcast merge-walk when the ids are integral and the sets'
+    *    ESTIMATED BYTES fit `budgetBytes` — 8 B per distinct gram hash +
+    *    fixed per-entry map overhead. A doc-count gate would mis-fire in
+    *    both directions (many tiny docs: needless fallback; few huge docs:
+    *    broadcast OOM). Same decision rule as the reference's
+    *    scatter-vs-shuffle join budget
+    *    (engine/src/execution_kernels/BatchJoinProcessing.cpp:672-830,
+    *    which compares estimated bytes against
+    *    MAX_JOIN_SCATTER_MEM_OVERHEAD). Budget ≤ 0 skips the sizing
+    *    aggregate. The jaccard threshold applies right after the
+    *    mapPartitions pass, so only passing pairs are checkpointed.
+    *  - otherwise the SHUFFLE_HASH verify, checkpointed BEFORE the
+    *    jaccard filter: fused, Catalyst pushes the threshold into the
+    *    verify join's condition, where alias substitution re-expands
+    *    `inter` and runs the intersect three times per candidate pair
+    *    (~20 s vs ~205 s fused at sf0.1).
+    *
+    * `plan` sees the relation the checkpoint materializes, before
+    * truncation. */
+  private def verifiedPairs(cands: DataFrame, sets: DataFrame,
+                            idType: org.apache.spark.sql.types.DataType,
+                            threshold: Double, budgetBytes: Long,
+                            plan: DataFrame => Unit = _ => ()): DataFrame = {
+    def passing(scored: DataFrame) =
+      scored.select(col("id_a"), col("id_b"), jaccardCol).filter(col("jaccard") >= threshold)
+    val integralId = idType match {
+      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType => true
+      case _ => false
+    }
+    val estBytes = if (!integralId || budgetBytes <= 0L) Long.MaxValue else {
+      val s = sets.agg(count(lit(1)), sum(size(col("gs")))).collect()(0)
+      (if (s.isNullAt(1)) 0L else s.getLong(1)) * 8L + s.getLong(0) * 64L
+    }
+    if (estBytes <= budgetBytes) {
+      val bc = collectAndBroadcast(sets)
+      liveBc.incrementAndGet()
+      try {
+        val verified = passing(mergeWalkScore(cands, bc, minSizeRatio = threshold))
+        plan(verified)
+        // materialize BEFORE destroying the broadcast: the returned plan
+        // is a checkpoint scan, unreachable from the broadcast
+        truncateLineage(verified)
+      } finally {
+        bc.destroy()
+        liveBc.decrementAndGet()
       }
-      } finally sizes.foreach(_.unpersist(blocking = false))
-    } finally {
-      sets.unpersist(blocking = false)
-      bandRel.unpersist(blocking = false)
+    } else {
+      val scored = minHashVerify(cands, sets, useBroadcastMap = false, threshold)
+      plan(scored)
+      passing(truncateLineage(scored))
     }
   }
 
-  /** Live verify-stage broadcasts created by the managed pipeline — 0
-    * whenever no minHashLshPairsManaged call is in flight (the broadcast
-    * is destroyed before the handle is returned); DedupLifecycleSpec pins
-    * it. */
+  /** Live verify-stage broadcasts — 0 whenever no verify is in flight
+    * (the broadcast is destroyed before the result is returned);
+    * DedupLifecycleSpec pins it. */
   def liveVerifyBroadcasts: Int = liveBc.get()
   private val liveBc = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -1002,7 +934,7 @@ object Dedup {
       .toDF("id_a", "id_b", "inter", "na", "nb")
   }
 
-  /** Verify stage of minHashLshPairs: intersect sizes for each candidate
+  /** Verify stage of nearDupPairs: intersect sizes for each candidate
     * pair. Two physical strategies with identical output (both run the same
     * sorted-merge walk):
     *  - useBroadcastMap: ship the whole gram-set map to executors as one
@@ -1013,16 +945,14 @@ object Dedup {
     *    keyed on id — both shuffles move candidate-sized data and the hash
     *    table per partition is 1/N of the doc side, so nothing needs to fit
     *    on one node. SHUFFLE_HASH pins `sets` as the build side and keeps
-    *    AQE from re-broadcasting what the budget just ruled out. */
-  def minHashVerify(cands: DataFrame, sets: DataFrame, useBroadcastMap: Boolean): DataFrame =
-    minHashVerify(cands, sets, useBroadcastMap, 0.0)
-
-  /** minSizeRatio: drop pairs where min(|A|,|B|) < ratio * max(|A|,|B|)
+    *    AQE from re-broadcasting what the budget just ruled out.
+    *
+    * minSizeRatio: drop pairs where min(|A|,|B|) < ratio * max(|A|,|B|)
     * before intersecting — a necessary condition for jaccard >= ratio, so
     * passing the jaccard threshold here is result-preserving and skips the
     * merge walk for pairs that cannot qualify. */
   def minHashVerify(cands: DataFrame, sets: DataFrame, useBroadcastMap: Boolean,
-                    minSizeRatio: Double): DataFrame = {
+                    minSizeRatio: Double = 0.0): DataFrame = {
     if (useBroadcastMap) {
       mergeWalkScore(cands, collectAndBroadcast(sets), minSizeRatio)
     } else {
@@ -1101,7 +1031,7 @@ object Dedup {
         .select(col("ed.u").as("u"), col("ed.v").as("v")))
 
   /** Connected components over a near-dup pair graph — the step that turns
-    * pairwise similarity output (minHashLshPairs / simHashPairs /
+    * pairwise similarity output (nearDupPairs / simHashPairs /
     * cosineDupPairs) into dedup CLUSTERS with a canonical representative
     * (the component's min id): real pipelines keep one doc per cluster,
     * not one per pair.
@@ -1228,20 +1158,18 @@ object Dedup {
     * build time it is one extra aggregate amortized over every batch. */
   final case class DedupIndex(bands: DataFrame, sets: DataFrame,
                               bandSizes: Option[DataFrame] = None,
-                              /** Shingle profile the index was built under
-                                * ("char" | "codepoint" | "token") — recorded
-                                * IN the index so every incoming batch is
-                                * shingled/banded the same way (r15 verdict
-                                * #4: the batch side must dispatch off the
-                                * index, or a token-profile index would be
-                                * probed with char bands and match nothing). */
-                              profile: String = "char",
-                              banding: LshBanding = LshBanding.Default,
-                              maxBucket: Long = 0L)
+                              /** Near-dup profile the index was built under —
+                                * recorded IN the index so every incoming
+                                * batch is shingled/banded/capped the same
+                                * way (r15 verdict #4: the batch side must
+                                * dispatch off the index, or a token-profile
+                                * index would be probed with char bands and
+                                * match nothing). */
+                              profile: NearDupProfile = NearDupProfile.Char)
 
   def dedupIndex(docs: DataFrame, id: String, text: String): DedupIndex = {
     val sets = gramSets(docs, id, text)
-    DedupIndex(bandRelation(signaturesFromSets(sets), sizeAware = true), sets)
+    DedupIndex(NearDupProfile.Char.bands(sets), sets)
   }
 
   /** [[dedupIndex]] through the auto front door (r15 verdict #4): probe
@@ -1254,22 +1182,14 @@ object Dedup {
     * build-time band histogram ([[indexBandSizes]]) is always attached:
     * its cost is one aggregate amortized over every batch, and it enables
     * both the probe-side pre-flight and the recorded cap's index-side
-    * prune. Dispatch table mirrors [[nearDupPairsAuto]] (char probes
-    * recommend the Scaled banding — the large-corpus profile the probe's
-    * own Σ C(bucket,2) estimate was computed under). */
+    * prune. The profile is the one [[nearDupPairsAutoManaged]] would run
+    * (`DedupProfileRecommendation.nearDupProfile`). */
   def dedupIndexAuto(docs: DataFrame, id: String, text: String,
                      sampleDocs: Int = 2048): DedupIndex = {
-    val rec = recommendProfile(docs, id, text, sampleDocs)
-    lastRec.set(Some(rec))
-    log.info(s"dedupIndexAuto: profile=${rec.profile} maxBucket=${rec.maxBucket} " +
-      f"(sample=${rec.sampleDocs} nonAsciiRate=${rec.nonAsciiRate}%.3f " +
-      f"newGramRate=${rec.newGramRate}%.3f estPairsPerDoc=${rec.estPairsPerDoc}%.1f)")
-    val sets = profileSets(rec.profile, docs, id, text)
-    val banding = profileBanding(rec.profile)
-    val bands = bandRelation(profileSignatures(rec.profile, sets, banding),
-      sizeAware = true, banding)
-    DedupIndex(bands, sets, Some(indexBandSizes(bands)),
-      rec.profile, banding, rec.maxBucket)
+    val profile = probeLogged("dedupIndexAuto", docs, id, text, sampleDocs).nearDupProfile
+    val sets = profile.shingles.sets(docs, id, text)
+    val bands = profile.bands(sets)
+    DedupIndex(bands, sets, Some(indexBandSizes(bands)), profile)
   }
 
   /** The (sig, _bs) histogram for a [[DedupIndex]]'s band relation —
@@ -1283,7 +1203,7 @@ object Dedup {
     * path of a continuously-growing corpus: per-batch cost scales with
     * the batch and its band collisions, not with corpus size (the index
     * side of the candidate join ships only colliding bands; re-running
-    * the full [[minHashLshPairs]] would re-pay the whole-corpus signature
+    * the full [[nearDupPairs]] would re-pay the whole-corpus signature
     * scan AND re-discover every old-old pair per batch).
     *
     * ==Id uniqueness across index and batch is the caller's contract==
@@ -1291,52 +1211,50 @@ object Dedup {
     * probe pairs id_a is the EXISTING doc, id_b the incoming one; for
     * within-batch pairs id_a < id_b.
     *
-    * Verify runs the SHUFFLE_HASH path unconditionally: the broadcast-map
-    * fast path would collect index+batch gram sets, and an incremental
-    * index is big by definition — the shuffle plan is the one that runs
-    * at scale (the q44b-proven strategy), so it is also the one proven
-    * here (q81 oracle). The sets side is first pruned to candidate ids by
-    * a broadcast semi join, so the verify exchange moves batch-sized data
-    * regardless of index size (SCALING.md's fixed-batch curve).
+    * Verify is byte-gated like the batch pipeline's ([[verifiedPairs]]).
+    * Its sets side is first pruned to candidate ids, so it is
+    * batch-sized plus the few index collisions, NOT index-sized: for
+    * ordinary batches it fits the broadcast budget and the verify runs as
+    * one mapPartitions merge-walk over the candidate pairs, with no
+    * SHUFFLE_HASH exchanges of candidates or sets at all (r16; measured
+    * 8.9 → 6.3 s on the q81 corpus at sf0.1). Over-budget or
+    * non-integral-id batches take the shuffle verify, whose exchanges
+    * still move batch-sized data regardless of index size (SCALING.md's
+    * fixed-batch curve).
     *
-    * ==Profile dispatch (r15 verdict #4)==: the batch is shingled and
-    * banded under `index.profile`/`index.banding` — the profile recorded
-    * at build time ([[dedupIndexAuto]] probes it; [[dedupIndex]] pins the
-    * classic char default) — and the recorded `index.maxBucket` applies
-    * to both the within-batch self-join and (via the build-time
-    * histogram) the probe join's index side. The returned `jaccard` is
-    * therefore the INDEX profile's resemblance measure. */
-  def incrementalPairs(index: DedupIndex, incoming: DataFrame, id: String,
-                       text: String, threshold: Double): DataFrame =
-    incrementalPairs(index, incoming, id, text, threshold,
-      forceSemiPrune = false)
-
-  /** forceSemiPrune=true pins the over-budget semi-join prune regardless
-    * of candidate-id count — the forced-variant doctrine (q44b/q70b/
-    * q72b): q81b proves the fallback on the same oracle as q81. */
+    * ==Profile dispatch (r15 verdict #4)==: the batch is shingled, banded
+    * and capped under `index.profile` — the profile recorded at build
+    * time ([[dedupIndexAuto]] probes it; [[dedupIndex]] pins the classic
+    * char default) — so the recorded cap applies to both the within-batch
+    * self-join and (via the build-time histogram) the probe join's index
+    * side. The returned `jaccard` is therefore the INDEX profile's
+    * resemblance measure.
+    *
+    * forceSemiPrune=true pins the over-budget semi-join prune and the
+    * shuffle verify regardless of candidate-id count and bytes — the
+    * forced-variant doctrine (q44b/q70b/q72b): q81b proves the fallback on
+    * the same oracle as q81. */
   def incrementalPairs(index: DedupIndex, incoming: DataFrame, id: String,
                        text: String, threshold: Double,
-                       forceSemiPrune: Boolean): DataFrame = {
+                       forceSemiPrune: Boolean = false): DataFrame = {
+    val maxBucket = index.profile.maxBucket
     // The batch is shingled/banded under the INDEX's recorded profile
     // (r15 verdict #4): band sigs only collide within one (profile,
     // banding) family, so a mismatched batch would silently probe nothing
     // — consistency is the index's contract, not a caller obligation.
-    val inSets = profileSets(index.profile, incoming, id, text).persist()
+    val inSets = index.profile.shingles.sets(incoming, id, text).persist()
     try {
       // Persisted for the same reason as the main pipeline's band relation:
       // the probe join and the within-batch self-join (both sides) share
       // one signature pass over the batch.
-      val inBands = bandRelation(
-        profileSignatures(index.profile, inSets, index.banding),
-        sizeAware = true, index.banding).persist()
+      val inBands = index.profile.bands(inSets).persist()
       try {
         // same pre-flight as the batch pipelines: a saturated BATCH would
         // quadratically blow up the within-batch self-join below (message
         // names only the knobs THIS site has — r14 advisor). The index's
         // recorded cap applies to the batch self-join exactly as in the
         // batch pipelines.
-        guardCandidateBudget(inBands, maxBucket = index.maxBucket,
-          IncrementalHatches)
+        guardCandidateBudget(inBands, maxBucket, IncrementalHatches)
         // The recorded cap's INDEX-side prune (r15 verdict #4): an
         // auto-built capped index drops its over-cap band buckets from the
         // probe join — the same hot-bucket/low-precision trade the batch
@@ -1345,9 +1263,9 @@ object Dedup {
         // hand-built capped index without bandSizes keeps its full band
         // relation — there is no way to prune it without re-scanning).
         val idxBands = index.bandSizes match {
-          case Some(idxSizes) if index.maxBucket > 0L =>
+          case Some(idxSizes) if maxBucket > 0L =>
             index.bands.join(
-              idxSizes.filter(col("_bs") <= index.maxBucket).select(col("sig")),
+              idxSizes.filter(col("_bs") <= maxBucket).select(col("sig")),
               Seq("sig"))
           case _ => index.bands
         }
@@ -1358,12 +1276,10 @@ object Dedup {
         // histogram against the (tiny) batch histogram. Estimated over the
         // buckets the probe join will actually visit (≤ cap when capped).
         index.bandSizes.foreach { idxSizes =>
-          val budget = inBands.sparkSession.conf
-            .getOption("graft.dedup.candidatePairBudget")
-            .map(_.toLong).getOrElse(DefaultCandidatePairBudget)
+          val budget = candidatePairBudget(inBands)
           if (budget > 0L) {
-            val visited = if (index.maxBucket > 0L)
-              idxSizes.filter(col("_bs") <= index.maxBucket) else idxSizes
+            val visited = if (maxBucket > 0L)
+              idxSizes.filter(col("_bs") <= maxBucket) else idxSizes
             val r = visited.select(col("sig"), col("_bs").as("_bsx"))
               .join(bucketSizes(inBands), Seq("sig"))
               .agg(sum(col("_bsx") * col("_bs")), max(col("_bsx")))
@@ -1389,8 +1305,7 @@ object Dedup {
                 lit(threshold) * greatest(col("x.gn"), col("y.gn")))
           .select(col("x.sid").as("id_a"), col("y.sid").as("id_b"))
           .distinct()
-        val intra = pairsFromBands(inBands, threshold, sizeAware = true,
-          index.maxBucket)
+        val intra = pairsFromBands(inBands, threshold, sizeAware = true, maxBucket)
         val cand = probe.unionByName(intra).persist()
         try {
           // The verify join must NOT shuffle the whole index: candidates
@@ -1413,7 +1328,10 @@ object Dedup {
             .unionByName(cand.select(col("id_b").as("sid"))).distinct()
           val allSets = index.sets.unionByName(inSets)
           def semiPruned = allSets.join(candIds, Seq("sid"), "left_semi")
-          val neededSets =
+          // persisted: the verify's sizing aggregate and its broadcast
+          // collect (or the shuffle verify's two join sides) read the
+          // pruned sets once, not re-reading index.sets per consumer
+          val neededSets = (
             if (forceSemiPrune) semiPruned
             else {
               val probed = candIds.limit(InPruneMaxIds + 1).collect()
@@ -1421,54 +1339,11 @@ object Dedup {
                 allSets.filter(col("sid")
                   .isInCollection(probed.map(_.getLong(0)).toIndexedSeq))
               else semiPruned
-            }
-          // VERIFY strategy, byte-gated like the batch pipeline's
-          // (minHashLshPairsManaged: the q44/q44b contract makes the two
-          // physical strategies output-identical). The pruned sets side is
-          // candidate-id-bounded — batch-sized plus the few index
-          // collisions, NOT index-sized — so for ordinary incremental
-          // batches it fits the broadcast budget and the verify runs as
-          // one mapPartitions merge-walk over the candidate pairs: no
-          // SHUFFLE_HASH exchanges of candidates or sets at all (r16;
-          // measured 8.9 → 6.3 s on the q81 corpus at sf0.1). The sizing
-          // aggregate runs on the PRUNED relation (cheap by construction);
-          // over-budget or non-integral-id batches keep the shuffle path,
-          // and q81b still pins it via forceSemiPrune's semi-join chain.
-          val integralId = incoming.schema(id).dataType match {
-            case org.apache.spark.sql.types.LongType |
-                 org.apache.spark.sql.types.IntegerType => true
-            case _ => false
-          }
-          val estBytes = if (!integralId || forceSemiPrune) Long.MaxValue else {
-            val s = neededSets.agg(count(lit(1)), sum(size(col("gs")))).collect()(0)
-            (if (s.isNullAt(1)) 0L else s.getLong(1)) * 8L + s.getLong(0) * 64L
-          }
-          val result =
-            if (estBytes <= BroadcastVerifyMaxBytes) {
-              val bc = collectAndBroadcast(neededSets)
-              liveBc.incrementAndGet()
-              try {
-                val verified = mergeWalkScore(cand, bc, minSizeRatio = threshold)
-                  .select(col("id_a"), col("id_b"), jaccardCol)
-                  .filter(col("jaccard") >= threshold)
-                lastIncPlan.set(verified.queryExecution.executedPlan.toString)
-                // materialize BEFORE destroying the broadcast (the managed
-                // pipeline's lifecycle: the returned plan is a checkpoint
-                // scan, unreachable from the broadcast)
-                truncateLineage(verified)
-              } finally {
-                bc.destroy()
-                liveBc.decrementAndGet()
-              }
-            } else {
-              val verified = minHashVerify(cand, neededSets,
-                useBroadcastMap = false, threshold)
-                .select(col("id_a"), col("id_b"), jaccardCol)
-                .filter(col("jaccard") >= threshold)
-              lastIncPlan.set(verified.queryExecution.executedPlan.toString)
-              truncateLineage(verified)
-            }
-          result
+            }).persist()
+          try verifiedPairs(cand, neededSets, incoming.schema(id).dataType, threshold,
+            if (forceSemiPrune) 0L else BroadcastVerifyMaxBytes,
+            v => lastIncPlan.set(v.queryExecution.executedPlan.toString))
+          finally neededSets.unpersist(blocking = false)
         } finally cand.unpersist(blocking = false)
       } finally inBands.unpersist(blocking = false)
     } finally inSets.unpersist(blocking = false)
@@ -1490,24 +1365,22 @@ object Dedup {
     * corpus makes the tail big; correctness is join-strategy independent
     * (the q44/q44b and q66/q66b contract covers both constituents). */
   def canonicalize(docs: DataFrame, id: String, text: String,
-                   threshold: Double): DataFrame = {
-    val clusters = connectedComponents(minHashLshPairs(docs, id, text, threshold))
-      .withColumnRenamed("doc_id", "_cluster_id")
-    docs.join(clusters, docs(id) === col("_cluster_id"), "left")
-      .filter(col("rep_id").isNull || col("rep_id") === docs(id))
-      .drop("_cluster_id", "rep_id")
-  }
+                   threshold: Double): DataFrame =
+    keepClusterMins(docs, id, nearDupPairs(docs, id, text, threshold).df)
 
   /** [[canonicalize]] through the AUTO front door (r15): the full
     * "dedup my corpus" one-liner — probe ([[recommendProfile]]) →
-    * recommended profile/cap pairs ([[nearDupPairsAuto]]) → clusters →
-    * keep-min-id — so the scale-safety analysis guards the most common
-    * END-TO-END operation, not just the pair stage. Gate q204 replays
-    * probe + dispatch + clusters + the kept corpus in one oracle. */
+    * recommended profile/cap pairs ([[nearDupPairsAutoManaged]]) →
+    * clusters → keep-min-id — so the scale-safety analysis guards the most
+    * common END-TO-END operation, not just the pair stage. Gate q204
+    * replays probe + dispatch + clusters + the kept corpus in one oracle. */
   def canonicalizeAuto(docs: DataFrame, id: String, text: String,
-                       threshold: Double): DataFrame = {
-    val clusters = connectedComponents(nearDupPairsAuto(docs, id, text, threshold))
-      .withColumnRenamed("doc_id", "_cluster_id")
+                       threshold: Double): DataFrame =
+    keepClusterMins(docs, id, nearDupPairsAutoManaged(docs, id, text, threshold).df)
+
+  /** `docs` minus every clustered doc that is not its cluster's min id. */
+  private def keepClusterMins(docs: DataFrame, id: String, pairs: DataFrame): DataFrame = {
+    val clusters = connectedComponents(pairs).withColumnRenamed("doc_id", "_cluster_id")
     docs.join(clusters, docs(id) === col("_cluster_id"), "left")
       .filter(col("rep_id").isNull || col("rep_id") === docs(id))
       .drop("_cluster_id", "rep_id")
@@ -1523,7 +1396,7 @@ object Dedup {
     * cluster winners plus every unclustered doc. */
   def canonicalizeKeepBest(docs: DataFrame, id: String, text: String,
                            threshold: Double, score: Column): DataFrame = {
-    val clusters = connectedComponents(minHashLshPairs(docs, id, text, threshold))
+    val clusters = connectedComponents(nearDupPairs(docs, id, text, threshold).df)
       .withColumnRenamed("doc_id", "_cluster_id")
     val joined = docs.join(clusters, docs(id) === col("_cluster_id"), "left")
     val winners = joined.filter(col("rep_id").isNotNull)
@@ -1553,7 +1426,7 @@ object Dedup {
     * [[canonicalize]] doctrine). Unclustered docs weigh 1. */
   def clusterWeights(docs: DataFrame, id: String, text: String,
                      threshold: Double): DataFrame = {
-    val clusters = connectedComponents(minHashLshPairs(docs, id, text, threshold))
+    val clusters = connectedComponents(nearDupPairs(docs, id, text, threshold).df)
       .withColumnRenamed("doc_id", "_cluster_id")
     val sized = clusters.join(
       clusters.groupBy(col("rep_id")).agg(count(lit(1)).as("cluster_size")),

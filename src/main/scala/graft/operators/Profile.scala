@@ -120,7 +120,7 @@ object Profile {
     // truncateLineage is EAGER — pinned now holds the rows, so the input
     // pin's corpus-sized blocks are dead weight from here on (the r10
     // storage-accumulation finding: two never-released pins per call)
-    releasePin(pinnedIn)
+    Dedup.releaseTruncated(pinnedIn)
     val offs = pinned.groupBy(col("wz_pid"), col("g"))
       .agg(max(col("wz_lr")).as("nk")).collect()
       .map(r => (r.getInt(0), r.get(1), r.getLong(2)))
@@ -144,21 +144,8 @@ object Profile {
     val ranked = pinned.join(broadcast(offDf), Seq("wz_pid", "g"))
       .withColumn("rn", col("wz_lr") + col("wz_off"))
       .drop("wz_pid", "wz_lr", "wz_off")
-    (ranked, cntDf, () => releasePin(pinned))
+    (ranked, cntDf, () => Dedup.releaseTruncated(pinned))
   }
-
-  /** Release a [[Dedup.truncateLineage]] pin's storage blocks. The
-    * checkpointed rows live in the LogicalRDD's persisted RDD —
-    * localCheckpoint registers no CacheManager entry, so a plain
-    * df.unpersist() would be a silent no-op (the r10 finding: every
-    * rangeGroupRowNumbers call left two corpus-sized pins in the block
-    * manager for the session's lifetime). Reliable-checkpoint pins pass
-    * through harmlessly (unpersist of a non-persisted RDD is a no-op;
-    * their files are cleaned by the checkpoint dir's own lifecycle). */
-  private def releasePin(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(false))
 
   /** Per-group WINSORIZED statistics: clamp `value` to its group's
     * [pLo, pHi] exact interpolated percentiles and report the before/

@@ -887,7 +887,7 @@ object SimilaritySearch {
     // ONE corpus pass total: the partials relation is partition-count-
     // bounded (32×(2080+64+1) rows here), so materialize it once behind a
     // lineage barrier and let all three consumers below read blocks — the
-    // return-and-forget lifecycle (minHashLshPairs doctrine).
+    // return-and-forget lifecycle (nearDupPairs doctrine).
     val partials = Dedup.truncateLineage(partialRows)
     val nDf = partials.filter(col("_pk") === 2)
       .agg(sum(col("_pv")).cast("long").as("n"))

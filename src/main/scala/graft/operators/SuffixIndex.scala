@@ -43,7 +43,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
  * (localCheckpoint, or reliable checkpoints under
  * `graft.dedup.reliableCheckpoint` — same knob as Dedup); this is the
  * return-and-forget form — blocks are reclaimed by the ContextCleaner once
- * the result DataFrames become unreachable (the minHashLshPairs doctrine).
+ * the result DataFrames become unreachable (the nearDupPairs doctrine).
  */
 object SuffixIndex {
 
@@ -100,7 +100,7 @@ object SuffixIndex {
     * The level tables are lineage-truncated materializations: ⌈log2
     * maxDocLen⌉ corpus-position-sized block sets that live until the
     * ContextCleaner reclaims them (return-and-forget, the
-    * minHashLshPairs doctrine). A long-lived session indexing many
+    * nearDupPairs doctrine). A long-lived session indexing many
     * corpora should `close()` each build once its consumers have
     * materialized — [[Tables.close]] drops every level's blocks
     * deterministically (after which the DataFrames are CONSUMED:
@@ -109,11 +109,7 @@ object SuffixIndex {
                           maxLen: Int, capTokens: Int = 0)
     extends AutoCloseable {
     override def close(): Unit =
-      (ranks +: levels.map(_._2)).distinct.foreach { df =>
-        df.queryExecution.analyzed.collect {
-          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-        }.foreach(_.unpersist(blocking = false))
-      }
+      (ranks +: levels.map(_._2)).distinct.foreach(Dedup.releaseTruncated(_))
   }
 
   /** Doubling rounds the last build executed (spec hook, the

@@ -336,7 +336,7 @@ object PipelineQueries extends QueryPack {
     // ---- MinHash-LSH near-dup pairs (the 100 TB path: signature →
     // banding → bucket join → verify candidates only)
     "q44_dedup_minhash_lsh" -> ((s, dir) => {
-      Dedup.minHashLshPairs(load(s, dir, "documents"), "doc_id", "text", 0.7)
+      Dedup.nearDupPairs(load(s, dir, "documents"), "doc_id", "text", 0.7).df
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -345,8 +345,8 @@ object PipelineQueries extends QueryPack {
     // broadcast map. This is the plan that runs at 100 TB; the oracle is
     // identical to q44, proving the physical strategy cannot change answers.
     "q44b_dedup_minhash_shuffle" -> ((s, dir) => {
-      Dedup.minHashLshPairs(load(s, dir, "documents"), "doc_id", "text", 0.7,
-          broadcastBudgetBytes = 0L)
+      Dedup.nearDupPairs(load(s, dir, "documents"), "doc_id", "text", 0.7,
+          broadcastBudgetBytes = 0L).df
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -356,7 +356,7 @@ object PipelineQueries extends QueryPack {
     // a real dedup pipeline runs after pairing. Oracle: DuckDB recursive
     // CTE computing min reachable id over the same pair set.
     "q66_dedup_clusters" -> ((s, dir) => {
-      val pairs = Dedup.minHashLshPairs(load(s, dir, "documents"), "doc_id", "text", 0.7)
+      val pairs = Dedup.nearDupPairs(load(s, dir, "documents"), "doc_id", "text", 0.7).df
       Dedup.connectedComponents(pairs).orderBy(col("doc_id"))
     }),
 
@@ -365,7 +365,7 @@ object PipelineQueries extends QueryPack {
     // exceeds the driver budget. Oracle identical to q66 — the budget gate
     // cannot change answers (q44/q44b relationship, for clustering).
     "q66b_dedup_clusters_dist" -> ((s, dir) => {
-      val pairs = Dedup.minHashLshPairs(load(s, dir, "documents"), "doc_id", "text", 0.7)
+      val pairs = Dedup.nearDupPairs(load(s, dir, "documents"), "doc_id", "text", 0.7).df
       Dedup.connectedComponents(pairs, smallGraphMaxEdges = 0L).orderBy(col("doc_id"))
     }),
 
@@ -1268,7 +1268,7 @@ object PipelineQueries extends QueryPack {
       val docs = load(s, dir, "documents")
       val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 0.7)
         .select(col("id_a"), col("id_b")).withColumn("e", lit(1))
-      val lsh = Dedup.minHashLshPairs(docs, "doc_id", "text", 0.7)
+      val lsh = Dedup.nearDupPairs(docs, "doc_id", "text", 0.7).df
         .select(col("id_a"), col("id_b")).withColumn("l", lit(1))
       exact.join(lsh, Seq("id_a", "id_b"), "full_outer")
         .agg(
@@ -1493,7 +1493,7 @@ object PipelineQueries extends QueryPack {
             (lit(128L) + cp % lit(64L))
           decode(unhex(conv(b, 10, 16)), "UTF-8")
         }), "").as("text"))
-      Dedup.minHashLshPairsCp(cjk, "doc_id", "text", 0.7)
+      Dedup.nearDupPairs(cjk, "doc_id", "text", 0.7, NearDupProfile.Codepoint).df
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -1954,7 +1954,7 @@ object PipelineQueries extends QueryPack {
     // rep-keyed hash values; n_linked pins the cluster membership.
     "q174_leakage_safe_split" -> ((s, dir) => {
       val docs = load(s, dir, "documents")
-      val pairs = Dedup.minHashLshPairs(docs, "doc_id", "text", 0.7)
+      val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", 0.7).df
       Sampling.leakageSafeSplit(docs, "doc_id", pairs)
         .groupBy(col("source"), col("split"))
         .agg(count(lit(1)).as("n_docs"),
@@ -2181,8 +2181,8 @@ object PipelineQueries extends QueryPack {
     // pair relation — the threshold-quality number read before trusting
     // q66's clusters (a true equivalence closes every wedge).
     "q193_dedup_transitivity" -> ((s, dir) => {
-      val pairs = Dedup.minHashLshPairs(load(s, dir, "documents"),
-        "doc_id", "text", 0.7)
+      val pairs = Dedup.nearDupPairs(load(s, dir, "documents"),
+        "doc_id", "text", 0.7).df
       graft.operators.GraphRank.transitivityAudit(pairs)
     }),
 
@@ -2194,8 +2194,8 @@ object PipelineQueries extends QueryPack {
     // banding from the same generator, so the profile is gate-verified
     // bit-for-bit like the default.
     "q194_dedup_minhash_scaled" -> ((s, dir) => {
-      Dedup.minHashLshPairsScaled(load(s, dir, "documents"),
-          "doc_id", "text", 0.7)
+      Dedup.nearDupPairs(load(s, dir, "documents"),
+          "doc_id", "text", 0.7, NearDupProfile.CharScaled).df
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -2366,9 +2366,8 @@ object PipelineQueries extends QueryPack {
     // replays token shingling, the wide (mod-P-first) minhash family,
     // banding, and hash-set Jaccard from the same constants.
     "q199_dedup_minhash_tokens" -> ((s, dir) => {
-      Dedup.minHashLshPairsTokens(load(s, dir, "documents"),
-          "doc_id", "text", threshold = 0.7, k = 3,
-          banding = LshBanding.Scaled)
+      Dedup.nearDupPairs(load(s, dir, "documents"),
+          "doc_id", "text", threshold = 0.7, NearDupProfile.Token).df
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -2411,7 +2410,7 @@ object PipelineQueries extends QueryPack {
           "total_chars", "distinct_grams", "half_seen_grams", "est_pairs")
     }),
 
-    // ---- THE auto front door itself (r15): nearDupPairsAuto = the q202
+    // ---- THE auto front door itself (r15): nearDupPairsAutoManaged = the q202
     // probe ACTED ON — probe, then dispatch to the recommended profile
     // and cap. The oracle replays the probe decision AND the recommended
     // profile's full pair chain, with the decision as a TRIPWIRE: the
@@ -2421,8 +2420,8 @@ object PipelineQueries extends QueryPack {
     // drifts, this gate fails loudly (empty vs non-empty) instead of
     // silently comparing the wrong chain.
     "q203_dedup_auto" -> ((s, dir) => {
-      Dedup.nearDupPairsAuto(load(s, dir, "documents"), "doc_id", "text",
-          threshold = 0.7)
+      Dedup.nearDupPairsAutoManaged(load(s, dir, "documents"), "doc_id", "text",
+          threshold = 0.7).df
         .orderBy(col("id_a"), col("id_b"))
     }),
 

@@ -25,7 +25,7 @@ object CcRoundPlan {
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     val docs = graft.Tables.load(spark, sfDir, "documents")
-    val pairs = graft.operators.Dedup.minHashLshPairs(docs, "doc_id", "text", 0.7)
+    val pairs = graft.operators.Dedup.nearDupPairs(docs, "doc_id", "text", 0.7).df
     val edges = graft.operators.Dedup.ccCanon(
       pairs.select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v")))
       .localCheckpoint()

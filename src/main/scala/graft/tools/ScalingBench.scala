@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, length}
 
 import graft.{EngineContext, SparkEntry}
-import graft.operators.Dedup
+import graft.operators.{Dedup, NearDupProfile}
 
 /**
  * Scaling-curve evidence for the iterative/corpus-statistics operators:
@@ -473,12 +473,11 @@ object ScalingBench {
       // the same planted 2% mutations the capped block measures — the
       // head-to-head against q194's cap-mitigated char-gram banding.
       if (only.forall(graft.QuerySelect.matches(_, "q199_dedup_minhash_tokens"))) {
-        import graft.operators.TextHashing.LshBanding
         reclaim()
-        def tokenPairs() = Dedup.minHashLshPairsTokens(
+        def tokenPairs() = Dedup.nearDupPairs(
           spark.read.parquet(s"$dir/documents.parquet")
             .select(col("doc_id"), col("text")),
-          "doc_id", "text", 0.7, banding = LshBanding.Scaled)
+          "doc_id", "text", 0.7, NearDupProfile.Token).df
         val found = tokenPairs().persist()
         val nFound = found.count()
         val planted = found.filter(
@@ -505,15 +504,13 @@ object ScalingBench {
       // mutation count (ids with id%50==3, id>0 — the ground truth this
       // generator embeds), so the cap's trade is measured per tier.
       if (only.forall(graft.QuerySelect.matches(_, "q194_capped"))) {
-        import graft.operators.TextHashing.LshBanding
         reclaim()
         val cap = sys.env.get("SPARK_GRAFT_SCALING_MAXBUCKET")
           .map(_.toLong).getOrElse(500L)
-        def cappedPairs() = Dedup.minHashLshPairsManaged(
+        def cappedPairs() = Dedup.nearDupPairs(
           spark.read.parquet(s"$dir/documents.parquet")
             .select(col("doc_id"), col("text")),
-          "doc_id", "text", 0.7, banding = LshBanding.Scaled,
-          maxBucket = cap).df
+          "doc_id", "text", 0.7, NearDupProfile.CharScaled.copy(maxBucket = cap)).df
         val found = cappedPairs().persist()
         val nFound = found.count()
         // planted ground truth: (id-1, id) for id%50==3 — count how many
@@ -566,7 +563,6 @@ object ScalingBench {
       // would re-run the lang-ID/quality scan.
       if (only.forall(graft.QuerySelect.matches(_, "pipeline_composed"))) {
         import graft.operators.{Packing, TextAnalysis}
-        import graft.operators.TextHashing.LshBanding
         reclaim()
         val shufTotal = new java.util.concurrent.atomic.AtomicLong(0L)
         val shufPeak = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -601,12 +597,12 @@ object ScalingBench {
               .localCheckpoint()
           }
           // r14 verdict #5: the measured path IS the product path — the
-          // dedup stage goes through nearDupPairsAuto (probe → dispatch),
+          // dedup stage goes through nearDupPairsAutoManaged (probe → dispatch),
           // not a hand-picked profile; the probe's recommendation is
           // printed per tier so SCALING.md can record whether it matches
           // the hand-pick (token, uncapped) that r13/r14 measured.
           def composed(survivors: org.apache.spark.sql.DataFrame) = {
-            val pairs = Dedup.nearDupPairsAuto(survivors, "doc_id", "text", 0.7)
+            val pairs = Dedup.nearDupPairsAutoManaged(survivors, "doc_id", "text", 0.7).df
             val clusters = Dedup.connectedComponents(pairs)
               .withColumnRenamed("doc_id", "_cid")
             val canonical = survivors
@@ -620,7 +616,7 @@ object ScalingBench {
           // boundary; the timed runs below carry none of these actions)
           val s0 = funnel()
           val n1 = s0.count()
-          val pairs0 = Dedup.nearDupPairsAuto(s0, "doc_id", "text", 0.7).persist()
+          val pairs0 = Dedup.nearDupPairsAutoManaged(s0, "doc_id", "text", 0.7).df.persist()
           val rec = Dedup.lastRecommendation.get
           println(f"[scaling] pipeline_composed probe $dir: profile=${rec.profile} " +
             f"maxBucket=${rec.maxBucket} newGramRate=${rec.newGramRate}%.4f " +
@@ -664,12 +660,11 @@ object ScalingBench {
       // and the q66b-shape forced-distributed CC are timed separately so
       // the exponent fit attributes cost to the right stage.
       if (only.forall(graft.QuerySelect.matches(_, "q194_dedup_minhash_scaled"))) {
-        import graft.operators.TextHashing.LshBanding
         reclaim()
-        def scaledPairs() = Dedup.minHashLshPairsManaged(
+        def scaledPairs() = Dedup.nearDupPairs(
           spark.read.parquet(s"$dir/documents.parquet")
             .select(col("doc_id"), col("text")),
-          "doc_id", "text", 0.7, banding = LshBanding.Scaled).df
+          "doc_id", "text", 0.7, NearDupProfile.CharScaled).df
         val pairRows = scaledPairs().count()
         val pairRuns = (1 to 3).map { _ =>
           val t0 = System.nanoTime()

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /**
-  * Dedup.nearDupPairsAuto — the r14-verdict front door: the probe that
+  * Dedup.nearDupPairsAutoManaged — the r14-verdict front door: the probe that
   * q202 oracle-gates is what the default entry point ACTS on. For each
   * of the three measured regimes, dispatch must equal the manual call
   * the recommendation names, row for row (same generators as
@@ -16,37 +16,47 @@ class AutoDispatchSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import DedupSpecCorpora.{docs, saturatedDoc, organicDoc, cjkDoc}
 
+  import TextHashing.LshBanding
+
+  private def auto(d: DataFrame, threshold: Double = 0.7, sampleDocs: Int = 2048) =
+    Dedup.nearDupPairsAutoManaged(d, "doc_id", "text", threshold, sampleDocs).df
+
   private def rows(df: DataFrame): Set[(Long, Long)] =
     df.select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("saturated corpus: auto == manual minHashLshPairsTokens (Scaled, rec cap)") {
     val d = docs(saturatedDoc, 600)
-    val auto = Dedup.nearDupPairsAuto(d, "doc_id", "text", 0.7, sampleDocs = 512)
+    val pairs = auto(d, sampleDocs = 512)
     val rec = Dedup.lastRecommendation.get
     assert(rec.profile === "token")
-    val manual = Dedup.minHashLshPairsTokens(d, "doc_id", "text", 0.7,
-      k = 3, banding = TextHashing.LshBanding.Scaled, maxBucket = rec.maxBucket)
-    assert(rows(auto) === rows(manual))
+    assert(rec.nearDupProfile ===
+      NearDupProfile(Shingles.Token, LshBanding.Scaled, rec.maxBucket))
+    val manual = Dedup.nearDupPairs(d, "doc_id", "text", 0.7,
+      NearDupProfile.Token.copy(maxBucket = rec.maxBucket)).df
+    assert(rows(pairs) === rows(manual))
   }
 
   test("organic corpus: auto == manual Scaled char pipeline (rec cap 0)") {
     val d = docs(organicDoc, 600)
-    val auto = Dedup.nearDupPairsAuto(d, "doc_id", "text", 0.7, sampleDocs = 512)
+    val pairs = auto(d, sampleDocs = 512)
     val rec = Dedup.lastRecommendation.get
     assert(rec.profile === "char" && rec.maxBucket === 0L)
-    val manual = Dedup.minHashLshPairsScaled(d, "doc_id", "text", 0.7)
-    assert(rows(auto) === rows(manual))
+    assert(rec.nearDupProfile === NearDupProfile(Shingles.Char, LshBanding.Scaled, 0L))
+    val manual = Dedup.nearDupPairs(d, "doc_id", "text", 0.7, NearDupProfile.CharScaled).df
+    assert(rows(pairs) === rows(manual))
   }
 
   test("CJK corpus: auto == manual minHashLshPairsCp (rec cap)") {
     val d = docs(cjkDoc, 300)
-    val auto = Dedup.nearDupPairsAuto(d, "doc_id", "text", 0.7, sampleDocs = 256)
+    val pairs = auto(d, sampleDocs = 256)
     val rec = Dedup.lastRecommendation.get
     assert(rec.profile === "codepoint")
-    val manual = Dedup.minHashLshPairsCp(d, "doc_id", "text", 0.7,
-      maxBucket = rec.maxBucket)
-    assert(rows(auto) === rows(manual))
+    assert(rec.nearDupProfile ===
+      NearDupProfile(Shingles.Codepoint, LshBanding.Default, rec.maxBucket))
+    val manual = Dedup.nearDupPairs(d, "doc_id", "text", 0.7,
+      NearDupProfile.Codepoint.copy(maxBucket = rec.maxBucket)).df
+    assert(rows(pairs) === rows(manual))
   }
 
   test("dup storm through auto: cap recommended AND applied (completes under a tight budget)") {
@@ -58,11 +68,10 @@ class AutoDispatchSpec extends AnyFunSuite {
     val storm = docs(i => saturatedDoc(i % 4), 400)
     spark.conf.set("graft.dedup.candidatePairBudget", "200000")
     try {
-      val auto = Dedup.nearDupPairsAuto(storm, "doc_id", "text", 0.9,
-        sampleDocs = 256)
+      val pairs = auto(storm, threshold = 0.9, sampleDocs = 256)
       val rec = Dedup.lastRecommendation.get
       assert(rec.maxBucket === 500L, s"storm must recommend the cap (got $rec)")
-      assert(auto.count() > 0L, "exact-dup pairs must survive the cap")
+      assert(pairs.count() > 0L, "exact-dup pairs must survive the cap")
     } finally spark.conf.unset("graft.dedup.candidatePairBudget")
   }
 
@@ -72,15 +81,14 @@ class AutoDispatchSpec extends AnyFunSuite {
     // trigger) and the dispatched chain must collapse each family to its
     // min id
     val d = docs(i => saturatedDoc(i % 50), 400)
-    val auto = Dedup.canonicalizeAuto(d, "doc_id", "text", 0.7)
-    val pairs = Dedup.nearDupPairsAuto(d, "doc_id", "text", 0.7)
-    val clusters = Dedup.connectedComponents(pairs)
+    val kept = Dedup.canonicalizeAuto(d, "doc_id", "text", 0.7)
+    val clusters = Dedup.connectedComponents(auto(d))
       .withColumnRenamed("doc_id", "_cid")
     val manual = d.join(clusters, d("doc_id") === org.apache.spark.sql.functions.col("_cid"), "left")
       .filter(org.apache.spark.sql.functions.col("rep_id").isNull ||
         org.apache.spark.sql.functions.col("rep_id") === d("doc_id"))
       .drop("_cid", "rep_id")
-    val a = auto.select("doc_id").collect().map(_.getLong(0)).toSet
+    val a = kept.select("doc_id").collect().map(_.getLong(0)).toSet
     val m = manual.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(a === m)
     assert(a.size < 400, "the saturated corpus has near-dups to drop")
@@ -88,7 +96,7 @@ class AutoDispatchSpec extends AnyFunSuite {
 
   test("guard observability: lastGuardStats carries the histogram summary") {
     val d = docs(organicDoc, 200)
-    val mp = Dedup.minHashLshPairsManaged(d, "doc_id", "text", 0.7)
+    val mp = Dedup.nearDupPairs(d, "doc_id", "text", 0.7)
     try {
       val (est, maxB, nB) = Dedup.lastGuardStats
       assert(est >= 0L && nB > 0L && maxB >= 1L,
@@ -133,7 +141,7 @@ class AutoDispatchSpec extends AnyFunSuite {
       assert(mp.guardEstPairs >= 0L,
         "auto handle must surface the chosen profile's pre-flight estimate per call")
       assert(rows(mp.df) ===
-        rows(Dedup.nearDupPairsAuto(d, "doc_id", "text", 0.7, sampleDocs = 256)))
+        rows(auto(d, sampleDocs = 256)))
     } finally mp.close()
   }
 
@@ -143,15 +151,15 @@ class AutoDispatchSpec extends AnyFunSuite {
     val batch = docs(i => saturatedDoc(i % 40), 100)
       .select((col("doc_id") + 5000L).as("doc_id"), col("text"))
     val idx = Dedup.dedupIndexAuto(existing, "doc_id", "text", sampleDocs = 256)
-    assert(idx.profile === "token" && idx.maxBucket === 0L,
-      s"saturated varied corpus → (token, uncapped); got (${idx.profile}, ${idx.maxBucket})")
+    assert(idx.profile === NearDupProfile.Token,
+      s"saturated varied corpus → (token, uncapped); got ${idx.profile}")
     assert(idx.bandSizes.nonEmpty, "auto index always attaches the build-time histogram")
     val inc = Dedup.incrementalPairs(idx, batch, "doc_id", "text", 0.7)
     // oracle-style equivalence (the q81 argument under q199's resemblance):
     // full-corpus token pairs restricted to batch-touching pairs — band
     // collisions are identical in both paths, verify is exact
-    val full = Dedup.minHashLshPairsTokens(existing.unionByName(batch),
-        "doc_id", "text", 0.7, k = 3, banding = TextHashing.LshBanding.Scaled)
+    val full = Dedup.nearDupPairs(existing.unionByName(batch),
+        "doc_id", "text", 0.7, NearDupProfile.Token).df
       .filter(col("id_b") >= 5000L)
     assert(rows(inc) === rows(full))
     assert(rows(inc).nonEmpty, "the %40 batch repeats existing texts — pairs must exist")
@@ -163,11 +171,11 @@ class AutoDispatchSpec extends AnyFunSuite {
     val batch = docs(i => cjkDoc(i % 20), 60)
       .select((col("doc_id") + 5000L).as("doc_id"), col("text"))
     val idx = Dedup.dedupIndexAuto(existing, "doc_id", "text", sampleDocs = 128)
-    assert(idx.profile === "codepoint",
+    assert(idx.profile.shingles === Shingles.Codepoint,
       s"CJK corpus must build a codepoint index; got ${idx.profile}")
     val inc = Dedup.incrementalPairs(idx, batch, "doc_id", "text", 0.7)
-    val full = Dedup.minHashLshPairsCp(existing.unionByName(batch),
-        "doc_id", "text", 0.7, maxBucket = idx.maxBucket)
+    val full = Dedup.nearDupPairs(existing.unionByName(batch),
+        "doc_id", "text", 0.7, idx.profile).df
       .filter(col("id_b") >= 5000L)
     assert(rows(inc) === rows(full))
     assert(rows(inc).nonEmpty, "the %20 batch repeats existing texts — pairs must exist")
@@ -179,21 +187,22 @@ class AutoDispatchSpec extends AnyFunSuite {
     val batch = docs(i => saturatedDoc(0) + " x" + (i % 3), 50)
       .select((col("doc_id") + 10000L).as("doc_id"), col("text"))
     val idx = Dedup.dedupIndexAuto(corpus, "doc_id", "text", sampleDocs = 256)
-    assert(idx.maxBucket === 500L, s"storm must record the cap (got ${idx.maxBucket})")
+    assert(idx.profile.maxBucket === 500L, s"storm must record the cap (got ${idx.profile})")
     spark.conf.set("graft.dedup.candidatePairBudget", "10000")
     try {
       // uncapped twin of the same index: the ~100-doc hot buckets put the
       // probe estimate (Σ n_idx·n_batch over colliding sigs ≈ 30k) over
       // the budget — the r14 pre-flight fires
       intercept[IllegalStateException] {
-        Dedup.incrementalPairs(idx.copy(maxBucket = 0L), batch,
+        Dedup.incrementalPairs(idx.copy(profile = idx.profile.copy(maxBucket = 0L)), batch,
           "doc_id", "text", 0.7).count()
       }
       // a cap tighter than every storm bucket prunes ALL hot buckets on
       // the index side (and the batch self-join): the same batch now
       // passes the same budget and the pipeline completes — the recorded
       // cap, not the caller, governs the probe join
-      val capped = Dedup.incrementalPairs(idx.copy(maxBucket = 2L), batch,
+      val capped = Dedup.incrementalPairs(
+        idx.copy(profile = idx.profile.copy(maxBucket = 2L)), batch,
         "doc_id", "text", 0.7)
       assert(capped.count() === 0L, "every storm bucket is hot: cap 2 prunes all candidates")
     } finally spark.conf.unset("graft.dedup.candidatePairBudget")
@@ -208,7 +217,7 @@ class AutoDispatchSpec extends AnyFunSuite {
         Dedup.incrementalPairs(idx, hotBatch, "doc_id", "text", 0.7).count()
       }
       assert(e.getMessage.contains("graft.dedup.candidatePairBudget"))
-      assert(!e.getMessage.contains("minHashLshPairsTokens"),
+      assert(!e.getMessage.contains("NearDupProfile.Token"),
         "incremental site must not advertise hatches it doesn't have (r14 advisor)")
       assert(!e.getMessage.contains("maxBucket"),
         "incremental site has no bucket-cap knob")

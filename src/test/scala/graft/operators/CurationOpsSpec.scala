@@ -162,7 +162,7 @@ class CurationOpsSpec extends AnyFunSuite {
     // must still cover the same unordered pair set as the full pipeline
     val existing = Seq((10L, a), (40L, b), (60L, c)).toDF("doc_id", "text")
     val batch = Seq((25L, a), (55L, b), (70L, "unique batch content with no duplicate partner here at all")).toDF("doc_id", "text")
-    val full = Dedup.minHashLshPairs(existing.unionByName(batch), "doc_id", "text", 0.7)
+    val full = Dedup.nearDupPairs(existing.unionByName(batch), "doc_id", "text", 0.7).df
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val batchIds = Set(25L, 55L, 70L)
     val expected = full.filter(p => batchIds(p._1) || batchIds(p._2))

@@ -19,7 +19,7 @@ class DedupRecallSpec extends AnyFunSuite {
   test("minhash-LSH recall vs exact n-gram Jaccard at threshold 0.7") {
     val docs = Tables.load(spark, TestSpark.sfDir, "documents")
     val exact = pairs(Dedup.ngramJaccardPairs(docs, "doc_id", "text", 0.7))
-    val lsh = pairs(Dedup.minHashLshPairs(docs, "doc_id", "text", 0.7))
+    val lsh = pairs(Dedup.nearDupPairs(docs, "doc_id", "text", 0.7).df)
     assert(lsh.subsetOf(exact)) // verified candidates: no false positives
     val recall = if (exact.isEmpty) 1.0 else (lsh & exact).size.toDouble / exact.size
     info(f"minhash-LSH recall ${recall}%.3f over ${exact.size} exact pairs")
@@ -32,7 +32,7 @@ class DedupRecallSpec extends AnyFunSuite {
   test("scaled (6x5, 30-hash) banding: no false positives, strong dups kept, junk candidates cut") {
     val docs = Tables.load(spark, TestSpark.sfDir, "documents")
     val exact = pairs(Dedup.ngramJaccardPairs(docs, "doc_id", "text", 0.7))
-    val scaled = pairs(Dedup.minHashLshPairsScaled(docs, "doc_id", "text", 0.7))
+    val scaled = pairs(Dedup.nearDupPairs(docs, "doc_id", "text", 0.7, NearDupProfile.CharScaled).df)
     assert(scaled.subsetOf(exact)) // same exact-Jaccard verify stage
     val recall = if (exact.isEmpty) 1.0 else (scaled & exact).size.toDouble / exact.size
     info(f"scaled-banding recall ${recall}%.3f over ${exact.size} exact pairs")
@@ -63,16 +63,16 @@ class DedupRecallSpec extends AnyFunSuite {
   test("bucket cap: above the max bucket it is exact; aggressive cap keeps planted strong dups") {
     import graft.operators.TextHashing.LshBanding
     val docs = Tables.load(spark, TestSpark.sfDir, "documents")
-    val uncapped = pairs(Dedup.minHashLshPairs(docs, "doc_id", "text", 0.7))
+    val uncapped = pairs(Dedup.nearDupPairs(docs, "doc_id", "text", 0.7).df)
     // cap far above any bucket on this corpus -> bit-identical output
-    val high = pairs(Dedup.minHashLshPairsManaged(docs, "doc_id", "text", 0.7,
-      maxBucket = 1000000L).df)
+    val high = pairs(Dedup.nearDupPairs(docs, "doc_id", "text", 0.7,
+      NearDupProfile.Char.copy(maxBucket = 1000000L)).df)
     assert(high === uncapped)
     // aggressive cap: recall trade is measured, not silent. Strong dups
     // collide in multiple bands; losing the hot ones must not lose the
     // pair wholesale.
-    val capped = pairs(Dedup.minHashLshPairsManaged(docs, "doc_id", "text", 0.7,
-      maxBucket = 25L).df)
+    val capped = pairs(Dedup.nearDupPairs(docs, "doc_id", "text", 0.7,
+      NearDupProfile.Char.copy(maxBucket = 25L)).df)
     assert(capped.subsetOf(uncapped)) // cap only ever REMOVES candidates
     val strong = pairs(Dedup.ngramJaccardPairs(docs, "doc_id", "text", 0.9))
     val kept = if (strong.isEmpty) 1.0

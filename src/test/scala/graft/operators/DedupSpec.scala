@@ -33,7 +33,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("minHashLshPairs candidates agree with exact Jaccard on strong dups") {
-    val lsh = Dedup.minHashLshPairs(docs, "doc_id", "text", 0.7)
+    val lsh = Dedup.nearDupPairs(docs, "doc_id", "text", 0.7).df
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 0.7)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -67,11 +67,20 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("minHashLshPairs shuffle-join fallback (budget=0) matches the broadcast fast path") {
-    val fast = Dedup.minHashLshPairs(docs, "doc_id", "text", 0.7)
-    val slow = Dedup.minHashLshPairs(docs, "doc_id", "text", 0.7, broadcastBudgetBytes = 0L)
-    val f = fast.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val g = slow.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(f == g)
+    // every profile, both verify sides: an explicit broadcast budget runs
+    // the merge-walk (token and codepoint default to the shuffle verify,
+    // so this is their only batch merge-walk), budget 0 the SHUFFLE_HASH
+    // joins
+    for (profile <- Seq(NearDupProfile.Char, NearDupProfile.Codepoint, NearDupProfile.Token)) {
+      def verified(budget: Long) = {
+        val h = Dedup.nearDupPairs(docs, "doc_id", "text", 0.7, profile, budget)
+        try h.df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        finally h.close()
+      }
+      val fast = verified(Dedup.BroadcastVerifyMaxBytes)
+      assert(fast.contains((0L, 1L, 1.0)), s"${profile.shingles}: $fast")
+      assert(fast == verified(0L), s"${profile.shingles}: broadcast != shuffle")
+    }
   }
 
   test("minHashVerify shuffle path broadcasts nothing (the budget said no)") {

@@ -120,9 +120,9 @@ class RecommendProfileSpec extends AnyFunSuite {
     spark.conf.set("graft.dedup.candidatePairBudget", "1000")
     try {
       val e = intercept[IllegalStateException] {
-        Dedup.minHashLshPairs(hot, "doc_id", "text", 0.7).count()
+        Dedup.nearDupPairs(hot, "doc_id", "text", 0.7).df.count()
       }
-      assert(e.getMessage.contains("minHashLshPairsTokens"),
+      assert(e.getMessage.contains("NearDupProfile.Token"),
         "guard must name the token-profile escape hatch")
       assert(e.getMessage.contains("maxBucket"),
         "guard must name the bucket-cap escape hatch")
@@ -130,8 +130,8 @@ class RecommendProfileSpec extends AnyFunSuite {
         "guard must name the budget conf")
       // escape hatch (2) works: the capped call prunes the hot buckets
       // below budget and completes under the same session budget
-      val capped = Dedup.minHashLshPairsManaged(hot, "doc_id", "text", 0.7,
-        maxBucket = 50L)
+      val capped = Dedup.nearDupPairs(hot, "doc_id", "text", 0.7,
+        NearDupProfile.Char.copy(maxBucket = 50L))
       assert(capped.df.count() >= 0L)
       capped.close()
     } finally spark.conf.unset("graft.dedup.candidatePairBudget")
@@ -140,11 +140,11 @@ class RecommendProfileSpec extends AnyFunSuite {
   test("guard is a no-op on healthy corpora and when disabled") {
     val ok = docs(organicDoc, 200)
     // default budget: healthy corpus sails through
-    assert(Dedup.minHashLshPairs(ok, "doc_id", "text", 0.7).count() >= 0L)
+    assert(Dedup.nearDupPairs(ok, "doc_id", "text", 0.7).df.count() >= 0L)
     // budget 0 disables even on a saturated corpus
     val hot = (0L until 200L).map(i => (i, saturatedDoc(0) + " x" + (i % 3))).toDF("doc_id", "text")
     spark.conf.set("graft.dedup.candidatePairBudget", "0")
-    try assert(Dedup.minHashLshPairs(hot, "doc_id", "text", 0.7).count() >= 0L)
+    try assert(Dedup.nearDupPairs(hot, "doc_id", "text", 0.7).df.count() >= 0L)
     finally spark.conf.unset("graft.dedup.candidatePairBudget")
   }
 }

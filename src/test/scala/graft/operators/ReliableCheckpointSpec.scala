@@ -54,10 +54,10 @@ class ReliableCheckpointSpec extends AnyFunSuite {
   }
 
   test("minhash pipeline: same pairs under reliable checkpointing") {
-    val base = Dedup.minHashLshPairs(docs, "doc_id", "text", 0.7)
+    val base = Dedup.nearDupPairs(docs, "doc_id", "text", 0.7).df
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val (rel, _) = withReliable {
-      Dedup.minHashLshPairs(docs, "doc_id", "text", 0.7)
+      Dedup.nearDupPairs(docs, "doc_id", "text", 0.7).df
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     assert(rel == base && rel.contains((0L, 1L)))

@@ -93,7 +93,7 @@ class TokenShingleSpec extends AnyFunSuite {
       .map(_.getSeq[Long](0)).toSeq
     assert(composable === Seq(Seq(h48("")), Seq(h48(""))))
     // so null-text docs no longer pair with each other or with empty docs
-    val pairs = Dedup.minHashLshPairsTokens(docs, "doc_id", "text", 0.7).collect()
+    val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", 0.7, NearDupProfile.Token).df.collect()
     assert(pairs.isEmpty, pairs.mkString(","))
   }
 
@@ -101,7 +101,7 @@ class TokenShingleSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Seq((1L, "hello world"), (2L, "hello world"),
       (3L, "something else entirely different here")).toDF("doc_id", "text")
-    val pairs = Dedup.minHashLshPairsTokens(docs, "doc_id", "text", 0.7)
+    val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", 0.7, NearDupProfile.Token).df
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.toSeq === Seq((1L, 2L, 1.0)))
   }
@@ -124,7 +124,8 @@ class TokenShingleSpec extends AnyFunSuite {
     import spark.implicits._
     val df = docs.toDF("doc_id", "text")
     for (b <- Seq(TextHashing.LshBanding.Default, TextHashing.LshBanding.Scaled)) {
-      val found = Dedup.minHashLshPairsTokens(df, "doc_id", "text", 0.7, banding = b)
+      val found = Dedup.nearDupPairs(df, "doc_id", "text", 0.7,
+          NearDupProfile.Token.copy(banding = b)).df
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(truth.subsetOf(found),
         s"profile ${b.numBands}x${b.rowsPerBand} missed ${truth.diff(found)}")
