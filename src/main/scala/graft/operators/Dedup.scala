@@ -109,9 +109,16 @@ final case class NearDupProfile(shingles: Shingles,
                                 banding: TextHashing.LshBanding =
                                   TextHashing.LshBanding.Default,
                                 maxBucket: Long = 0L) {
-  /** (sid, [gn,] sig) band relation of this profile's gram sets. */
-  private[operators] def bands(sets: DataFrame, sizeAware: Boolean = true): DataFrame =
-    Dedup.bandRelation(Dedup.signaturesFromSets(sets, banding, shingles.wide),
+  /** (sid, [gn,] [gs,] sig) band relation of this profile's gram sets.
+    * `withSets` keeps each doc's gram set on its band rows — the
+    * streaming probe's shape (graft.streaming.CurationStreams): joining
+    * the sets back post-explode would be a stream-stream SELF-join, while
+    * carrying the array is a stateless projection (one copy per band,
+    * bounded by the micro-batch). Batch callers keep the rows narrow
+    * through the band self-join. */
+  private[graft] def bands(sets: DataFrame, sizeAware: Boolean = true,
+                           withSets: Boolean = false): DataFrame =
+    Dedup.bandRelation(Dedup.signaturesFromSets(sets, banding, shingles.wide, withSets),
       sizeAware, banding)
 }
 
@@ -171,9 +178,16 @@ object Dedup {
     * of an eager checkpoint job — for call sites that immediately run an
     * action of their own (connectedComponents' convergence checksum), the
     * barrier and that action share one job instead of paying two
-    * (guide §2: per-round job overhead in iterative operators). */
+    * (guide §2: per-round job overhead in iterative operators).
+    *
+    * Reliable mode takes the EAGER barrier: a lazy reliable checkpoint
+    * computes the rows for the caller's action and then AGAIN in the
+    * separate file-write job Spark runs after it (RDD.doCheckpoint on an
+    * unpersisted RDD), while the eager form computes them once, in the
+    * write job, and the caller's action reads the files
+    * (ReliableCheckpointSpec counts the evaluations). */
   private[operators] def truncateLineageLazy(df: DataFrame): DataFrame =
-    if (reliableCheckpoint(df)) df.checkpoint(eager = false)
+    if (reliableCheckpoint(df)) truncateLineage(df)
     else df.localCheckpoint(eager = false)
 
   private def reliableCheckpoint(df: DataFrame): Boolean =
@@ -309,9 +323,10 @@ object Dedup {
     * profile (minHashJ). A pure projection over the doc's own gram-hash
     * set with NO shuffle: the naive shape (explode grams, groupBy doc
     * with k min-aggregates) pushes |grams| rows through partial
-    * aggregation for the same result. */
+    * aggregation for the same result. `keepSets` carries the `gs` column
+    * through (the streaming probe verifies against it row-locally). */
   def signaturesFromSets(sets: DataFrame, banding: LshBanding = LshBanding.Default,
-                         wide: Boolean = false): DataFrame = {
+                         wide: Boolean = false, keepSets: Boolean = false): DataFrame = {
     // One-pass codegen'd kernel for all k mins (graft_minhash_sig* for
     // this (k, wide)); the composable per-hash forms are the spec
     // oracles. Two projections:
@@ -319,10 +334,11 @@ object Dedup {
     // barrier instead of inlining the kernel once per element_at
     // (MinHashSigSpec pins single evaluation by plan text).
     // gn = |gram set| rides along for the candidate-stage size prefilter.
-    sets.select(col("sid"), size(col("gs")).as("gn"),
+    val kept = if (keepSets) Seq(col("gs")) else Nil
+    sets.select(col("sid") +: kept ++: Seq(size(col("gs")).as("gn"),
         call_function(graft.functions.MinHashSignature.name(banding.numHashes, wide),
-          col("gs")).as("_s"))
-      .select(col("sid") +: col("gn") +:
+          col("gs")).as("_s")): _*)
+      .select(Seq(col("sid"), col("gn")) ++ kept ++
         (0 until banding.numHashes).map(j =>
           element_at(col("_s"), j + 1).as(s"m$j")): _*)
   }
@@ -372,7 +388,7 @@ object Dedup {
       minSizeRatio, sizeAware)
   }
 
-  /** (sid[, gn], sig) band relation: one row per (doc, band), sig =
+  /** (sid[, gn][, gs], sig) band relation: one row per (doc, band), sig =
     * xxhash64 over the band's hashes. Tiny (4 narrow rows per doc) but
     * EXPENSIVE to produce — it carries the whole 16-hash signature
     * computation — so the managed pipeline persists it: the self-join
@@ -385,28 +401,9 @@ object Dedup {
         .map(r => col(s"m${b * banding.rowsPerBand + r}"))
       xxhash64(lit(b) +: cols: _*)
     }
-    val keep = if (sizeAware) Seq(col("sid"), col("gn")) else Seq(col("sid"))
-    signatures.select(keep :+ explode(array(bands: _*)).as("sig"): _*)
-  }
-
-  /** Band relation that KEEPS each doc's gram set on its band rows —
-    * the streaming-probe shape (graft.streaming.CurationStreams): joining
-    * the sets back post-explode would be a stream-stream SELF-join under
-    * streaming analysis, while carrying the array is a pure stateless
-    * projection (4× duplication of one batch's arrays, bounded by the
-    * micro-batch). Batch callers should prefer [[bandRelation]], whose
-    * rows stay narrow through the band self-join. */
-  private[graft] def bandRelationWithSets(sets: DataFrame): DataFrame = {
-    val sigs = sets.select(col("sid"), col("gs"), size(col("gs")).as("gn"),
-        call_function("graft_minhash_sig", col("gs")).as("_s"))
-      .select(col("sid") +: col("gs") +: col("gn") +:
-        MinHashParams.indices.map(j => element_at(col("_s"), j + 1).as(s"m$j")): _*)
-    val bands = (0 until NumBands).map { b =>
-      val cols = (0 until RowsPerBand).map(r => col(s"m${b * RowsPerBand + r}"))
-      xxhash64(lit(b) +: cols: _*)
-    }
-    sigs.select(col("sid"), col("gs"), col("gn"),
-      explode(array(bands: _*)).as("sig"))
+    val keep = Seq("sid") ++ (if (sizeAware) Seq("gn") else Nil) ++
+      Seq("gs").filter(signatures.columns.contains)
+    signatures.select(keep.map(col) :+ explode(array(bands: _*)).as("sig"): _*)
   }
 
   /** `maxBucket` > 0 drops band rows landing in buckets LARGER than the
@@ -1165,11 +1162,27 @@ object Dedup {
                                 * dispatch off the index, or a token-profile
                                 * index would be probed with char bands and
                                 * match nothing). */
-                              profile: NearDupProfile = NearDupProfile.Char)
+                              profile: NearDupProfile = NearDupProfile.Char) {
+    /** The band relation an incoming batch or stream is probed against:
+      * a capped profile with the build-time histogram drops its over-cap
+      * buckets — the same hot-bucket/low-precision trade the batch
+      * pipelines make, decided once at build time. A hand-built capped
+      * index without `bandSizes` keeps its full band relation (there is
+      * no way to prune it without re-scanning). */
+    private[graft] def probeBands: DataFrame = bandSizes match {
+      case Some(sizes) if profile.maxBucket > 0L =>
+        bands.join(sizes.filter(col("_bs") <= profile.maxBucket).select(col("sig")),
+          Seq("sig"))
+      case _ => bands
+    }
+  }
 
-  def dedupIndex(docs: DataFrame, id: String, text: String): DedupIndex = {
-    val sets = gramSets(docs, id, text)
-    DedupIndex(NearDupProfile.Char.bands(sets), sets)
+  /** [[DedupIndex]] of `docs` under `profile` (default: the classic char
+    * profile), without the build-time band histogram. */
+  def dedupIndex(docs: DataFrame, id: String, text: String,
+                 profile: NearDupProfile = NearDupProfile.Char): DedupIndex = {
+    val sets = profile.shingles.sets(docs, id, text)
+    DedupIndex(profile.bands(sets), sets, profile = profile)
   }
 
   /** [[dedupIndex]] through the auto front door (r15 verdict #4): probe
@@ -1186,10 +1199,9 @@ object Dedup {
     * (`DedupProfileRecommendation.nearDupProfile`). */
   def dedupIndexAuto(docs: DataFrame, id: String, text: String,
                      sampleDocs: Int = 2048): DedupIndex = {
-    val profile = probeLogged("dedupIndexAuto", docs, id, text, sampleDocs).nearDupProfile
-    val sets = profile.shingles.sets(docs, id, text)
-    val bands = profile.bands(sets)
-    DedupIndex(bands, sets, Some(indexBandSizes(bands)), profile)
+    val index = dedupIndex(docs, id, text,
+      probeLogged("dedupIndexAuto", docs, id, text, sampleDocs).nearDupProfile)
+    index.copy(bandSizes = Some(indexBandSizes(index.bands)))
   }
 
   /** The (sig, _bs) histogram for a [[DedupIndex]]'s band relation —
@@ -1255,20 +1267,9 @@ object Dedup {
         // recorded cap applies to the batch self-join exactly as in the
         // batch pipelines.
         guardCandidateBudget(inBands, maxBucket, IncrementalHatches)
-        // The recorded cap's INDEX-side prune (r15 verdict #4): an
-        // auto-built capped index drops its over-cap band buckets from the
-        // probe join — the same hot-bucket/low-precision trade the batch
-        // pipelines make, decided once at build time by the probe. Needs
-        // the build-time histogram; dedupIndexAuto always attaches it (a
-        // hand-built capped index without bandSizes keeps its full band
-        // relation — there is no way to prune it without re-scanning).
-        val idxBands = index.bandSizes match {
-          case Some(idxSizes) if maxBucket > 0L =>
-            index.bands.join(
-              idxSizes.filter(col("_bs") <= maxBucket).select(col("sig")),
-              Seq("sig"))
-          case _ => index.bands
-        }
+        // The recorded cap's INDEX-side prune (r15 verdict #4); needs the
+        // build-time histogram, which dedupIndexAuto always attaches.
+        val idxBands = index.probeBands
         // probe-side pre-flight (opt-in via index.bandSizes): hot INDEX
         // buckets hit by batch bands blow up the probe join even when the
         // batch itself is healthy. Candidates = Σ over colliding sigs of

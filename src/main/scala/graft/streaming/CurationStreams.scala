@@ -111,14 +111,22 @@ object CurationStreams {
     * gram set). Within-batch pairs are not emitted — that is a
     * stream-stream self-join; run the batch operator over the landed
     * files for intra-crawl dups (StreamNearDupSpec pins the probe-side
-    * parity). Persist both index relations for long streams. */
+    * parity). Persist both index relations for long streams.
+    *
+    * Like incrementalPairs, the stream is shingled and banded under
+    * `index.profile` — its set kernel, banding and wide-hash flag — and a
+    * capped index with its build-time histogram is probed without its
+    * over-cap buckets (`DedupIndex.probeBands`): band signatures only
+    * collide within one profile, so a token or codepoint index probed
+    * with char bands would match nothing. */
   def nearDupPairs(stream: DataFrame, index: Dedup.DedupIndex, id: String,
                    text: String, threshold: Double): DataFrame = {
     // band rows carry the doc's gram set (stateless projection — joining
     // sets back post-explode would be a stream-stream self-join)
-    val inBands = Dedup.bandRelationWithSets(Dedup.gramSets(stream, id, text))
+    val inBands = index.profile.bands(index.profile.shingles.sets(stream, id, text),
+      withSets = true)
     inBands.as("y")
-      .join(index.bands.as("x"),
+      .join(index.probeBands.as("x"),
         col("x.sig") === col("y.sig") &&
           least(col("x.gn"), col("y.gn")).cast("double") >=
             lit(threshold) * greatest(col("x.gn"), col("y.gn")))

@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -61,6 +62,31 @@ class ReliableCheckpointSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     assert(rel == base && rel.contains((0L, 1L)))
+  }
+
+  test("distributed connected components: reliable barriers compute their rows once") {
+    // The input's last operator is a nondeterministic filter that counts
+    // its rows. It sits above a repartition on (id_a, id_b), so it is not
+    // pushed below the shuffle, and the first barrier's distinct needs no
+    // exchange of its own: every computation of that barrier's rows runs
+    // the filter once per input row.
+    val evals = spark.sparkContext.longAccumulator("cc-input-evals")
+    val counted = udf { (_: Long) => evals.add(1); true }.asNondeterministic()
+    val raw = (1L until 40L).map(i => (i, i + 1)) ++ Seq((100L, 101L), (101L, 102L))
+    val input = raw.toDF("id_a", "id_b")
+      .repartition(4, col("id_a"), col("id_b"))
+      .filter(counted(col("id_a")))
+    def run(): Set[(Long, Long)] = {
+      evals.reset()
+      Dedup.connectedComponents(input, smallGraphMaxEdges = 0L)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    val base = run()
+    assert(evals.value == raw.size, "the lazy local barrier computes its rows once")
+    val (rel, _) = withReliable(run())
+    assert(rel == base)
+    assert(evals.value == raw.size,
+      s"reliable mode evaluated the ${raw.size} input edges ${evals.value} times")
   }
 
   test("default path writes no checkpoint files even when a dir is set") {
