@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /**
  * Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
  * prints the full JSON line {"metric":"total_full","value","unit","queries",
@@ -22,7 +24,7 @@ package graft
  *
  * Wall budget ([[BudgetSec]]): past 80 % of it a query gets 2 runs, past
  * 100 % 1 run, so every query is still measured; "demoted_queries" counts
- * the reduced measurements. Full sweeps (no SPARK_GRAFT_BENCH_ONLY) write
+ * the reduced measurements. Full sweeps (no [[QuerySelect]] filter) write
  * the line to [[artifactPath]] before every query, marked "partial":true
  * with "in_progress" = the query being measured, so a killed capture still
  * leaves the totals so far; the final write lands "partial":false.
@@ -47,6 +49,19 @@ object Bench {
   val DriftLimit = 1.5
 
   val DefaultCpus = "32"
+
+  /** Core count of every main but EntrySmoke: SPARK_GRAFT_CPUS, default
+    * [[DefaultCpus]]. */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus)
+
+  /** The session those mains run on: `local[cpus]` with one
+    * shuffle partition per core. */
+  def session(): SparkSession = {
+    val spark = EngineContext.session(s"local[$cpus]")
+    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
 
   /** The full-sweep artifact for a core count: the default count writes
     * BENCH_latest_local.json, any other BENCH_latest_local_c<N>.json, so a
@@ -311,11 +326,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus)
     val artifact = artifactPath(cpus)
-    val spark = EngineContext.session(s"local[$cpus]")
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     // Ad-hoc session conf (diagnostic captures only — e.g. the r15 guard
     // on/off table sets graft.dedup.candidatePairBudget=0): "k=v;k=v".
     sys.env.get("SPARK_GRAFT_SESSION_CONF").foreach { kvs =>
@@ -324,21 +336,16 @@ object Bench {
         spark.conf.set(k.trim, v.trim)
       }
     }
-    // Subset runs for diagnostics (comma-separated prefixes); the full
-    // capture leaves it unset. Selects from ALL registered queries, not
+    // Subset runs for diagnostics (QuerySelect); the full capture
+    // leaves the filter unset. Selects from ALL registered queries, not
     // just the headline set — diagnostic tables need the forced twins
     // (q44b/q81b) the headline deliberately excludes.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-    val selected: Seq[String] = only match {
-      case Some(sel) =>
-        val pats = sel.split(',').map(_.trim).filter(_.nonEmpty)
-        val all = headline ++
-          SparkEntry.queries.keys.filterNot(headline.contains).toSeq.sorted
-        all.filter(q => pats.exists(q.startsWith))
-      case None => headline
-    }
+    val selected: Seq[String] =
+      if (QuerySelect.only.isEmpty) headline
+      else (headline ++ SparkEntry.queries.keys.filterNot(headline.contains).toSeq.sorted)
+        .filter(QuerySelect.selects)
     if (selected.isEmpty) {
-      System.err.println(s"[bench] SPARK_GRAFT_BENCH_ONLY matched no queries: '${only.getOrElse("")}'")
+      System.err.println(s"[bench] the query filter ${QuerySelect.only.get.mkString(",")} matched no queries")
       spark.stop()
       sys.exit(2)
     }
@@ -402,7 +409,7 @@ object Bench {
     // query, then once more at the end); subset runs never write it, so
     // they cannot masquerade as a full capture.
     def writeArtifact(line: String): Unit =
-      if (only.isEmpty)
+      if (QuerySelect.only.isEmpty)
         try java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
           (line + "\n").getBytes("UTF-8"))
         catch { case e: Exception =>

@@ -5,17 +5,10 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineContext.session(s"local[$cpus]")
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
-    // Local-iteration filter (builder tooling; the driver never sets it):
-    // SPARK_GRAFT_ONLY=q114,q115 dumps just the named queries — exact
-    // name or family prefix per QuerySelect (q90 → q90/q90b/q90c; q11
-    // does NOT select q110).
-    val only = QuerySelect.parse(sys.env.get("SPARK_GRAFT_ONLY"))
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(QuerySelect.matches(_, name)) }
+    // Local-iteration filter (QuerySelect); a full correctness dump leaves it unset
+    val selected = SparkEntry.queries.filter { case (name, _) => QuerySelect.selects(name) }
     selected.foreach { case (name, fn) =>
       // stale persisted intermediates from earlier queries are measurement/
       // memory pressure, not part of this query (same hygiene as Bench)

@@ -1098,25 +1098,15 @@ object Dedup {
     }
     var converged = false
     var i = 0
-    // Checkpoint CADENCE (graft.dedup.checkpointEvery, default 1 = a
-    // lineage barrier per round). Cadence k>1 bounds lineage at depth k
-    // with fewer barriers, but each un-checkpointed round is RECOMPUTED
-    // by the next round's job AND by its own convergence checksum —
-    // measured on the bench corpus (sf0.1, 5 rounds): cadence 2 ran q66b
-    // at 10.2 s vs 5.6 s for cadence 1, so the recompute dominates the
-    // barrier saving at every scale where rounds carry real data. Kept as
-    // a knob (answer-equality pinned for k=1/2/3 in
-    // ConnectedComponentsSpec) because the trade can flip where the
-    // cluster's block-manager write path is the bottleneck, not compute.
-    val ckptEvery = math.max(1, edges0.sparkSession.conf
-      .getOption("graft.dedup.checkpointEvery").map(_.toInt).getOrElse(1))
     while (!converged && i < maxIter) {
       val prev = edges
-      val next = smallStar(largeStar(edges))
-      // lazy barrier: the round's convergence checksum below is the
-      // materializing action — one job per round where the eager form
-      // paid two (checkpoint job + checksum job)
-      edges = if ((i + 1) % ckptEvery == 0) truncateLineageLazy(next) else next
+      // lazy barrier every round: the round's convergence checksum below
+      // is the materializing action — one job per round where the eager
+      // form paid two (checkpoint job + checksum job). A barrier every
+      // k>1 rounds recomputes each skipped round in the next round's job
+      // AND in its own checksum: cadence 2 ran q66b at 10.2 s vs 5.6 s
+      // for cadence 1 (sf0.1, 5 rounds).
+      edges = truncateLineageLazy(smallStar(largeStar(edges)))
       val cur = checksum(edges)
       // The (count, hash-sum) checksum is a cheap screen; the DETERMINISTIC
       // stop is set equality, checked only at the (usually single) round

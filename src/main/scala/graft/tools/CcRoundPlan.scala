@@ -3,8 +3,6 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
-import graft.EngineContext
-
 /** Dumps the formatted physical plan of ONE connected-components round
   * (smallStar ∘ largeStar over a checkpointed edge set) — the iterative
   * plan that q66b's end-of-query explain hides behind per-round
@@ -19,10 +17,7 @@ object CcRoundPlan {
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = if (args.length > 2) args(2) else "before"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineContext.session(s"local[$cpus]")
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.session()
     Files.createDirectories(Paths.get(outDir))
     val docs = graft.Tables.load(spark, sfDir, "documents")
     val pairs = graft.operators.Dedup.nearDupPairs(docs, "doc_id", "text", 0.7).df

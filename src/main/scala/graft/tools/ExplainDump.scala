@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import graft.{EngineContext, QuerySelect, SparkEntry}
+import graft.{Bench, QuerySelect, SparkEntry}
 
 /** Builder tooling (optimization rounds): dump `.explain("formatted")` for
   * declared queries to an output directory, one file per query — the plan
@@ -12,7 +12,7 @@ import graft.{EngineContext, QuerySelect, SparkEntry}
   * other work; note that with AQE the dumped plan is the initial
   * (isFinalPlan=false) physical plan.
   *
-  * Usage: ExplainDump SF_DIR OUT_DIR [suffix]   (+ SPARK_GRAFT_ONLY filter)
+  * Usage: ExplainDump SF_DIR OUT_DIR [suffix]   (+ the SPARK_GRAFT_ONLY filter of QuerySelect)
   * writes OUT_DIR/<query>_<suffix>.txt (suffix default "before").
   */
 object ExplainDump {
@@ -20,14 +20,9 @@ object ExplainDump {
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = if (args.length > 2) args(2) else "before"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineContext.session(s"local[$cpus]")
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session()
     Files.createDirectories(Paths.get(outDir))
-    val only = QuerySelect.parse(sys.env.get("SPARK_GRAFT_ONLY"))
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      only.forall(QuerySelect.matches(_, n)) }
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => QuerySelect.selects(q._1))
     selected.foreach { case (name, fn) =>
       spark.catalog.clearCache()
       try {

@@ -1,9 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, length}
 
-import graft.{EngineContext, SparkEntry}
+import graft.SparkEntry
+// SPARK_GRAFT_ONLY restricts the sweep and gates every section of main
+import graft.QuerySelect.selects
 import graft.operators.{Dedup, NearDupProfile}
 
 /**
@@ -218,38 +220,19 @@ object ScalingBench {
       // q194_dedup_minhash_scaled is timed by its dedicated block below
       // (pairs without the gate's orderBy, plus CC over the scaled pairs)
 
-  def main(args: Array[String]): Unit = {
-    val tenxDir = args.headOption.getOrElse("/tmp/graft_scaling_10x")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineContext.session(s"local[$cpus]")
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+  /** The only bucket cap SCALING.md records for the capped scaled
+    * banding (q194_capped): 500 kept 99.7 % planted recall at the tier
+    * that killed uncapped char banding. */
+  val MaxBucket = 500L
 
-    // SPARK_GRAFT_SCALING_NDOCS overrides the corpus size (default 50k =
-    // 10×): pass 500000 with a fresh dir for a 100× two-decade curve.
-    val nDocsGen = sys.env.get("SPARK_GRAFT_SCALING_NDOCS")
-      .map(_.toLong).getOrElse(50000L)
+  def main(args: Array[String]): Unit = {
+    val spark = graft.Bench.session()
+
     // SPARK_GRAFT_SCALING_HEAPS=true: Heaps-law-like rare-token growth
     // (see baseText) — required to measure the banded dedup ops at
     // >=100x, where the default head-heavy distribution saturates the
     // gram space.
     val heapsGen = sys.env.get("SPARK_GRAFT_SCALING_HEAPS").contains("true")
-    if (!new java.io.File(s"$tenxDir/documents.parquet").exists()) {
-      println(s"[scaling] generating corpus at $tenxDir ($nDocsGen docs, heaps=$heapsGen)")
-      generate(spark, tenxDir, nDocsGen, heapsGen)
-    }
-    val embPath = s"$tenxDir/embeddings.parquet"
-    val embStale = new java.io.File(embPath).exists() &&
-      !spark.read.parquet(embPath).columns.contains("label")
-    if (!new java.io.File(embPath).exists() || embStale) {
-      println(s"[scaling] generating 10x embeddings at $tenxDir (20k vectors)" +
-        (if (embStale) " [regenerating: pre-r10 file lacks label]" else ""))
-      generateEmb(spark, tenxDir, 20000L)
-    }
-
-    val queries = sweep
-
-    def median(ts: Seq[Double]) = ts.sorted.apply(ts.size / 2)
 
     // clearCache() drops persisted relations but NOT localCheckpoint
     // (truncated-lineage) blocks — those free only when the JVM GC lets
@@ -264,29 +247,43 @@ object ScalingBench {
       Thread.sleep(200) // let the async ContextCleaner drain
     }
 
-    // SPARK_GRAFT_SCALING_TIERS="/tmp/h50k=50000,/tmp/h500k=500000"
-    // REPLACES the default (driver sf0.1 + tenxDir) sweep dirs with an
-    // explicit tier ladder — each missing tier is generated with the
-    // given doc count (embeddings at 2n/5 vectors, the 10× ratio) under
-    // the SPARK_GRAFT_SCALING_HEAPS distribution flag. This is how the
-    // two-decade exponent fits below get SAME-DISTRIBUTION points.
-    val sweepDirs: Seq[String] = sys.env.get("SPARK_GRAFT_SCALING_TIERS") match {
-      case Some(spec) =>
-        spec.split(",").toSeq.map { kv =>
-          val Array(d, n) = kv.split("=")
-          val nd = n.toLong
-          if (!new java.io.File(s"$d/documents.parquet").exists()) {
-            println(s"[scaling] generating tier $d ($nd docs, heaps=$heapsGen)")
-            generate(spark, d, nd, heapsGen)
-          }
-          if (!new java.io.File(s"$d/embeddings.parquet").exists()) {
-            println(s"[scaling] generating tier embeddings at $d (${math.max(nd * 2 / 5, 100L)} vectors)")
-            generateEmb(spark, d, math.max(nd * 2 / 5, 100L))
-          }
-          d
-        }
-      case None => Seq("/root/testdata/sf0.1", tenxDir)
+    // noop sink, not count(): count() lets Catalyst prune projections
+    // and even eliminate unique-key outer joins (q94's rebuild side
+    // vanished entirely — 0.3 s for a query whose work is the md5
+    // reassembly), under-reporting expression-heavy queries. Same
+    // rationale as Bench. `df` is built inside the clock, as in Bench.
+    def noopSeconds(df: => DataFrame): Double = {
+      val t0 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
     }
+    // median of 3 noop-sink runs (Bench.measure at sweep start)
+    def median3(df: => DataFrame): Double =
+      graft.Bench.measure(0.0, () => noopSeconds(df))._2
+
+    // SPARK_GRAFT_SCALING_TIERS="/tmp/h50k=50000,/tmp/h500k=500000" is
+    // the tier ladder, default the sf0.1 test data plus a generated 10×
+    // (50k-doc) corpus. Each missing tier is generated with its doc
+    // count (embeddings at 2n/5 vectors, the 10× ratio) under the
+    // SPARK_GRAFT_SCALING_HEAPS distribution flag; an existing dir is
+    // read as is. Generated tiers are how the two-decade exponent fits
+    // below get SAME-DISTRIBUTION points.
+    val sweepDirs: Seq[String] = sys.env
+      .getOrElse("SPARK_GRAFT_SCALING_TIERS", "/root/testdata/sf0.1=0,/tmp/graft_scaling_10x=50000")
+      .split(",").toSeq.map { kv =>
+        val Array(d, n) = kv.split("=")
+        val nd = n.toLong
+        if (!new java.io.File(s"$d/documents.parquet").exists()) {
+          require(nd > 0, s"tier $d has no documents.parquet to read and no doc count to generate")
+          println(s"[scaling] generating tier $d ($nd docs, heaps=$heapsGen)")
+          generate(spark, d, nd, heapsGen)
+        }
+        if (!new java.io.File(s"$d/embeddings.parquet").exists()) {
+          println(s"[scaling] generating tier embeddings at $d (${math.max(nd * 2 / 5, 100L)} vectors)")
+          generateEmb(spark, d, math.max(nd * 2 / 5, 100L))
+        }
+        d
+      }
 
     // per-tier stats for the exponent fit: dir -> (nDocs, parallel
     // efficiency measured right before that tier's sweep); medians keyed
@@ -297,62 +294,64 @@ object ScalingBench {
 
     // PEAK per-task execution memory per measured query (max over all
     // tasks of the query's 3 runs) — the "partitions fit in executor
-    // memory" claim as a number instead of a plan argument. Same
-    // listener mechanism the as-of block uses; peakExecutionMemory is
-    // the task's high-water mark across its operators (sort/agg/join
-    // buffers), i.e. the per-task budget a cluster executor must grant.
-    val peakTaskMem = new java.util.concurrent.atomic.AtomicLong(0L)
-    val memListener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null)
-          peakTaskMem.accumulateAndGet(m.peakExecutionMemory, (a, b) => math.max(a, b))
-      }
-    }
-    spark.sparkContext.addSparkListener(memListener)
-
-    // SPARK_GRAFT_SCALING_ONLY=q121b,q123 restricts the sweep while
-    // iterating — the SAME rule as Verify's SPARK_GRAFT_ONLY
-    // (graft.QuerySelect: exact name or non-digit-extending prefix).
-    val only = graft.QuerySelect.parse(sys.env.get("SPARK_GRAFT_SCALING_ONLY"))
-    val selected = queries.filter(q =>
-      only.forall(graft.QuerySelect.matches(_, q)))
+    // memory" claim as a number instead of a plan argument — and the
+    // composed pipeline's per-stage shuffle bytes, from one listener
+    // for the whole run.
+    val stats = new StageStats(spark.sparkContext)
 
     for (dir <- sweepDirs) {
       val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
       val pe = graft.Bench.parallelEfficiency()
       tierStats(dir) = (nDocs, pe)
       println(f"[scaling] corpus $dir: $nDocs docs, parallel_efficiency=$pe%.2f")
-      for (q <- selected) {
-        // noop sink, not count(): count() lets Catalyst prune projections
-        // and even eliminate unique-key outer joins (q94's rebuild side
-        // vanished entirely — 0.3 s for a query whose work is the md5
-        // reassembly), under-reporting expression-heavy queries. Same
-        // rationale as Bench. Row counts are read once, outside timing.
+      def docs() = spark.read.parquet(s"$dir/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      // one tier line; `key` (empty = none) records the median for the
+      // exponent fit
+      def report(label: String, key: String, med: Double, tail: String): Unit = {
+        if (key.nonEmpty) tierMedians((key, dir)) = med
+        println(f"[scaling] $label $dir%-28s median=$med%7.2f s" +
+          f" eff=${med * pe}%7.2f core-s$tail")
+      }
+      // a pair relation's median, found pairs and planted recall: the
+      // recovered (id-1, id) mutations for id%50==3, id>0, the ground
+      // truth this generator embeds
+      def reportPairs(label: String, key: String, pairs: () => DataFrame): Unit = {
+        reclaim()
+        val found = pairs().persist()
+        val nFound = found.count()
+        val planted = found.filter(
+          col("id_b") === col("id_a") + 1 && col("id_b") % 50 === 3).count()
+        found.unpersist(blocking = false)
+        report(label, key, median3(pairs()),
+          f" rows=$nFound%-7d planted=$planted/${nDocs / 50}")
+      }
+      // q66b-shape forced-distributed clustering over a persisted pair set
+      def reportCc(label: String, pairs: () => DataFrame): Unit = {
+        reclaim()
+        val p = pairs().persist(); p.count()
+        val med = median3(Dedup.connectedComponents(p, smallGraphMaxEdges = 0L))
+        p.unpersist(blocking = false)
+        report(label, label.trim, med, s" rounds=${Dedup.lastDistributedRounds}")
+      }
+
+      for (q <- sweep if selects(q)) {
         // Cached intermediates from PREVIOUS queries are dropped first —
         // accumulated storage pressure across the (growing) query list
         // slowed later queries ~2× via eviction/GC, which is measurement
-        // noise, not operator cost.
+        // noise, not operator cost. Row counts are read once, outside
+        // timing.
         reclaim()
         val rows = SparkEntry.queries(q)(spark, dir).count()
-        peakTaskMem.set(0L) // count() above warms plans; measure the runs
-        val runs = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          SparkEntry.queries(q)(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          (sec, rows)
-        }
+        stats.reset() // count() above warms plans; measure the runs
+        val med = median3(SparkEntry.queries(q)(spark, dir))
         val extra =
           if (q.startsWith("q66b")) s" rounds=${Dedup.lastDistributedRounds}"
           else if (q.startsWith("q143") || q.startsWith("q144"))
             s" rounds=${graft.operators.SuffixIndex.lastRounds}"
           else ""
-        val med = median(runs.map(_._1))
-        tierMedians((q, dir)) = med
-        println(f"[scaling] $q%-28s $dir%-28s median=$med%7.2f s" +
-          f" eff=${med * pe}%7.2f core-s rows=${runs.head._2}%-7d" +
-          f" peakTaskMem=${peakTaskMem.get() / 1024 / 1024}MiB$extra")
+        report(f"$q%-28s", q, med, f" rows=$rows%-7d" +
+          f" peakTaskMem=${stats.peakTaskMemory / 1024 / 1024}MiB$extra")
       }
 
       // BAND-BUCKET DIAGNOSTIC (select q194_bucket_histogram): per
@@ -361,55 +360,38 @@ object ScalingBench {
       // band relation, no pair join, so it is safe to run at tiers where
       // the join itself would exhaust disk. This is how the candidate
       // explosion is attributed to data (hot buckets) instead of guessed
-      // from sampled-pair Jaccard models.
-      if (only.forall(graft.QuerySelect.matches(_, "q194_bucket_histogram"))) {
+      // from sampled-pair Jaccard models. The TOKEN-shingle row is the
+      // universe-growing fix for the saturation the char-gram rows
+      // measure, read off the same metric; its distinct-shingle universe
+      // is printed too.
+      if (selects("q194_bucket_histogram")) {
         import graft.operators.TextHashing.LshBanding
-        import org.apache.spark.sql.functions.{count => fcount, lit => flit, sum => fsum, max => fmax, col => fcol}
-        val sets = Dedup.gramSets(
-          spark.read.parquet(s"$dir/documents.parquet")
-            .select(col("doc_id"), col("text")), "doc_id", "text").persist()
+        import org.apache.spark.sql.functions.{count, explode, expr, lit, max, sum}
+        val charSets = Dedup.gramSets(docs(), "doc_id", "text").persist()
+        val tokenSets = Dedup.tokenShingleSets(docs(), "doc_id", "text").persist()
         try {
-          for (b <- Seq(LshBanding.Default, LshBanding.Scaled)) {
+          for ((label, sets, b, wide) <- Seq(
+              ("q194_bucket_histogram (", charSets, LshBanding.Default, false),
+              ("q194_bucket_histogram (", charSets, LshBanding.Scaled, false),
+              ("q199_bucket_histogram (tokens ", tokenSets, LshBanding.Scaled, true))) {
             val sizes = Dedup.bandRelation(
-                Dedup.signaturesFromSets(sets, b), sizeAware = false, b)
-              .groupBy(fcol("sig")).agg(fcount(flit(1)).as("s"))
-            val agg = sizes.agg(
-              fsum(org.apache.spark.sql.functions.expr("s * (s - 1) div 2"))
-                .as("cand"),
-              fmax(fcol("s")).as("maxb"),
-              fcount(flit(1)).as("buckets")).collect()(0)
-            val top = sizes.orderBy(fcol("s").desc).limit(10).collect()
+                Dedup.signaturesFromSets(sets, b, wide), sizeAware = false, b)
+              .groupBy(col("sig")).agg(count(lit(1)).as("s"))
+            val agg = sizes.agg(sum(expr("s * (s - 1) div 2")).as("cand"),
+              max(col("s")).as("maxb"), count(lit(1)).as("buckets")).collect()(0)
+            val top = sizes.orderBy(col("s").desc).limit(10).collect()
               .map(_.getLong(1)).mkString(",")
-            println(s"[scaling] q194_bucket_histogram (${b.numBands}x${b.rowsPerBand}) $dir " +
+            val uni = if (wide)
+              s" universe=${sets.select(explode(col("gs")).as("h")).distinct().count()}"
+              else ""
+            println(s"[scaling] $label${b.numBands}x${b.rowsPerBand}) $dir " +
               s"cand=${agg.getLong(0)} maxBucket=${agg.getLong(1)} " +
-              s"buckets=${agg.getLong(2)} top10=$top")
+              s"buckets=${agg.getLong(2)}$uni top10=$top")
           }
-        } finally sets.unpersist(blocking = false)
-        // TOKEN-shingle profile over the same corpus: the universe-growing
-        // fix for the saturation the char-gram rows above measure. Same
-        // Σ C(size, 2) candidate accounting, so the collapse (or not) of
-        // the n² term is read off the same metric.
-        val tsets = Dedup.tokenShingleSets(
-          spark.read.parquet(s"$dir/documents.parquet")
-            .select(col("doc_id"), col("text")), "doc_id", "text").persist()
-        try {
-          val b = LshBanding.Scaled
-          val sizes = Dedup.bandRelation(
-              Dedup.signaturesFromSets(tsets, b, wide = true), sizeAware = false, b)
-            .groupBy(fcol("sig")).agg(fcount(flit(1)).as("s"))
-          val agg = sizes.agg(
-            fsum(org.apache.spark.sql.functions.expr("s * (s - 1) div 2"))
-              .as("cand"),
-            fmax(fcol("s")).as("maxb"),
-            fcount(flit(1)).as("buckets")).collect()(0)
-          val top = sizes.orderBy(fcol("s").desc).limit(10).collect()
-            .map(_.getLong(1)).mkString(",")
-          val uni = tsets.select(org.apache.spark.sql.functions
-            .explode(fcol("gs")).as("h")).distinct().count()
-          println(s"[scaling] q199_bucket_histogram (tokens ${b.numBands}x${b.rowsPerBand}) $dir " +
-            s"cand=${agg.getLong(0)} maxBucket=${agg.getLong(1)} " +
-            s"buckets=${agg.getLong(2)} universe=$uni top10=$top")
-        } finally tsets.unpersist(blocking = false)
+        } finally {
+          charSets.unpersist(blocking = false)
+          tokenSets.unpersist(blocking = false)
+        }
       }
 
       // q144 COST ATTRIBUTION: one instrumented crossDocRepeats run per
@@ -418,13 +400,10 @@ object ScalingBench {
       // r12 verdict's ask. Diagnostic mode checkpoints per level, so its
       // wall time is NOT comparable to the sweep's fused run; the counts
       // are the deliverable.
-      if (only.forall(graft.QuerySelect.matches(_, "q144_lcp_repeats"))) {
+      if (selects("q144_lcp_repeats")) {
         import graft.operators.SuffixIndex
         reclaim()
-        SuffixIndex.crossDocRepeats(
-            spark.read.parquet(s"$dir/documents.parquet")
-              .select(col("doc_id"), col("text")),
-            "doc_id", "text", levelStats = true)
+        SuffixIndex.crossDocRepeats(docs(), "doc_id", "text", levelStats = true)
           .write.format("noop").mode("overwrite").save()
         val counts = SuffixIndex.lastLevelSurvivors
           .map { case (l, n) => s"$l=$n" }.mkString(" ")
@@ -436,116 +415,42 @@ object ScalingBench {
       // the planted mutations. The fingerprint universe is token-5-gram
       // md5s (Heaps-growing like q199's shingles), so the df cap should
       // rarely bite and candidates should stay near-linear.
-      if (only.forall(graft.QuerySelect.matches(_, "q196_winnow_neardup"))) {
-        // minShared sweep (r13 verdict #7): q196's 2% planted-recall
-        // misses at minShared=3 are threshold semantics on the shortest
-        // docs — measure what relaxing to 2 buys (recall) and costs
-        // (extra pair volume = the precision trade), tier by tier, so
-        // the knob is documented like the bucket cap. The gate setting
-        // (3) keeps the tierMedians key for the exponent fit.
+      // minShared sweep (r13 verdict #7): q196's 2% planted-recall misses
+      // at minShared=3 are threshold semantics on the shortest docs —
+      // measure what relaxing to 2 buys (recall) and costs (extra pair
+      // volume = the precision trade), tier by tier, so the knob is
+      // documented like the bucket cap. The gate setting (3) keeps the
+      // tierMedians key for the exponent fit.
+      if (selects("q196_winnow_neardup"))
         Seq(3, 2).foreach { ms =>
-          reclaim()
-          def wPairs() = Dedup.winnowPairs(
-            spark.read.parquet(s"$dir/documents.parquet")
-              .select(col("doc_id"), col("text")),
-            "doc_id", "text", k = 5, w = 4, minShared = ms, dfCap = 50)
-          val found = wPairs().persist()
-          val nFound = found.count()
-          val planted = found.filter(
-            col("id_b") === col("id_a") + 1 && col("id_b") % 50 === 3).count()
-          val nPlanted = nDocs / 50
-          found.unpersist(blocking = false)
-          val runs = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            wPairs().write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          val wmed = median(runs)
-          if (ms == 3) tierMedians(("q196_winnow_neardup", dir)) = wmed
-          println(f"[scaling] q196_winnow_neardup ms=$ms   $dir%-28s median=$wmed%7.2f s" +
-            f" eff=${wmed * pe}%7.2f core-s rows=$nFound%-7d" +
-            f" planted=$planted/$nPlanted")
+          reportPairs(s"q196_winnow_neardup ms=$ms  ",
+            if (ms == 3) "q196_winnow_neardup" else "",
+            () => Dedup.winnowPairs(docs(), "doc_id", "text",
+              k = 5, w = 4, minShared = ms, dfCap = 50))
         }
-      }
 
       // TOKEN-shingle pairs (select q199_dedup_minhash_tokens): the
       // uncapped universe-growing profile at every tier, with recall vs
       // the same planted 2% mutations the capped block measures — the
       // head-to-head against q194's cap-mitigated char-gram banding.
-      if (only.forall(graft.QuerySelect.matches(_, "q199_dedup_minhash_tokens"))) {
-        reclaim()
-        def tokenPairs() = Dedup.nearDupPairs(
-          spark.read.parquet(s"$dir/documents.parquet")
-            .select(col("doc_id"), col("text")),
-          "doc_id", "text", 0.7, NearDupProfile.Token).df
-        val found = tokenPairs().persist()
-        val nFound = found.count()
-        val planted = found.filter(
-          col("id_b") === col("id_a") + 1 && col("id_b") % 50 === 3).count()
-        val nPlanted = nDocs / 50
-        found.unpersist(blocking = false)
-        val runs = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          tokenPairs().write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val tmed = median(runs)
-        tierMedians(("q199_dedup_minhash_tokens", dir)) = tmed
-        println(f"[scaling] q199_dedup_minhash_tokens $dir%-28s median=$tmed%7.2f s" +
-          f" eff=${tmed * pe}%7.2f core-s rows=$nFound%-7d" +
-          f" planted=$planted/$nPlanted")
-      }
+      if (selects("q199_dedup_minhash_tokens"))
+        reportPairs("q199_dedup_minhash_tokens", "q199_dedup_minhash_tokens",
+          () => Dedup.nearDupPairs(docs(), "doc_id", "text", 0.7, NearDupProfile.Token).df)
 
       // CAPPED scaled banding (select q194_capped): the scaled profile
-      // plus the bucket-size cap (SPARK_GRAFT_SCALING_MAXBUCKET, default
-      // 500) — the configuration for gram-universe-saturated corpora
-      // where the bucket histogram shows Ω(n²) candidates under any
-      // (b, r). Reports found pairs AND recall vs the planted 2%
-      // mutation count (ids with id%50==3, id>0 — the ground truth this
-      // generator embeds), so the cap's trade is measured per tier.
-      if (only.forall(graft.QuerySelect.matches(_, "q194_capped"))) {
-        reclaim()
-        val cap = sys.env.get("SPARK_GRAFT_SCALING_MAXBUCKET")
-          .map(_.toLong).getOrElse(500L)
-        def cappedPairs() = Dedup.nearDupPairs(
-          spark.read.parquet(s"$dir/documents.parquet")
-            .select(col("doc_id"), col("text")),
-          "doc_id", "text", 0.7, NearDupProfile.CharScaled.copy(maxBucket = cap)).df
-        val found = cappedPairs().persist()
-        val nFound = found.count()
-        // planted ground truth: (id-1, id) for id%50==3 — count how many
-        // the capped run recovers
-        val planted = found.filter(
-          col("id_b") === col("id_a") + 1 && col("id_b") % 50 === 3).count()
-        val nPlanted = nDocs / 50 // ids 3, 53, ... (id 3 > 0 qualifies)
-        found.unpersist(blocking = false)
-        val runs = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          cappedPairs().write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val cmed = median(runs)
-        tierMedians(("q194_capped", dir)) = cmed
-        println(f"[scaling] q194_capped(cap=$cap)       $dir%-28s median=$cmed%7.2f s" +
-          f" eff=${cmed * pe}%7.2f core-s rows=$nFound%-7d" +
-          f" planted=$planted/$nPlanted")
-        // clustering over the capped pairs — the q66b shape at the tier
-        // where only the capped candidate stage is feasible; input is
-        // the dup-tail pair graph, so this bounds the full
-        // pairs→clusters dedup composition at the top tier
-        reclaim()
-        val cpairs = cappedPairs().persist(); cpairs.count()
-        val ccRuns = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          Dedup.connectedComponents(cpairs, smallGraphMaxEdges = 0L)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        cpairs.unpersist(blocking = false)
-        val ccm = median(ccRuns)
-        tierMedians(("q66b_cc_over_capped_pairs", dir)) = ccm
-        println(f"[scaling] q66b_cc_over_capped_pairs $dir%-28s median=$ccm%7.2f s" +
-          f" eff=${ccm * pe}%7.2f core-s rounds=${Dedup.lastDistributedRounds}")
+      // plus the bucket-size cap ([[MaxBucket]]) — the configuration for
+      // gram-universe-saturated corpora where the bucket histogram shows
+      // Ω(n²) candidates under any (b, r). Reports found pairs AND recall
+      // vs the planted 2% mutations, so the cap's trade is measured per
+      // tier; then clustering over the capped pairs — the q66b shape at
+      // the tier where only the capped candidate stage is feasible; input
+      // is the dup-tail pair graph, so this bounds the full
+      // pairs→clusters dedup composition at the top tier.
+      if (selects("q194_capped")) {
+        def cappedPairs() = Dedup.nearDupPairs(docs(), "doc_id", "text", 0.7,
+          NearDupProfile.CharScaled.copy(maxBucket = MaxBucket)).df
+        reportPairs(s"q194_capped(cap=$MaxBucket)      ", "q194_capped", () => cappedPairs())
+        reportCc("q66b_cc_over_capped_pairs", () => cappedPairs())
       }
 
       // COMPOSED end-to-end pipeline (select pipeline_composed; r13
@@ -561,97 +466,78 @@ object ScalingBench {
       // dedup pipeline consumes the survivors three times (sets, band
       // join sides, canonical join) — without the barrier each consumer
       // would re-run the lang-ID/quality scan.
-      if (only.forall(graft.QuerySelect.matches(_, "pipeline_composed"))) {
+      if (selects("pipeline_composed")) {
         import graft.operators.{Packing, TextAnalysis}
         reclaim()
-        val shufTotal = new java.util.concurrent.atomic.AtomicLong(0L)
-        val shufPeak = new java.util.concurrent.atomic.AtomicLong(0L)
-        val shufListener = new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val w = sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-            shufTotal.addAndGet(w)
-            shufPeak.accumulateAndGet(w, (a, b) => math.max(a, b))
-          }
+        def funnel() = {
+          val docs = spark.read.parquet(s"$dir/documents.parquet")
+            .select(col("doc_id"), col("source"), col("lang"), col("text"))
+          // und-fallback: the synthetic vocabulary contains no stopwords
+          // of any marker language, so the n-gram classifier abstains
+          // ("und") on every doc — fall back to the declared lang
+          // column when it does (the rule a real pipeline applies to
+          // crawl records carrying an HTML lang tag). ~20% retention,
+          // the funnel shape the composition needs; the classifier and
+          // quality scans still run at full width.
+          TextAnalysis.langPredicted(docs, "text",
+              Seq("doc_id", "source", "lang", "text"))
+            .withColumn("quality", TextAnalysis.qualityScore(length(col("text")),
+              TextAnalysis.punctRatio(col("text")), TextAnalysis.meanWordLen(col("text"))))
+            .filter((col("predicted") === "en" ||
+              (col("predicted") === "und" && col("lang") === "en")) &&
+              col("quality") >= 0.5)
+            .select(col("doc_id"), col("source"), col("text"))
+            .localCheckpoint()
         }
-        spark.sparkContext.addSparkListener(shufListener)
-        try {
-          def funnel() = {
-            val docs = spark.read.parquet(s"$dir/documents.parquet")
-              .select(col("doc_id"), col("source"), col("lang"), col("text"))
-            // und-fallback: the synthetic vocabulary contains no stopwords
-            // of any marker language, so the n-gram classifier abstains
-            // ("und") on every doc — fall back to the declared lang
-            // column when it does (the rule a real pipeline applies to
-            // crawl records carrying an HTML lang tag). ~20% retention,
-            // the funnel shape the composition needs; the classifier and
-            // quality scans still run at full width.
-            TextAnalysis.langPredicted(docs, "text",
-                Seq("doc_id", "source", "lang", "text"))
-              .withColumn("quality", TextAnalysis.qualityScore(length(col("text")),
-                TextAnalysis.punctRatio(col("text")), TextAnalysis.meanWordLen(col("text"))))
-              .filter((col("predicted") === "en" ||
-                (col("predicted") === "und" && col("lang") === "en")) &&
-                col("quality") >= 0.5)
-              .select(col("doc_id"), col("source"), col("text"))
-              .localCheckpoint()
-          }
-          // r14 verdict #5: the measured path IS the product path — the
-          // dedup stage goes through nearDupPairsAutoManaged (probe → dispatch),
-          // not a hand-picked profile; the probe's recommendation is
-          // printed per tier so SCALING.md can record whether it matches
-          // the hand-pick (token, uncapped) that r13/r14 measured.
-          def composed(survivors: org.apache.spark.sql.DataFrame) = {
-            val pairs = Dedup.nearDupPairsAutoManaged(survivors, "doc_id", "text", 0.7).df
-            val clusters = Dedup.connectedComponents(pairs)
-              .withColumnRenamed("doc_id", "_cid")
-            val canonical = survivors
-              .join(clusters, survivors("doc_id") === col("_cid"), "left")
-              .filter(col("rep_id").isNull || col("rep_id") === survivors("doc_id"))
-              .drop("_cid", "rep_id")
-            Packing.emitChunks(canonical, col("source"), col("doc_id"),
-              col("text"), 512)
-          }
-          // instrumented pass: per-stage retention (one extra count per
-          // boundary; the timed runs below carry none of these actions)
-          val s0 = funnel()
-          val n1 = s0.count()
-          val pairs0 = Dedup.nearDupPairsAutoManaged(s0, "doc_id", "text", 0.7).df.persist()
-          val rec = Dedup.lastRecommendation.get
-          println(f"[scaling] pipeline_composed probe $dir: profile=${rec.profile} " +
-            f"maxBucket=${rec.maxBucket} newGramRate=${rec.newGramRate}%.4f " +
-            f"nonAsciiRate=${rec.nonAsciiRate}%.4f estPairsPerDoc=${rec.estPairsPerDoc}%.2f " +
-            f"(hand-pick was token/uncapped; match=${rec.profile == "token" && rec.maxBucket == 0L})")
-          val nPairs = pairs0.count()
-          val clusters0 = Dedup.connectedComponents(pairs0)
+        // r14 verdict #5: the measured path IS the product path — the
+        // dedup stage goes through nearDupPairsAutoManaged (probe → dispatch),
+        // not a hand-picked profile; the probe's recommendation is
+        // printed per tier so SCALING.md can record whether it matches
+        // the hand-pick (token, uncapped) that r13/r14 measured.
+        def canonical(survivors: DataFrame, pairs: DataFrame) = {
+          val clusters = Dedup.connectedComponents(pairs)
             .withColumnRenamed("doc_id", "_cid")
-          val canon0 = s0.join(clusters0, s0("doc_id") === col("_cid"), "left")
-            .filter(col("rep_id").isNull || col("rep_id") === s0("doc_id"))
-            .drop("_cid", "rep_id").persist()
-          val n2 = canon0.count()
-          val n3 = Packing.emitChunks(canon0, col("source"), col("doc_id"),
-            col("text"), 512).count()
-          pairs0.unpersist(blocking = false)
-          canon0.unpersist(blocking = false)
-          println(f"[scaling] pipeline_composed retention $dir: docs=$nDocs -> " +
-            f"funnel=$n1 -> pairs=$nPairs -> canonical=$n2 -> chunks=$n3")
-          // timed end-to-end runs (scan through packed emission)
-          val runs = (1 to 3).map { _ =>
-            reclaim()
-            shufTotal.set(0L); shufPeak.set(0L)
-            val t0 = System.nanoTime()
-            composed(funnel()).write.format("noop").mode("overwrite").save()
-            val dt = (System.nanoTime() - t0) / 1e9
-            println(f"[scaling] pipeline_composed run: $dt%7.2f s " +
-              f"shuffle_write=${shufTotal.get() / 1048576.0}%9.1f MiB " +
-              f"peak_stage=${shufPeak.get() / 1048576.0}%9.1f MiB")
-            dt
+          survivors.join(clusters, survivors("doc_id") === col("_cid"), "left")
+            .filter(col("rep_id").isNull || col("rep_id") === survivors("doc_id"))
+            .drop("_cid", "rep_id")
+        }
+        def pack(canon: DataFrame) =
+          Packing.emitChunks(canon, col("source"), col("doc_id"), col("text"), 512)
+        // instrumented pass: per-stage retention (one extra count per
+        // boundary; the timed runs below carry none of these actions)
+        val s0 = funnel()
+        val n1 = s0.count()
+        val pairs0 = Dedup.nearDupPairsAutoManaged(s0, "doc_id", "text", 0.7).df.persist()
+        val rec = Dedup.lastRecommendation.get
+        println(f"[scaling] pipeline_composed probe $dir: profile=${rec.profile} " +
+          f"maxBucket=${rec.maxBucket} newGramRate=${rec.newGramRate}%.4f " +
+          f"nonAsciiRate=${rec.nonAsciiRate}%.4f estPairsPerDoc=${rec.estPairsPerDoc}%.2f " +
+          f"(hand-pick was token/uncapped; match=${rec.profile == "token" && rec.maxBucket == 0L})")
+        val nPairs = pairs0.count()
+        val canon0 = canonical(s0, pairs0).persist()
+        val n2 = canon0.count()
+        val n3 = pack(canon0).count()
+        pairs0.unpersist(blocking = false)
+        canon0.unpersist(blocking = false)
+        println(f"[scaling] pipeline_composed retention $dir: docs=$nDocs -> " +
+          f"funnel=$n1 -> pairs=$nPairs -> canonical=$n2 -> chunks=$n3")
+        // timed end-to-end runs (scan through packed emission)
+        val mib = 1048576.0
+        val (_, pmed) = graft.Bench.measure(0.0, () => {
+          reclaim()
+          stats.reset()
+          val dt = noopSeconds {
+            val survivors = funnel()
+            pack(canonical(survivors,
+              Dedup.nearDupPairsAutoManaged(survivors, "doc_id", "text", 0.7).df))
           }
-          val pmed = median(runs)
-          tierMedians(("pipeline_composed", dir)) = pmed
-          println(f"[scaling] pipeline_composed         $dir%-28s median=$pmed%7.2f s" +
-            f" eff=${pmed * pe}%7.2f core-s")
-        } finally spark.sparkContext.removeSparkListener(shufListener)
+          val shuffleWrites = stats.stages.map(_.shuffleWriteBytes)
+          println(f"[scaling] pipeline_composed run: $dt%7.2f s " +
+            f"shuffle_write=${shuffleWrites.sum / mib}%9.1f MiB " +
+            f"peak_stage=${shuffleWrites.maxOption.getOrElse(0L) / mib}%9.1f MiB")
+          dt
+        })
+        report("pipeline_composed        ", "pipeline_composed", pmed, "")
       }
 
       // The SCALED banding profile (q194 shape) + clustering over its
@@ -659,35 +545,14 @@ object ScalingBench {
       // the default (4,4) banding is candidate-bound (SCALING.md). Pairs
       // and the q66b-shape forced-distributed CC are timed separately so
       // the exponent fit attributes cost to the right stage.
-      if (only.forall(graft.QuerySelect.matches(_, "q194_dedup_minhash_scaled"))) {
+      if (selects("q194_dedup_minhash_scaled")) {
         reclaim()
-        def scaledPairs() = Dedup.nearDupPairs(
-          spark.read.parquet(s"$dir/documents.parquet")
-            .select(col("doc_id"), col("text")),
-          "doc_id", "text", 0.7, NearDupProfile.CharScaled).df
+        def scaledPairs() = Dedup.nearDupPairs(docs(), "doc_id", "text", 0.7,
+          NearDupProfile.CharScaled).df
         val pairRows = scaledPairs().count()
-        val pairRuns = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          scaledPairs().write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val pmed = median(pairRuns)
-        tierMedians(("q194_dedup_minhash_scaled", dir)) = pmed
-        println(f"[scaling] q194_dedup_minhash_scaled  $dir%-28s median=$pmed%7.2f s" +
-          f" eff=${pmed * pe}%7.2f core-s rows=$pairRows%-7d")
-        reclaim()
-        val pairs = scaledPairs().persist(); pairs.count()
-        val ccRuns = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          Dedup.connectedComponents(pairs, smallGraphMaxEdges = 0L)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        pairs.unpersist(blocking = false)
-        val cmed = median(ccRuns)
-        tierMedians(("q66b_cc_over_scaled_pairs", dir)) = cmed
-        println(f"[scaling] q66b_cc_over_scaled_pairs  $dir%-28s median=$cmed%7.2f s" +
-          f" eff=${cmed * pe}%7.2f core-s rounds=${Dedup.lastDistributedRounds}")
+        report("q194_dedup_minhash_scaled ", "q194_dedup_minhash_scaled",
+          median3(scaledPairs()), f" rows=$pairRows%-7d")
+        reportCc("q66b_cc_over_scaled_pairs ", () => scaledPairs())
       }
 
       // THE incremental claim (q81 shape): a FIXED batch against a
@@ -699,29 +564,21 @@ object ScalingBench {
       // (id uniqueness across index and batch is the operator contract).
       // Index build/persist happens OUTSIDE the timed region — that is the
       // point: at 100 TB you index once and pay per-batch forever after.
-      if (only.forall(graft.QuerySelect.matches(_, "q81_incremental_fixedbatch"))) {
+      if (selects("q81_incremental_fixedbatch")) {
         import spark.implicits._
         val batch = spark.range(500L).map(id => (id, docText(id, 50000L)))
           .toDF("doc_id", "text")
-        val existing = spark.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id"), col("text")).filter(col("doc_id") >= 500L)
+        val existing = docs().filter(col("doc_id") >= 500L)
         reclaim()
         val index = Dedup.dedupIndex(existing, "doc_id", "text")
         val bands = index.bands.persist(); bands.count()
         val sets = index.sets.persist(); sets.count()
         val idx = Dedup.DedupIndex(bands, sets)
         val rows = Dedup.incrementalPairs(idx, batch, "doc_id", "text", 0.7).count()
-        val runs = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          Dedup.incrementalPairs(idx, batch, "doc_id", "text", 0.7)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
+        val med = median3(Dedup.incrementalPairs(idx, batch, "doc_id", "text", 0.7))
         bands.unpersist(blocking = false); sets.unpersist(blocking = false)
-        val bmed = median(runs)
-        tierMedians(("q81_incremental_fixedbatch", dir)) = bmed
-        println(f"[scaling] q81_incremental_fixedbatch $dir%-28s median=$bmed%7.2f s" +
-          f" eff=${bmed * tierStats(dir)._2}%7.2f core-s rows=$rows%-7d")
+        report("q81_incremental_fixedbatch", "q81_incremental_fixedbatch", med,
+          f" rows=$rows%-7d")
       }
     }
 
@@ -756,10 +613,9 @@ object ScalingBench {
     // stage is the one window pass that builds the edges. Edge count is
     // printed to pin the saturation.
     for (dir <- Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-         if only.forall(graft.QuerySelect.matches(_, "q114_pagerank"))) {
+         if selects("q114_pagerank")) {
       reclaim()
       val nEv = spark.read.parquet(s"$dir/events.parquet").count()
-      val q = SparkEntry.queries("q114_pagerank")
       val edges = {
         import graft.operators.GraphRank
         val ev = graft.Tables.load(spark, dir, "events")
@@ -768,47 +624,24 @@ object ScalingBench {
               col("props"), "\"k\":\\s*(\\d+)", 1).cast("long").as("item"))
         GraphRank.transitionEdges(ev, "item", "user_id", Seq("ts", "event_id")).count()
       }
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        q(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[scaling] q114_pagerank $dir%-28s median=${median(runs)}%7.2f s" +
+      val med = median3(SparkEntry.queries("q114_pagerank")(spark, dir))
+      println(f"[scaling] q114_pagerank $dir%-28s median=$med%7.2f s" +
         f" events=$nEv%-8d edges=$edges%-7d")
     }
 
-    // Triangles (q118) + label propagation (q124) on a SKEWED synthetic
-    // graph — one celebrity vertex adjacent to 30% of ALL vertices. The
-    // claim under measurement is the Latapy degree-ordered orientation
-    // bound: max ORIENTED out-degree stays O(√m) even though the raw
-    // degree distribution has a 0.3·|V| whale, so the wedge stage — the
-    // term a naive neighbor join explodes on — is bounded. Counters
-    // (wedges, max outdeg) come from GraphRank.lastWedgeCount /
-    // lastMaxOutDegree, computed analytically off the oriented relation.
-    // Edges are pure xxhash64 functions of the edge index — both scales
-    // and both runs see identical graphs, generated in executors.
     // As-of join: the union+window REWRITE (q90 shape) vs the NATIVE
     // merge-walk operator (q90b shape) on the same synthetic event
     // stream at 100k / 1M / 10M events. Both are timed AND measured for
-    // peak per-task execution memory (SparkListener, max over tasks):
+    // peak per-task execution memory (StageStats, max over tasks):
     // the claim the native operator exists for is that its probe side
     // buffers ONE row per key behind the sort, where the rewrite's
     // union must co-sort both streams and carry the window state —
     // a memory difference, not only a time one. Events are pure
     // xxhash64 functions of the row id: identical across runs/scales.
-    if (only.forall(graft.QuerySelect.matches(_, "q90_asof_scaling"))) {
+    if (selects("q90_asof_scaling")) {
       import graft.operators.Temporal
       import org.apache.spark.sql.functions.{lit, pmod, when, xxhash64, timestamp_seconds}
-      val peak = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null)
-            peak.accumulateAndGet(m.peakExecutionMemory, (a, b) => math.max(a, b))
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      def synthEvents(n: Long): org.apache.spark.sql.DataFrame =
+      def synthEvents(n: Long): DataFrame =
         spark.range(n).select(
           col("id").as("event_id"),
           pmod(xxhash64(col("id"), lit(7)), lit(n / 100)).as("user_id"),
@@ -841,22 +674,26 @@ object ScalingBench {
         for ((label, mk) <- Seq("q90_asof_rewrite" -> (() => rewrite()),
                                 "q90b_asof_native" -> (() => native()))) {
           reclaim(); ev.persist(); ev.count()
-          peak.set(0L)
-          val runs = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            mk().write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"[scaling] $label%-18s events=$n%-9d median=${median(runs)}%7.2f s" +
-            f" peakTaskMem=${peak.get() / 1024 / 1024} MiB")
+          stats.reset()
+          val med = median3(mk())
+          println(f"[scaling] $label%-18s events=$n%-9d median=$med%7.2f s" +
+            f" peakTaskMem=${stats.peakTaskMemory / 1024 / 1024} MiB")
         }
         ev.unpersist(blocking = false)
       }
-      spark.sparkContext.removeSparkListener(listener)
     }
 
-    if (only.forall(t => graft.QuerySelect.matches(t, "q118_triangles") ||
-        graft.QuerySelect.matches(t, "q124_label_prop"))) {
+    // Triangles (q118) + label propagation (q124) on a SKEWED synthetic
+    // graph — one celebrity vertex adjacent to 30% of ALL vertices. The
+    // claim under measurement is the Latapy degree-ordered orientation
+    // bound: max ORIENTED out-degree stays O(√m) even though the raw
+    // degree distribution has a 0.3·|V| whale, so the wedge stage — the
+    // term a naive neighbor join explodes on — is bounded. Counters
+    // (wedges, max outdeg) come from GraphRank.lastWedgeCount /
+    // lastMaxOutDegree, computed analytically off the oriented relation.
+    // Edges are pure xxhash64 functions of the edge index — both scales
+    // and both runs see identical graphs, generated in executors.
+    if (selects("q118_triangles") || selects("q124_label_prop")) {
       import graft.operators.GraphRank
       import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
       // SPARK_GRAFT_SCALING_GRAPH100X=true adds the third decade
@@ -876,27 +713,18 @@ object ScalingBench {
         val edges = rand.union(celeb)
         val m = edges.count()
         reclaim()
-        val triRuns = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          GraphRank.triangleCounts(edges)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
+        val triMed = median3(GraphRank.triangleCounts(edges))
         println(f"[scaling] q118_triangles_skew |V|=$nV%-7d m=$m%-8d" +
-          f" median=${median(triRuns)}%7.2f s wedges=${GraphRank.lastWedgeCount}" +
+          f" median=$triMed%7.2f s wedges=${GraphRank.lastWedgeCount}" +
           f" maxOutDeg=${GraphRank.lastMaxOutDegree}" +
           f" sqrtM=${math.sqrt(m.toDouble).toLong}")
         reclaim()
-        val lpaRuns = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          GraphRank.labelPropagation(edges, 4)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
+        val lpaMed = median3(GraphRank.labelPropagation(edges, 4))
         println(f"[scaling] q124_label_prop_skew |V|=$nV%-7d m=$m%-8d" +
-          f" median=${median(lpaRuns)}%7.2f s rounds=4")
+          f" median=$lpaMed%7.2f s rounds=4")
       }
     }
+    stats.close()
     spark.stop()
   }
 }

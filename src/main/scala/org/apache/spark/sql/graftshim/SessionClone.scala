@@ -31,3 +31,9 @@ object ConfAccess {
   def numShufflePartitions(spark: SparkSession): Int =
     spark.sessionState.conf.numShufflePartitions
 }
+
+/** Access shim for `SparkContext.listenerBus` (`private[spark]`): blocks
+  * until every event posted so far has reached every listener. */
+object ListenerDrain {
+  def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

@@ -87,20 +87,6 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(Dedup.lastDistributedRounds == 0)
   }
 
-  test("checkpoint cadence does not change answers (1 vs 2 vs 3)") {
-    val rnd = new scala.util.Random(11)
-    val edges = Seq.fill(300)((rnd.nextInt(400).toLong, rnd.nextInt(400).toLong))
-      .filter(e => e._1 != e._2)
-    val df = edges.toDF("id_a", "id_b")
-    val results = Seq("1", "2", "3").map { k =>
-      spark.conf.set("graft.dedup.checkpointEvery", k)
-      try Dedup.connectedComponents(df, smallGraphMaxEdges = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally spark.conf.unset("graft.dedup.checkpointEvery")
-    }
-    assert(results.distinct.size == 1)
-  }
-
   test("skew stress: one giant star (1e5 edges into a single hub) converges in few rounds") {
     // Worst-case key skew for the groupBy(u)/join(u) passes: EVERY edge
     // shares the hub vertex. large-star's re-attach-to-min handles the

@@ -1,0 +1,32 @@
+package graft
+
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.tools.StageStats
+
+/** The diagnostics mains' one stage-statistics listener: every read sees
+  * the stages of the action before it, reset() clears, close() stops. */
+class StageStatsSpec extends AnyFunSuite {
+  private val spark = TestSpark.spark
+
+  private def repartitionSort(): Unit =
+    spark.range(0, 20000, 1, 4).repartition(4, col("id") % 7)
+      .sort(col("id").desc).write.format("noop").mode("overwrite").save()
+
+  test("a repartition+sort job records shuffle-writing stages and peak task memory; reset clears; close stops") {
+    val stats = new StageStats(spark.sparkContext)
+    try {
+      repartitionSort()
+      val stages = stats.stages
+      assert(stages.exists(_.shuffleWriteBytes > 0), stages)
+      assert(stages.forall(_.tasks > 0), stages)
+      assert(stats.peakTaskMemory > 0)
+
+      stats.reset()
+      assert(stats.stages.isEmpty && stats.peakTaskMemory == 0L)
+    } finally stats.close()
+    repartitionSort()
+    assert(stats.stages.isEmpty && stats.peakTaskMemory == 0L)
+  }
+}

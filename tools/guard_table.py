@@ -3,7 +3,7 @@
 
 Reads the four diagnostic Bench subset captures
 (/tmp/guard_on_{1,2}.json, /tmp/guard_off_{1,2}.json — produced with
-SPARK_GRAFT_BENCH_ONLY over the dedup gates, SPARK_GRAFT_SESSION_CONF
+SPARK_GRAFT_ONLY over the dedup gates, SPARK_GRAFT_SESSION_CONF
 graft.dedup.candidatePairBudget=0 for the "off" runs) and prints the
 per-gate min-of-medians comparison — min, not mean: the minimum over
 interleaved captures is the least-contended observation of each
