@@ -16,16 +16,17 @@ import org.apache.spark.sql.functions._
  *   word count, map-side combinable) whose 1-row argmax is COLLECTED
  *   (a bounded driver pull of one row — the codebook-pull class the
  *   collect audit sanctions) and inlined into the row-local array
- *   rewrite as literals, plus the rewrite's lineage-truncation barrier.
- *   That is 2 driver-visible jobs per round; the earlier form spent 3
- *   (checkpoint of the 1-row argmax + its broadcast-exchange collect +
- *   the rewrite barrier), which made this the sweep's most
- *   job-count-sensitive query under driver/scheduler-latency drift
- *   (r15 verdict #3 — the q140 audit). No round touches corpus-sized
- *   data either way; the learned merge list itself is driver-side and
- *   costs zero jobs to emit.
+ *   rewrite as literals. That is 2 driver-visible jobs per round: the
+ *   pair-count shuffle and the argmax pull. The rewrite's lineage
+ *   barrier is lazy, so the next round's pair-count shuffle fills its
+ *   blocks and the barrier costs no job of its own (an eager barrier
+ *   would be a third job per round; the last round's rewrite is never
+ *   computed for [[bpeMerges]]). No round touches corpus-sized data;
+ *   the learned merge list itself is driver-side and costs zero jobs
+ *   to emit.
  * - Lineage is truncated per round (the labelPropagation doctrine), so
- *   plan depth stays O(1) per round instead of O(rounds).
+ *   plan depth stays O(1) per round instead of O(rounds), and each
+ *   iterate's blocks are dropped once the iterate after it has filled.
  *
  * Determinism contract (what lets DuckDB replay it): the winning pair is
  * argmax by (count DESC, sym_a ASC, sym_b ASC) — a total order; the
@@ -46,7 +47,10 @@ object Bpe {
     * merge — driver-side values, the 1-row-per-round argmax collects —
     * plus the vocabulary rewritten through all of them. */
   private case class Learned(bests: Seq[(Int, String, String, Long)],
-                             vocab: DataFrame)
+                             vocab: DataFrame,
+                             /** The iterate `vocab` is computed from:
+                               * its blocks live until `vocab` is read. */
+                             vocabSource: DataFrame)
 
   private def learn(docs: DataFrame, text: String, rounds: Int): Learned = {
     require(rounds >= 1, "need at least one merge round")
@@ -54,24 +58,29 @@ object Bpe {
       .select(explode(split(col(text), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
-    // initial symbol inventory: one character per symbol
-    var syms = Dedup.truncateLineage(
+    // initial symbol inventory: one character per symbol. Every barrier
+    // is LAZY: the next round's pair count is the action that fills its
+    // blocks, so a round pays the pair count and nothing else.
+    var syms = Dedup.truncateLineageLazy(
       words.select(col("w"), col("c"), split(col("w"), "").as("syms")))
+    // the iterate the current `syms` is computed from: its blocks are
+    // read until the pair count below has filled `syms`
+    var prev: DataFrame = null
     val merges = (1 to rounds).map { r =>
       val pairs = syms.select(col("c"), explode(expr(
         """transform(slice(syms, 1, size(syms) - 1),
           |  (s, i) -> named_struct('sa', s, 'sb', element_at(syms, i + 2)))"""
           .stripMargin)).as("pr"))
       // the 1-row argmax is pulled to the driver (bounded, codebook-pull
-      // class) and the winning pair enters the rewrite as LITERALS — one
-      // job here, one for the rewrite barrier below, and nothing else
-      // per round (r15 verdict #3: the checkpointed-best + broadcast
-      // form cost a third job per round for no answer-path benefit)
+      // class) and the winning pair enters the rewrite as LITERALS: the
+      // pair-count shuffle (which fills `syms`) and this pull are the
+      // round's only jobs
       val bestRow = pairs
         .groupBy(col("pr.sa").as("sa"), col("pr.sb").as("sb"))
         .agg(sum(col("c")).as("pair_count"))
         .orderBy(col("pair_count").desc, col("sa"), col("sb"))
         .limit(1).collect()(0)
+      if (prev != null) Dedup.releaseTruncated(prev)
       val (sa, sb) = (bestRow.getString(0), bestRow.getString(1))
       val saL = lit(sa)
       val sbL = lit(sb)
@@ -88,21 +97,23 @@ object Bpe {
             concat(acc.getField("out"), array(s)).as("out"),
             lit(false).as("just"))),
         acc => acc.getField("out"))
-      syms = Dedup.truncateLineage(
+      prev = syms
+      syms = Dedup.truncateLineageLazy(
         syms.select(col("w"), col("c"), rewrite.as("syms")))
       (r, sa, sb, bestRow.getLong(2))
     }
-    Learned(merges, syms)
+    Learned(merges, syms, prev)
   }
 
   def bpeMerges(docs: DataFrame, text: String, rounds: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     // driver-side values → a local relation: emitting the learned table
-    // costs zero jobs (the old form unioned `rounds` checkpointed 1-row
-    // frames)
-    learn(docs, text, rounds).bests
-      .toDF("round", "sym_a", "sym_b", "pair_count")
+    // costs zero jobs, and the last rewrite is never computed
+    val learned = learn(docs, text, rounds)
+    Dedup.releaseTruncated(learned.vocab)
+    Dedup.releaseTruncated(learned.vocabSource)
+    learned.bests.toDF("round", "sym_a", "sym_b", "pair_count")
   }
 
   /** Tokenize the corpus under the learned merges — per doc, the BPE

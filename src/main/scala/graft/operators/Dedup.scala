@@ -174,11 +174,14 @@ object Dedup {
     if (reliableCheckpoint(df)) df.checkpoint() else df.localCheckpoint()
 
   /** Lazy variant of [[truncateLineage]]: the lineage is truncated at call
-    * time but the blocks materialize with the CALLER's next action instead
-    * of an eager checkpoint job — for call sites that immediately run an
-    * action of their own (connectedComponents' convergence checksum), the
-    * barrier and that action share one job instead of paying two
-    * (guide §2: per-round job overhead in iterative operators).
+    * time but the blocks materialize with the first job that reads the
+    * result instead of an eager checkpoint job — for call sites whose next
+    * step reads the barrier anyway (connectedComponents' convergence
+    * checksum, the next BPE round's pair count, the next PageRank round's
+    * rank broadcast), the barrier and that job share one job instead of
+    * paying two (guide §2: per-round job overhead in iterative operators).
+    * Exchanges below the barrier still run at call time: the plan is
+    * executed up to its last stage.
     *
     * Reliable mode takes the EAGER barrier: a lazy reliable checkpoint
     * computes the rows for the caller's action and then AGAIN in the
@@ -1001,31 +1004,42 @@ object Dedup {
     s.withColumn("m", least(min(col("v")).over(w), col("u")))
   }
 
-  /** Large-star step: larger neighbors v > u re-attach to m(u). No canon():
-    * self-loops are impossible (m ≤ u < v) and duplicates are harmless —
-    * smallStar's min is duplicate-insensitive and its canon() dedupes the
-    * round's output — so skipping the distinct here removes one full
-    * shuffle per round without changing any round's edge set. */
-  private[graft] def ccLargeStar(e: DataFrame): DataFrame =
-    ccWithMinWindow(ccSym(e))
-      .filter(col("v") > col("u"))
+  /** The state a round starts from: the symmetrized, deduplicated edge
+    * set with m(u) attached to every row. ONE exchange serves both the
+    * distinct and the window: a repartition on u satisfies the distinct's
+    * (u, v) clustering and the window's u clustering, so small-star's
+    * distinct rides on the next large-star's exchange instead of paying a
+    * shuffle of its own. */
+  private[graft] def ccStarState(e: DataFrame): DataFrame =
+    ccWithMinWindow(ccSym(e).repartition(col("u")).distinct())
+
+  /** Large-star step over a [[ccStarState]]: larger neighbors v > u
+    * re-attach to m(u). Self-loops are impossible (m ≤ u < v) and
+    * duplicates are harmless: smallStar's min is duplicate-insensitive. */
+  private[graft] def ccLargeStar(state: DataFrame): DataFrame =
+    state.filter(col("v") > col("u"))
       .select(col("v").as("u"), col("m").as("v"))
 
   /** Small-star step: smaller-or-equal neighbors AND u itself attach to
     * m(u). Each windowed row emits two candidate edges in one Generate
     * pass — (v, m) when v ≤ u (else a duplicate of the second element)
-    * and (u, m) always — and canon()'s distinct collapses the duplicates
-    * (its map-side partial aggregate drops most of them before the
-    * exchange). Same output set as the former join + m-table union, with
-    * one exchange instead of three. */
+    * and (u, m) always. Self-loops are dropped here; the duplicates are
+    * collapsed by the next [[ccStarState]]'s distinct. Every edge it
+    * emits points from the larger id to the smaller (m ≤ v and m ≤ u). */
   private[graft] def ccSmallStar(e: DataFrame): DataFrame =
-    ccCanon(
-      ccWithMinWindow(ccSym(e))
-        .select(explode(array(
-          when(col("v") <= col("u"), struct(col("v").as("u"), col("m").as("v")))
-            .otherwise(struct(col("u"), col("m").as("v"))),
-          struct(col("u"), col("m").as("v")))).as("ed"))
-        .select(col("ed.u").as("u"), col("ed.v").as("v")))
+    ccWithMinWindow(ccSym(e))
+      .select(explode(array(
+        when(col("v") <= col("u"), struct(col("v").as("u"), col("m").as("v")))
+          .otherwise(struct(col("u"), col("m").as("v"))),
+        struct(col("u"), col("m").as("v")))).as("ed"))
+      .select(col("ed.u").as("u"), col("ed.v").as("v"))
+      .filter(col("u") =!= col("v"))
+
+  /** The edge set of a state after a round: small-star's edges all point
+    * from the larger id to the smaller, so they are exactly the state's
+    * rows with u > v (the rest are their mirrors). */
+  private def ccOriented(state: DataFrame): DataFrame =
+    state.filter(col("u") > col("v")).select(col("u"), col("v"))
 
   /** Connected components over a near-dup pair graph — the step that turns
     * pairwise similarity output (nearDupPairs / simHashPairs /
@@ -1034,14 +1048,17 @@ object Dedup {
     * not one per pair.
     *
     * Algorithm: alternating large-star / small-star (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14) — each round
-    * is two groupBy/join passes over the edge set keyed on vertex id, and
-    * the edge set converges to per-component stars in O(log n) rounds.
+    * "Connected Components in MapReduce and Beyond", SoCC'14), and the
+    * edge set converges to per-component stars in O(log n) rounds.
     * No driver-side graph state, no vertex table that must fit anywhere:
-    * at 100 TB this is a handful of hash shuffles. Each round ends in
-    * localCheckpoint to truncate the iterative lineage (without it the
-    * plan tree doubles per round), and convergence is detected by an
-    * order-independent edge-set checksum.
+    * at 100 TB this is a handful of hash shuffles. A round is 3 jobs:
+    * the small-star window shuffle, one shuffle on vertex id that serves
+    * both small-star's distinct and the next large-star's window (the
+    * round's barrier holds that next state, [[ccStarState]]), and an
+    * order-independent edge-set checksum — one stage, no exchange — that
+    * also fills the round's lazy localCheckpoint barrier (without the
+    * barrier the plan tree doubles per round). The previous round's
+    * state is released as soon as the checksum has run.
     *
     * Returns (doc_id, rep_id) for EVERY vertex in `pairs`, roots included
     * (rep_id = min id of the component).
@@ -1058,15 +1075,23 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                           maxIter: Int = 25,
                           smallGraphMaxEdges: Long = 1L << 20): DataFrame = {
-    def canon(e: DataFrame) = ccCanon(e)
-    def largeStar(e: DataFrame): DataFrame = ccLargeStar(e)
-    def smallStar(e: DataFrame): DataFrame = ccSmallStar(e)
-    def checksum(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)), sum(xxhash64(col("u"), col("v")))).collect()(0)
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
+    // (n, Σ xxhash64(u, v)) in ONE stage: a per-partition fold over the
+    // rows, summed on the driver, where an aggregate would add a single-
+    // partition exchange and a final stage for the same two longs. The
+    // hash sum wraps around like non-ANSI sum(bigint); an empty edge set
+    // is (0, 0).
+    def checksum(e: DataFrame): (Long, Long) =
+      e.select(xxhash64(col("u"), col("v"))).queryExecution.toRdd
+        .mapPartitions { rows =>
+          var n = 0L
+          var h = 0L
+          rows.foreach { r => n += 1; h += r.getLong(0) }
+          Iterator.single((n, h))
+        }
+        .collect()
+        .foldLeft((0L, 0L)) { case ((n, h), (m, g)) => (n + m, h + g) }
 
-    val edges0 = canon(
+    val edges0 = ccCanon(
       pairs.select(col(idA).cast("long").as("u"), col(idB).cast("long").as("v")))
     // the initial checksum's count doubles as the fast-path gate — no
     // extra job beyond what convergence detection already pays. LAZY
@@ -1079,6 +1104,7 @@ object Dedup {
     if (last._1 <= smallGraphMaxEdges && smallGraphMaxEdges > 0) {
       val spark = edges.sparkSession
       val local = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+      releaseTruncated(edges)
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -1096,6 +1122,9 @@ object Dedup {
       lastRounds.set(0) // fast path: no distributed rounds ran
       return verts.map(v => (v, find(v))).toSeq.toDF("doc_id", "rep_id")
     }
+    // the first round's state is built in the first round's plan; every
+    // later round starts from the previous round's barrier
+    var state = ccStarState(edges)
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -1105,8 +1134,11 @@ object Dedup {
       // form paid two (checkpoint job + checksum job). A barrier every
       // k>1 rounds recomputes each skipped round in the next round's job
       // AND in its own checksum: cadence 2 ran q66b at 10.2 s vs 5.6 s
-      // for cadence 1 (sf0.1, 5 rounds).
-      edges = truncateLineageLazy(smallStar(largeStar(edges)))
+      // for cadence 1 (sf0.1, 5 rounds). The barrier holds the next
+      // round's state, so the round's last exchange (the distinct's) is
+      // also the next large-star's.
+      state = truncateLineageLazy(ccStarState(ccSmallStar(ccLargeStar(state))))
+      edges = ccOriented(state)
       val cur = checksum(edges)
       // The (count, hash-sum) checksum is a cheap screen; the DETERMINISTIC
       // stop is set equality, checked only at the (usually single) round
@@ -1118,6 +1150,9 @@ object Dedup {
       // potential unless already at ITS fixpoint, so a round-trip back to
       // the same edge set means neither step moved).
       converged = cur == last && edges.except(prev).isEmpty
+      // the checksum above filled this round's blocks: the previous
+      // state is read no more
+      releaseTruncated(prev)
       last = cur
       i += 1
     }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
  * it). The reference has no graph operator (SURVEY §2 — OLAP only); this
  * is part of the training-data-pipeline superset, built from the same
  * primitives as the distributed connected-components pass
- * (Dedup.connectedComponents): per-round keyed shuffles, persisted
+ * (Dedup.connectedComponents): per-round keyed shuffles, checkpointed
  * iterates, lineage truncation.
  *
  * Determinism contract: PageRank is computed in SCALED INTEGER arithmetic
@@ -24,14 +24,15 @@ import org.apache.spark.sql.functions._
  *
  * Scale shape (100 TB story): edge construction is ONE window pass over
  * events (consecutive-event transitions — linear, no per-user pair
- * explosion) + one groupBy; each PageRank round is one join keyed on the
- * rank vertex + one groupBy on dst — two hash shuffles of edge-sized
- * data, nothing driver-side but the vertex COUNT (a 1-row agg, the
- * sanctioned sizing pattern). Iterates go through the same
- * truncateLineage barrier as connectedComponents' rounds (localCheckpoint
- * or reliable checkpoint under `graft.dedup.reliableCheckpoint`), so the
- * plan tree does not double per round and the previous iterate's blocks
- * are droppable as soon as the next materializes.
+ * explosion) + one groupBy; each PageRank round joins the edges with the
+ * rank vector (a vertex-sized relation, broadcast while it fits, keyed on
+ * the rank vertex otherwise) and sums the contributions in one hash
+ * shuffle on dst — nothing driver-side but the vertex COUNT (the
+ * sanctioned sizing pattern). Iterates go through the same lazy
+ * lineage barrier as connectedComponents' rounds (localCheckpoint, or
+ * an eager reliable checkpoint under `graft.dedup.reliableCheckpoint`),
+ * so the plan tree does not double per round, and the previous
+ * iterate's blocks are dropped as soon as the next one has filled.
  */
 object GraphRank {
 
@@ -62,7 +63,7 @@ object GraphRank {
 
   /** Structural counters from the last triangleCounts call (spec /
     * ScalingBench hook): total wedges the oriented join forms —
-    * Σ_a C(outdeg(a), 2), computed analytically from the persisted
+    * Σ_a C(outdeg(a), 2), computed analytically from the checkpointed
     * oriented relation, NOT by re-executing the join — and the maximum
     * oriented out-degree. These are the load-bearing skew numbers: under
     * degree-ordering max outdeg is O(√m), so a degree-10⁶ celebrity
@@ -113,9 +114,8 @@ object GraphRank {
             .otherwise(struct(col("v").as("a"), col("u").as("b"),
               col("du").as("db"))).as("e"))
         .select(col("e.a").as("a"), col("e.b").as("b"), col("e.db").as("db")))
-      .persist()
     try {
-      // wedge census over the (persisted, tiny per-vertex) out-degree
+      // wedge census over the (checkpointed, tiny per-vertex) out-degree
       // distribution — one aggregate, no join re-execution
       val wedgeRow = oriented.groupBy(col("a"))
         .agg(count(lit(1)).as("od"))
@@ -135,11 +135,9 @@ object GraphRank {
         .union(tris.select(col("b").as("v")))
         .union(tris.select(col("c").as("v")))
         .groupBy("v").agg(count(lit(1)).as("n_tri"))
-      // materialize before releasing the oriented cache
+      // materialize before releasing the oriented blocks
       Dedup.truncateLineage(perVertex)
-    } finally {
-      oriented.unpersist(blocking = false)
-    }
+    } finally Dedup.releaseTruncated(oriented)
   }
 
   /** Synchronous weighted label propagation (Raghavan et al. 2007) —
@@ -168,7 +166,6 @@ object GraphRank {
           col("src").cast("long").as("v"), col("w").cast("long").as("w")))
         .filter(col("u") =!= col("v"))
         .groupBy("u", "v").agg(sum(col("w")).as("w")))
-      .persist()
     try {
       var labels = und.select(col("u").as("x")).distinct()
         .select(col("x"), col("x").as("lbl"))
@@ -179,58 +176,77 @@ object GraphRank {
         val votes = und
           .join(labels.select(col("x").as("v"), col("lbl")), "v")
           .groupBy(col("u"), col("lbl")).agg(sum(col("w")).as("s"))
-        labels = Dedup.truncateLineage(
+        val next = Dedup.truncateLineage(
           votes.withColumn("rn", row_number().over(argmax))
             .filter(col("rn") === 1)
             .select(col("u").as("x"), col("lbl")))
+        // the first round's labels are a view of `und`, released below
+        if (i > 0) Dedup.releaseTruncated(labels)
+        labels = next
         i += 1
       }
       labels.select(col("x").as("v"), col("lbl").as("community"))
-    } finally und.unpersist(blocking = false)
+    } finally Dedup.releaseTruncated(und)
   }
 
   /** Weighted PageRank over (src, dst, w) edges, `iters` synchronous
     * rounds, returning (v, rank) with rank an exact BIGINT in Scale
     * units. Dangling mass (vertices with out-degree zero) is dropped
     * rather than redistributed — the standard simplification; the oracle
-    * implements the identical rule, so ranks still match exactly. */
+    * implements the identical rule, so ranks still match exactly.
+    *
+    * Per round: the rank vector is broadcast into the edge relation and
+    * the contributions take one hash shuffle on dst — 2 jobs. Every
+    * barrier is lazy: the next job that reads a relation fills its blocks
+    * (the round's broadcast fills the previous round's ranks), so no
+    * barrier costs a job of its own and the last round's ranks are
+    * computed by the caller's action. */
   def pageRank(edges: DataFrame, iters: Int): DataFrame = {
-    val e = Dedup.truncateLineage(
+    val e = Dedup.truncateLineageLazy(
       edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))).persist()
-    val verts = Dedup.truncateLineage(
-      e.select(col("src").as("v")).union(e.select(col("dst").as("v"))).distinct()).persist()
-    // Pre-join each edge with its source's out-degree ONCE — the loop then
-    // touches a single persisted relation per round.
-    val outd = e.groupBy("src").agg(sum("w").as("deg"))
-    val ew = Dedup.truncateLineage(e.join(outd, "src")).persist()
-    try {
-      // 1-row sizing action: the vertex COUNT, never the vertex set.
-      val n = math.max(verts.count(), 1L)
-      val base = Scale / n
+        col("dst").cast("long").as("dst"), col("w").cast("long").as("w")))
+    // Every vertex with a zero contribution: unioned into each round's
+    // contributions, it gives a vertex without in-edges its s = 0 row in
+    // the round's one groupBy, with no per-round join against the
+    // vertex set.
+    val zeros = Dedup.truncateLineageLazy(
+      e.select(col("src").as("dst")).union(e.select(col("dst"))).distinct()
+        .select(col("dst"), lit(0L).as("c")))
+    // 1-row sizing action: the vertex COUNT, never the vertex set; the
+    // count's one job also fills the vertex blocks.
+    val n = math.max(zeros.queryExecution.toRdd.count(), 1L)
+    val base = Scale / n
+    // each edge carries its source's out-degree: one window pass, then
+    // the loop touches a single materialized edge relation per round
+    val ew = Dedup.truncateLineageLazy(
+      e.withColumn("deg", sum("w").over(Window.partitionBy("src"))))
 
-      var ranks = verts.select(col("v"), lit(base).as("rank"))
-      var it = 0
-      while (it < iters) {
-        val contrib = ew.join(ranks, ew("src") === ranks("v"))
-          .select(ew("dst").as("dst"), expr("(rank div deg) * w").as("c"))
-          .groupBy("dst").agg(sum("c").as("s"))
-        // truncateLineage materializes the round eagerly, so the plan tree
-        // stays one-round deep and the join above never replays history.
-        ranks = Dedup.truncateLineage(
-          verts.join(contrib, verts("v") === contrib("dst"), "left")
-            .select(verts("v"),
-              expr(s"(${DampDen - DampNum} * CAST($base AS BIGINT) + " +
-                s"$DampNum * coalesce(s, CAST(0 AS BIGINT))) div $DampDen").as("rank")))
-        it += 1
-      }
-      lastRounds = it
-      ranks
-    } finally {
-      ew.unpersist(blocking = false)
-      verts.unpersist(blocking = false)
-      e.unpersist(blocking = false)
+    var ranks = zeros.select(col("dst").as("v"), lit(base).as("rank"))
+    // the iterate `ranks` is computed from: its blocks are dropped once
+    // the next round's broadcast has filled `ranks`
+    var prev: DataFrame = null
+    var it = 0
+    while (it < iters) {
+      val contrib = ew.join(ranks, ew("src") === ranks("v"))
+        .select(ew("dst").as("dst"), expr("(rank div deg) * w").as("c"))
+      val next = Dedup.truncateLineageLazy(
+        contrib.unionByName(zeros).groupBy("dst").agg(sum("c").as("s"))
+          .select(col("dst").as("v"),
+            expr(s"(${DampDen - DampNum} * CAST($base AS BIGINT) + " +
+              s"$DampNum * s) div $DampDen").as("rank")))
+      if (prev != null) Dedup.releaseTruncated(prev)
+      // the first iterate is a view of the vertex blocks, released below
+      if (it > 0) prev = ranks
+      ranks = next
+      it += 1
     }
+    lastRounds = it
+    if (prev != null) Dedup.releaseTruncated(prev)
+    Dedup.releaseTruncated(ew)
+    Dedup.releaseTruncated(e)
+    // with no round, the result reads the vertex blocks
+    if (iters > 0) Dedup.releaseTruncated(zeros)
+    ranks
   }
 
   /** TRANSITIVITY AUDIT of a pair graph — the dedup-threshold quality

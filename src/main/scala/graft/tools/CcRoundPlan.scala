@@ -4,10 +4,10 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 /** Dumps the formatted physical plan of ONE connected-components round
-  * (smallStar ∘ largeStar over a checkpointed edge set) — the iterative
-  * plan that q66b's end-of-query explain hides behind per-round
-  * localCheckpoint barriers. Builder observability for the r17 CC round
-  * restructure; not a query path.
+  * (the next state built from smallStar ∘ largeStar over a checkpointed
+  * state) — the iterative plan that q66b's end-of-query explain hides
+  * behind per-round localCheckpoint barriers. Diagnostics for the CC
+  * round structure; not a query path.
   *
   * Usage: CcRoundPlan SF_DIR OUT_DIR SUFFIX — writes
   * OUT_DIR/cc_round_SUFFIX.txt from the q44 pair graph of SF_DIR.
@@ -21,10 +21,11 @@ object CcRoundPlan {
     Files.createDirectories(Paths.get(outDir))
     val docs = graft.Tables.load(spark, sfDir, "documents")
     val pairs = graft.operators.Dedup.nearDupPairs(docs, "doc_id", "text", 0.7).df
-    val edges = graft.operators.Dedup.ccCanon(
-      pairs.select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v")))
+    val state = graft.operators.Dedup.ccStarState(graft.operators.Dedup.ccCanon(
+      pairs.select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))))
       .localCheckpoint()
-    val round = graft.operators.Dedup.ccSmallStar(graft.operators.Dedup.ccLargeStar(edges))
+    val round = graft.operators.Dedup.ccStarState(
+      graft.operators.Dedup.ccSmallStar(graft.operators.Dedup.ccLargeStar(state)))
     val plan = round.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
     Files.write(Paths.get(outDir, s"cc_round_$suffix.txt"), plan.getBytes("UTF-8"))

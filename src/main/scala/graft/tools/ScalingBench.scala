@@ -267,8 +267,10 @@ object ScalingBench {
     // count (embeddings at 2n/5 vectors, the 10× ratio) under the
     // SPARK_GRAFT_SCALING_HEAPS distribution flag; an existing dir is
     // read as is. Generated tiers are how the two-decade exponent fits
-    // below get SAME-DISTRIBUTION points.
-    val sweepDirs: Seq[String] = sys.env
+    // below get SAME-DISTRIBUTION points. A tier with a doc count is this
+    // generator's corpus, the only kind with planted near-duplicates;
+    // `dir=0` (read-only test data) has no planted ground truth.
+    val sweepDirs: Seq[(String, Boolean)] = sys.env
       .getOrElse("SPARK_GRAFT_SCALING_TIERS", "/root/testdata/sf0.1=0,/tmp/graft_scaling_10x=50000")
       .split(",").toSeq.map { kv =>
         val Array(d, n) = kv.split("=")
@@ -282,7 +284,7 @@ object ScalingBench {
           println(s"[scaling] generating tier embeddings at $d (${math.max(nd * 2 / 5, 100L)} vectors)")
           generateEmb(spark, d, math.max(nd * 2 / 5, 100L))
         }
-        d
+        (d, nd > 0)
       }
 
     // per-tier stats for the exponent fit: dir -> (nDocs, parallel
@@ -299,7 +301,7 @@ object ScalingBench {
     // for the whole run.
     val stats = new StageStats(spark.sparkContext)
 
-    for (dir <- sweepDirs) {
+    for ((dir, hasPlanted) <- sweepDirs) {
       val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
       val pe = graft.Bench.parallelEfficiency()
       tierStats(dir) = (nDocs, pe)
@@ -315,16 +317,17 @@ object ScalingBench {
       }
       // a pair relation's median, found pairs and planted recall: the
       // recovered (id-1, id) mutations for id%50==3, id>0, the ground
-      // truth this generator embeds
+      // truth this generator embeds (n/a on a tier it did not generate)
       def reportPairs(label: String, key: String, pairs: () => DataFrame): Unit = {
         reclaim()
         val found = pairs().persist()
         val nFound = found.count()
-        val planted = found.filter(
-          col("id_b") === col("id_a") + 1 && col("id_b") % 50 === 3).count()
+        val planted =
+          if (!hasPlanted) "n/a"
+          else s"${found.filter(col("id_b") === col("id_a") + 1 && col("id_b") % 50 === 3).count()}" +
+            s"/${nDocs / 50}"
         found.unpersist(blocking = false)
-        report(label, key, median3(pairs()),
-          f" rows=$nFound%-7d planted=$planted/${nDocs / 50}")
+        report(label, key, median3(pairs()), f" rows=$nFound%-7d planted=$planted")
       }
       // q66b-shape forced-distributed clustering over a persisted pair set
       def reportCc(label: String, pairs: () => DataFrame): Unit = {

@@ -6,7 +6,9 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.graftshim.ListenerDrain
 
 /** The one stage-statistics listener of the diagnostics mains
@@ -19,20 +21,43 @@ import org.apache.spark.sql.graftshim.ListenerDrain
   * and [[close]] first drains the listener bus: a read right after an
   * action sees every stage and task of that action, and a reset leaves no
   * earlier event still in flight. Diagnostics only — never a
-  * query path. */
+  * query path.
+  *
+  * A stage is labelled with the first graft frame of its own call site.
+  * Stages that adaptive execution submits from its own threads have none
+  * (their call site is a `CompletableFuture` frame), so they take the
+  * first graft frame of the SQL execution their job runs under, or that
+  * execution's short call site. */
 final class StageStats(sc: SparkContext) extends SparkListener {
   import StageStats.Stage
 
   private val rows = new ConcurrentLinkedQueue[Stage]()
   private val peak = new AtomicLong(0L)
+  // listener-bus thread only: the SQL execution of each running stage's
+  // job, and each running execution's first graft frame
+  private val stageExecution = scala.collection.mutable.HashMap.empty[Int, Long]
+  private val executionWhere = scala.collection.mutable.HashMap.empty[Long, String]
   sc.addSparkListener(this)
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    Option(e.properties).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+      .foreach(id => e.stageIds.foreach(stageExecution(_) = id.toLong))
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart =>
+      executionWhere(s.executionId) =
+        StageStats.graftFrame(s.details).getOrElse(s.description)
+    case s: SparkListenerSQLExecutionEnd => executionWhere.remove(s.executionId)
+    case _ =>
+  }
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
     val si = e.stageInfo
     val m = si.taskMetrics
-    val where = si.details.linesIterator
-      .find(l => l.contains("graft") && !l.contains("tools"))
-      .getOrElse(si.name.takeWhile(_ != '\n')).trim
+    val execution = stageExecution.remove(si.stageId)
+    val where = StageStats.graftFrame(si.details)
+      .orElse(execution.flatMap(executionWhere.get))
+      .getOrElse(si.name.takeWhile(_ != '\n').trim)
     rows.add(Stage(si.stageId, where,
       (for {c <- si.completionTime; s <- si.submissionTime} yield c - s).getOrElse(0L),
       m.executorRunTime, m.executorCpuTime / 1000000,
@@ -58,8 +83,14 @@ final class StageStats(sc: SparkContext) extends SparkListener {
 }
 
 object StageStats {
-  /** One completed stage: `where` is its first graft (non-tools) call-site
-    * line, times are ms, byte counts are bytes. */
+  /** The first graft frame of a call-site stack, skipping the
+    * diagnostics mains' own. */
+  private def graftFrame(stack: String): Option[String] =
+    stack.linesIterator.find(l => l.contains("graft") && !l.contains("tools")).map(_.trim)
+
+  /** One completed stage: `where` is the first graft (non-tools) frame of
+    * its call site or of its SQL execution's, times are ms, byte counts
+    * are bytes. */
   final case class Stage(id: Int, where: String, wallMs: Long, runMs: Long,
                          cpuMs: Long, shuffleReadBytes: Long,
                          shuffleWriteBytes: Long, spillBytes: Long, tasks: Int)

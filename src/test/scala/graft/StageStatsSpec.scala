@@ -29,4 +29,15 @@ class StageStatsSpec extends AnyFunSuite {
     repartitionSort()
     assert(stats.stages.isEmpty && stats.peakTaskMemory == 0L)
   }
+
+  test("stages that adaptive execution submits are labelled with the caller's graft frame") {
+    val stats = new StageStats(spark.sparkContext)
+    try {
+      repartitionSort()
+      val stages = stats.stages
+      // the shuffle map stages run from AQE's threads, whose own call
+      // site is a CompletableFuture frame
+      assert(stages.size > 1 && stages.forall(_.where.contains("StageStatsSpec")), stages)
+    } finally stats.close()
+  }
 }
