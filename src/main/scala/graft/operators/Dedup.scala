@@ -151,9 +151,8 @@ object NearDupProfile {
 
 /** A verify candidate names a doc id that has no gram set in the sets
   * relation it is scored against — the candidates and the sets were not
-  * derived from the same corpus (a caller-assembled minHashVerify input
-  * or DedupIndex). Raised by the broadcast merge-walk verify instead of
-  * a bare "key not found". */
+  * derived from the same corpus (a hand-built DedupIndex). Raised by the
+  * broadcast merge-walk verify instead of a bare "key not found". */
 final class MissingGramSetException(val id: Long) extends IllegalStateException(
   s"dedup verify: candidate doc id $id has no gram set in the verify sets " +
   "relation; candidates and sets must come from the same corpus")
@@ -504,23 +503,6 @@ object Dedup {
     "intended, or pre-deduplicate the batch (the batch is saturated/exact-dup " +
     "heavy, so most of its pairs are internal)."
 
-  /** Most recent pre-flight guard measurement (estPairs, maxBucketSeen,
-    * nBuckets) — the Σ C(size,2) histogram summary the guard computed
-    * anyway, surfaced in the lastDistributedRounds observability mold
-    * (r14 verdict #1: the guard's one aggregate should serve
-    * observability too, not just the throw). (-1,-1,-1) = guard disabled
-    * on the last call. Diagnostics only, never control flow.
-    *
-    * ==Last-writer-wins== (r15 advisor): this is a JVM-global register —
-    * concurrent dedup pipelines in one session clobber each other's
-    * reading, so it attributes correctly only when calls are serialized
-    * (the ScalingBench pattern). Callers needing PER-CALL attribution
-    * should read the value threaded through return types instead:
-    * [[ManagedPairs.guardEstPairs]] (every managed/auto pipeline). */
-  def lastGuardStats: (Long, Long, Long) = lastGuard.get()
-  private val lastGuard =
-    new java.util.concurrent.atomic.AtomicReference[(Long, Long, Long)]((-1L, -1L, -1L))
-
   /** Pre-flight candidate-budget guard for the banding self-join: on a
     * gram-universe-saturated corpus, uncapped banding is Ω(n²) in
     * candidates (round 13 measured 266.7M at 500k docs — 77 GB of
@@ -530,18 +512,16 @@ object Dedup {
     * shared pre-computed histogram) and fails LOUDLY above the session
     * budget, naming the call site's escape hatches; a failed guard costs
     * one cheap aggregate, a missed one costs the cluster's shuffle disk.
-    * Returns the estimate for observability (also kept in
-    * [[lastGuardStats]]). */
+    * Returns the estimate for observability (-1 = guard disabled). */
   private def guardCandidateBudget(bandRel: DataFrame, maxBucket: Long,
                                    hatches: String,
                                    sizes: Option[DataFrame] = None): Long = {
     val budget = candidatePairBudget(bandRel)
-    if (budget <= 0L) { lastGuard.set((-1L, -1L, -1L)); return -1L }
+    if (budget <= 0L) return -1L
     val (estPairs, maxBucketSeen, nBuckets) = sizes match {
       case Some(s) => candidatePairStatsFromSizes(s, maxBucket)
       case None => candidatePairStats(bandRel, maxBucket)
     }
-    lastGuard.set((estPairs, maxBucketSeen, nBuckets))
     if (estPairs > budget) {
       throw new IllegalStateException(
         s"banding pre-flight: the self-join would generate ~$estPairs candidate " +
@@ -814,14 +794,10 @@ object Dedup {
     *    jaccard filter: fused, Catalyst pushes the threshold into the
     *    verify join's condition, where alias substitution re-expands
     *    `inter` and runs the intersect three times per candidate pair
-    *    (~20 s vs ~205 s fused at sf0.1).
-    *
-    * `plan` sees the relation the checkpoint materializes, before
-    * truncation. */
+    *    (~20 s vs ~205 s fused at sf0.1). */
   private def verifiedPairs(cands: DataFrame, sets: DataFrame,
                             idType: org.apache.spark.sql.types.DataType,
-                            threshold: Double, budgetBytes: Long,
-                            plan: DataFrame => Unit = _ => ()): DataFrame = {
+                            threshold: Double, budgetBytes: Long): DataFrame = {
     def passing(scored: DataFrame) =
       scored.select(col("id_a"), col("id_b"), jaccardCol).filter(col("jaccard") >= threshold)
     val integralId = idType match {
@@ -836,19 +812,15 @@ object Dedup {
       val bc = collectAndBroadcast(sets)
       liveBc.incrementAndGet()
       try {
-        val verified = passing(mergeWalkScore(cands, bc, minSizeRatio = threshold))
-        plan(verified)
         // materialize BEFORE destroying the broadcast: the returned plan
         // is a checkpoint scan, unreachable from the broadcast
-        truncateLineage(verified)
+        truncateLineage(passing(mergeWalkScore(cands, bc, minSizeRatio = threshold)))
       } finally {
         bc.destroy()
         liveBc.decrementAndGet()
       }
     } else {
-      val scored = minHashVerify(cands, sets, useBroadcastMap = false, threshold)
-      plan(scored)
-      passing(truncateLineage(scored))
+      passing(truncateLineage(minHashVerify(cands, sets, threshold)))
     }
   }
 
@@ -866,15 +838,6 @@ object Dedup {
   def lastDistributedRounds: Int = lastRounds.get()
   private val lastRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Physical plan of the most recent [[incrementalPairs]] result, captured
-    * BEFORE lineage truncation — the returned relation is a checkpoint
-    * scan, so the verify join shape (forced SHUFFLE_HASH, probe-vs-index
-    * equi join, no cartesian branch) is otherwise unauditable from the
-    * outside. Observability in the lastDistributedRounds mold: PlanAuditSpec
-    * pins the shape; diagnostics only, never control flow. */
-  def lastIncrementalPlan: String = lastIncPlan.get()
-  private val lastIncPlan = new java.util.concurrent.atomic.AtomicReference[String]("")
-
   /** Candidate-id ceiling for [[incrementalPairs]]' driver-collected isin
     * prune (~8 MB of longs at the cap — the q70-style budget); above it
     * the prune flips to a distributed left-semi join. */
@@ -887,9 +850,8 @@ object Dedup {
     (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard")
 
   /** Collect the (docs-sized, byte-budgeted) gram-set map and ship it to
-    * executors as one Spark broadcast. Callers own the broadcast's
-    * lifecycle (the managed pipeline destroys it as soon as its result
-    * materializes). */
+    * executors as one Spark broadcast, which [[verifiedPairs]] destroys as
+    * soon as its result materializes. */
   private def collectAndBroadcast(sets: DataFrame)
       : org.apache.spark.broadcast.Broadcast[Map[Long, Array[Long]]] = {
     // getAs[Number]: integralId admits IntegerType ids too, so the sid
@@ -911,9 +873,9 @@ object Dedup {
     cands.select(col("id_a").cast("long"), col("id_b").cast("long")).as[(Long, Long)]
       .mapPartitions { it =>
         val m = bc.value
-        // a candidate id without a gram set is reachable through the public
-        // minHashVerify (DedupSpec) and through a hand-built DedupIndex whose
-        // sets miss some of its bands' ids
+        // a candidate id without a gram set is reachable through
+        // incrementalPairs over a hand-built DedupIndex whose sets miss some
+        // of its bands' ids (DedupSpec)
         def set(id: Long) = m.getOrElse(id, throw new MissingGramSetException(id))
         it.flatMap { case (a, b) =>
           val ga = set(a); val gb = set(b)
@@ -934,38 +896,30 @@ object Dedup {
       .toDF("id_a", "id_b", "inter", "na", "nb")
   }
 
-  /** Verify stage of nearDupPairs: intersect sizes for each candidate
-    * pair. Two physical strategies with identical output (both run the same
-    * sorted-merge walk):
-    *  - useBroadcastMap: ship the whole gram-set map to executors as one
-    *    Spark broadcast and score pairs in a single mapPartitions pass —
-    *    no per-pair array materialization through join outputs. Only legal
-    *    under the broadcast byte budget.
-    *  - otherwise: two shuffle-hash joins of candidates against `sets`
-    *    keyed on id — both shuffles move candidate-sized data and the hash
-    *    table per partition is 1/N of the doc side, so nothing needs to fit
-    *    on one node. SHUFFLE_HASH pins `sets` as the build side and keeps
-    *    AQE from re-broadcasting what the budget just ruled out.
+  /** Shuffle verify stage of nearDupPairs: intersect sizes for each
+    * candidate pair, (id_a, id_b, inter, na, nb), by two shuffle-hash joins
+    * of candidates against `sets` keyed on id — both shuffles move
+    * candidate-sized data and the hash table per partition is 1/N of the
+    * doc side, so nothing needs to fit on one node. SHUFFLE_HASH pins
+    * `sets` as the build side and keeps AQE from re-broadcasting what the
+    * budget just ruled out. A candidate id missing from `sets` drops its
+    * pair through the inner joins. (The under-budget broadcast merge-walk
+    * lives in [[verifiedPairs]], which owns its broadcast.)
     *
     * minSizeRatio: drop pairs where min(|A|,|B|) < ratio * max(|A|,|B|)
     * before intersecting — a necessary condition for jaccard >= ratio, so
     * passing the jaccard threshold here is result-preserving and skips the
     * merge walk for pairs that cannot qualify. */
-  def minHashVerify(cands: DataFrame, sets: DataFrame, useBroadcastMap: Boolean,
-                    minSizeRatio: Double = 0.0): DataFrame = {
-    if (useBroadcastMap) {
-      mergeWalkScore(cands, collectAndBroadcast(sets), minSizeRatio)
-    } else {
-      cands
-        .join(sets.as("sa").hint("SHUFFLE_HASH"), col("id_a") === col("sa.sid"))
-        .join(sets.as("sb").hint("SHUFFLE_HASH"), col("id_b") === col("sb.sid"))
-        .filter(least(size(col("sa.gs")), size(col("sb.gs"))).cast("double") >=
-          lit(minSizeRatio) * greatest(size(col("sa.gs")), size(col("sb.gs"))))
-        .select(col("id_a"), col("id_b"),
-          call_function("graft_sorted_intersect_count", col("sa.gs"), col("sb.gs")).as("inter"),
-          size(col("sa.gs")).as("na"), size(col("sb.gs")).as("nb"))
-    }
-  }
+  def minHashVerify(cands: DataFrame, sets: DataFrame,
+                    minSizeRatio: Double = 0.0): DataFrame =
+    cands
+      .join(sets.as("sa").hint("SHUFFLE_HASH"), col("id_a") === col("sa.sid"))
+      .join(sets.as("sb").hint("SHUFFLE_HASH"), col("id_b") === col("sb.sid"))
+      .filter(least(size(col("sa.gs")), size(col("sb.gs"))).cast("double") >=
+        lit(minSizeRatio) * greatest(size(col("sa.gs")), size(col("sb.gs"))))
+      .select(col("id_a"), col("id_b"),
+        call_function("graft_sorted_intersect_count", col("sa.gs"), col("sb.gs")).as("inter"),
+        size(col("sa.gs")).as("na"), size(col("sb.gs")).as("nb"))
 
   /** Byte ceiling for the broadcast-map verify fast path — the reference's
     * 500 MB scatter budget (MAX_JOIN_SCATTER_MEM_OVERHEAD,
@@ -1367,8 +1321,7 @@ object Dedup {
               else semiPruned
             }).persist()
           try verifiedPairs(cand, neededSets, incoming.schema(id).dataType, threshold,
-            if (forceSemiPrune) 0L else BroadcastVerifyMaxBytes,
-            v => lastIncPlan.set(v.queryExecution.executedPlan.toString))
+            if (forceSemiPrune) 0L else BroadcastVerifyMaxBytes)
           finally neededSets.unpersist(blocking = false)
         } finally cand.unpersist(blocking = false)
       } finally inBands.unpersist(blocking = false)

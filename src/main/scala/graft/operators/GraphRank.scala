@@ -57,19 +57,37 @@ object GraphRank {
       .groupBy("src", "dst").agg(count(lit(1)).as("w"))
   }
 
-  /** Number of rounds the last pageRank call executed (spec hook, same
-    * pattern as Dedup.lastDistributedRounds). */
-  @volatile var lastRounds: Int = 0
+  /** Number of rounds the last pageRank call executed (spec and
+    * benchmark hook, same pattern as Dedup.lastDistributedRounds). */
+  def lastRounds: Int = lastRank.get()
+  private val lastRank = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Structural counters from the last triangleCounts call (spec /
-    * ScalingBench hook): total wedges the oriented join forms —
-    * Σ_a C(outdeg(a), 2), computed analytically from the checkpointed
-    * oriented relation, NOT by re-executing the join — and the maximum
-    * oriented out-degree. These are the load-bearing skew numbers: under
-    * degree-ordering max outdeg is O(√m), so a degree-10⁶ celebrity
-    * cannot explode the wedge stage. */
-  @volatile var lastWedgeCount: Long = 0L
-  @volatile var lastMaxOutDegree: Long = 0L
+  /** The degree-ordered orientation [[triangleCounts]] forms its wedges
+    * from, as a lazy relation: (a, b, db) for every edge of the
+    * undirected simplification of `edges`, oriented from the endpoint with
+    * the smaller (degree, id) rank a to the larger b, db being b's degree
+    * (so wedge targets are rank-ordered without a third degree join).
+    * Under this orientation every out-degree of a is O(√m). */
+  private[graft] def orientedEdges(edges: DataFrame): DataFrame = {
+    val und = edges
+      .select(least(col("src"), col("dst")).cast("long").as("u"),
+        greatest(col("src"), col("dst")).cast("long").as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct()
+    val deg = und.select(col("u").as("x")).union(und.select(col("v").as("x")))
+      .groupBy("x").agg(count(lit(1)).as("d"))
+    und
+      .join(deg.select(col("x").as("u"), col("d").as("du")), "u")
+      .join(deg.select(col("x").as("v"), col("d").as("dv")), "v")
+      .select(
+        when(col("du") < col("dv") ||
+          (col("du") === col("dv") && col("u") < col("v")),
+          struct(col("u").as("a"), col("v").as("b"),
+            col("dv").as("db")))
+          .otherwise(struct(col("v").as("a"), col("u").as("b"),
+            col("du").as("db"))).as("e"))
+      .select(col("e.a").as("a"), col("e.b").as("b"), col("e.db").as("db"))
+  }
 
   /** Per-vertex triangle counts over the UNDIRECTED simplification of a
     * (src, dst[, w]) edge list — the clustering-structure metric next to
@@ -92,37 +110,8 @@ object GraphRank {
     * Returns (v, n_tri): the number of triangles each vertex belongs to
     * (every triangle increments all three corners). */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).cast("long").as("u"),
-        greatest(col("src"), col("dst")).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-    val deg = und.select(col("u").as("x")).union(und.select(col("v").as("x")))
-      .groupBy("x").agg(count(lit(1)).as("d"))
-    // Orient low-rank → high-rank, rank = (degree, id); carry the
-    // target's rank so wedge targets can be rank-ordered without a
-    // third degree join.
-    val oriented = Dedup.truncateLineage(
-      und
-        .join(deg.select(col("x").as("u"), col("d").as("du")), "u")
-        .join(deg.select(col("x").as("v"), col("d").as("dv")), "v")
-        .select(
-          when(col("du") < col("dv") ||
-            (col("du") === col("dv") && col("u") < col("v")),
-            struct(col("u").as("a"), col("v").as("b"),
-              col("dv").as("db")))
-            .otherwise(struct(col("v").as("a"), col("u").as("b"),
-              col("du").as("db"))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"), col("e.db").as("db")))
+    val oriented = Dedup.truncateLineage(orientedEdges(edges))
     try {
-      // wedge census over the (checkpointed, tiny per-vertex) out-degree
-      // distribution — one aggregate, no join re-execution
-      val wedgeRow = oriented.groupBy(col("a"))
-        .agg(count(lit(1)).as("od"))
-        .agg(expr("CAST(sum((od * (od - 1)) DIV 2) AS BIGINT)"),
-          max(col("od"))).collect()(0)
-      lastWedgeCount = if (wedgeRow.isNullAt(0)) 0L else wedgeRow.getLong(0)
-      lastMaxOutDegree = if (wedgeRow.isNullAt(1)) 0L else wedgeRow.getLong(1)
       val e1 = oriented.select(col("a"), col("b").as("b1"), col("db").as("r1"))
       val e2 = oriented.select(col("a"), col("b").as("b2"), col("db").as("r2"))
       val wedges = e1.join(e2, "a")
@@ -240,7 +229,7 @@ object GraphRank {
       ranks = next
       it += 1
     }
-    lastRounds = it
+    lastRank.set(it)
     if (prev != null) Dedup.releaseTruncated(prev)
     Dedup.releaseTruncated(ew)
     Dedup.releaseTruncated(e)

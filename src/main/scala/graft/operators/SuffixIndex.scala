@@ -89,9 +89,10 @@ object SuffixIndex {
   /** Rank tables from one build: `ranks` = (d, p, r) final suffix ranks
     * (dense; ties = genuinely equal suffixes), `levels` = (h, table) for
     * h = 1, 2, 4, … — level h ranks compare suffix prefixes of length h
-    * (cut at doc end) — and `maxLen` the longest document in tokens.
-    * Levels BELOW the build's `startWidth` carry the width-h token SLICE
-    * as `r` instead of a dense rank (r16): their only consumer is the
+    * (cut at doc end) — `maxLen` the longest document in tokens, and
+    * `rounds` the doubling rounds the build executed (0 on an empty
+    * corpus). Levels BELOW the build's `startWidth` carry the width-h
+    * token SLICE as `r` instead of a dense rank (r16): their only consumer is the
     * LCP walk's equality test, and slice equality ⟺ level-rank equality
     * exactly (same doc/segment cut), so they need no corpus-wide rank
     * round — they are lazy row-local projections, not materialized
@@ -106,15 +107,11 @@ object SuffixIndex {
     * deterministically (after which the DataFrames are CONSUMED:
     * re-executing them would re-read unpersisted truncated lineage). */
   final case class Tables(ranks: DataFrame, levels: Seq[(Int, DataFrame)],
-                          maxLen: Int, capTokens: Int = 0)
+                          maxLen: Int, capTokens: Int = 0, rounds: Int = 0)
     extends AutoCloseable {
     override def close(): Unit =
       (ranks +: levels.map(_._2)).distinct.foreach(Dedup.releaseTruncated(_))
   }
-
-  /** Doubling rounds the last build executed (spec hook, the
-    * Dedup.lastDistributedRounds pattern). */
-  @volatile var lastRounds: Int = 0
 
   /** Per-level pair-table survivor counts of the last
     * [[crossDocRepeats]] call run with `levelStats = true`:
@@ -123,7 +120,9 @@ object SuffixIndex {
     * each level's dead-pair prune. Empty after a levelStats = false call.
     * Diagnostics only (SCALING.md cost attribution), never control
     * flow. */
-  @volatile var lastLevelSurvivors: Vector[(String, Long)] = Vector.empty
+  def lastLevelSurvivors: Vector[(String, Long)] = lastSurvivors.get()
+  private val lastSurvivors =
+    new java.util.concurrent.atomic.AtomicReference(Vector.empty[(String, Long)])
 
   /** Dense global rank of `df` by `keys` (ascending, binary string order —
     * identical to DuckDB's), scale-safe per the object doc. Output adds
@@ -275,7 +274,6 @@ object SuffixIndex {
     val n = if (sizing.isNullAt(1)) 0L else sizing.getLong(1)
     if (n == 0L) {
       val empty = arr.select(col("d"), lit(1).as("p"), lit(0L).as("r")).limit(0)
-      lastRounds = 0
       return Tables(empty, Seq(1 -> empty), 0, capTokens)
     }
     val maxLen = sizing.getInt(0)
@@ -322,8 +320,7 @@ object SuffixIndex {
       rounds += 1
       levels = levels :+ (h -> r)
     }
-    lastRounds = rounds
-    Tables(r, levels, maxLen, capTokens)
+    Tables(r, levels, maxLen, capTokens, rounds)
   }
 
   /** The suffix array itself: (id, pos, srank) — srank is the dense rank of
@@ -458,7 +455,7 @@ object SuffixIndex {
           .otherwise(col("lcp")))
         .drop("qa", "qb", s"ra$i", s"rb$i")
     }
-    lastLevelSurvivors = stats
+    lastSurvivors.set(stats)
     val top = pairs.filter(col("lcp") >= minLen)
       .orderBy(col("lcp").desc, col("da"), col("pa"), col("db"), col("pb"))
       .limit(topK)

@@ -308,6 +308,12 @@ object ScalingBench {
       println(f"[scaling] corpus $dir: $nDocs docs, parallel_efficiency=$pe%.2f")
       def docs() = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
+      // the doubling rounds of this tier's suffix index (q143/q144 lines),
+      // from one untimed build
+      lazy val suffixRounds = {
+        val t = graft.operators.SuffixIndex.build(docs(), "doc_id", "text")
+        try t.rounds finally t.close()
+      }
       // one tier line; `key` (empty = none) records the median for the
       // exponent fit
       def report(label: String, key: String, med: Double, tail: String): Unit = {
@@ -346,13 +352,13 @@ object ScalingBench {
         // timing.
         reclaim()
         val rows = SparkEntry.queries(q)(spark, dir).count()
-        stats.reset() // count() above warms plans; measure the runs
-        val med = median3(SparkEntry.queries(q)(spark, dir))
         val extra =
           if (q.startsWith("q66b")) s" rounds=${Dedup.lastDistributedRounds}"
           else if (q.startsWith("q143") || q.startsWith("q144"))
-            s" rounds=${graft.operators.SuffixIndex.lastRounds}"
+            s" rounds=$suffixRounds"
           else ""
+        stats.reset() // count() above warms plans; measure the runs
+        val med = median3(SparkEntry.queries(q)(spark, dir))
         report(f"$q%-28s", q, med, f" rows=$rows%-7d" +
           f" peakTaskMem=${stats.peakTaskMemory / 1024 / 1024}MiB$extra")
       }
@@ -692,13 +698,13 @@ object ScalingBench {
     // bound: max ORIENTED out-degree stays O(√m) even though the raw
     // degree distribution has a 0.3·|V| whale, so the wedge stage — the
     // term a naive neighbor join explodes on — is bounded. Counters
-    // (wedges, max outdeg) come from GraphRank.lastWedgeCount /
-    // lastMaxOutDegree, computed analytically off the oriented relation.
+    // (wedges Σ C(outdeg, 2), max outdeg) come from one census aggregate
+    // over GraphRank.orientedEdges, outside the timed triangle runs.
     // Edges are pure xxhash64 functions of the edge index — both scales
     // and both runs see identical graphs, generated in executors.
     if (selects("q118_triangles") || selects("q124_label_prop")) {
       import graft.operators.GraphRank
-      import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
+      import org.apache.spark.sql.functions.{count, expr, lit, pmod, xxhash64}
       // SPARK_GRAFT_SCALING_GRAPH100X=true adds the third decade
       // (2M vertices, 10M edges + a 600k-degree celebrity) — the 100×
       // point for the Latapy bound and LPA's edge-linear rounds.
@@ -717,9 +723,14 @@ object ScalingBench {
         val m = edges.count()
         reclaim()
         val triMed = median3(GraphRank.triangleCounts(edges))
+        val census = GraphRank.orientedEdges(edges)
+          .groupBy(col("a")).agg(count(lit(1)).as("od"))
+          .agg(expr("coalesce(CAST(sum((od * (od - 1)) DIV 2) AS BIGINT), 0)"),
+            expr("coalesce(max(od), 0)"))
+          .collect()(0)
         println(f"[scaling] q118_triangles_skew |V|=$nV%-7d m=$m%-8d" +
-          f" median=$triMed%7.2f s wedges=${GraphRank.lastWedgeCount}" +
-          f" maxOutDeg=${GraphRank.lastMaxOutDegree}" +
+          f" median=$triMed%7.2f s wedges=${census.getLong(0)}" +
+          f" maxOutDeg=${census.getLong(1)}" +
           f" sqrtM=${math.sqrt(m.toDouble).toLong}")
         reclaim()
         val lpaMed = median3(GraphRank.labelPropagation(edges, 4))

@@ -23,7 +23,10 @@ import org.apache.spark.sql.graftshim.ListenerDrain
   * earlier event still in flight. Diagnostics only — never a
   * query path.
   *
-  * A stage is labelled with the first graft frame of its own call site.
+  * A stage is labelled with the first graft frame of its own call site,
+  * skipping the shared lineage-barrier helpers (`Dedup.truncateLineage`,
+  * `truncateLineageLazy`, `releaseTruncated`), so a barrier's stages name
+  * the operator that took the barrier.
   * Stages that adaptive execution submits from its own threads have none
   * (their call site is a `CompletableFuture` frame), so they take the
   * first graft frame of the SQL execution their job runs under, or that
@@ -84,13 +87,18 @@ final class StageStats(sc: SparkContext) extends SparkListener {
 
 object StageStats {
   /** The first graft frame of a call-site stack, skipping the
-    * diagnostics mains' own. */
+    * diagnostics mains' own and the lineage-barrier helpers'. */
   private def graftFrame(stack: String): Option[String] =
-    stack.linesIterator.find(l => l.contains("graft") && !l.contains("tools")).map(_.trim)
+    stack.linesIterator.find(l => l.contains("graft") && !l.contains("tools") &&
+      !BarrierHelpers.exists(l.contains)).map(_.trim)
 
-  /** One completed stage: `where` is the first graft (non-tools) frame of
-    * its call site or of its SQL execution's, times are ms, byte counts
-    * are bytes. */
+  /** Frame prefixes of the barrier helpers (the first also matches
+    * `truncateLineageLazy`). */
+  private val BarrierHelpers = Seq("Dedup$.truncateLineage", "Dedup$.releaseTruncated")
+
+  /** One completed stage: `where` is the first graft (non-tools,
+    * non-barrier-helper) frame of its call site or of its SQL
+    * execution's, times are ms, byte counts are bytes. */
   final case class Stage(id: Int, where: String, wallMs: Long, runMs: Long,
                          cpuMs: Long, shuffleReadBytes: Long,
                          shuffleWriteBytes: Long, spillBytes: Long, tasks: Int)

@@ -1,5 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftshim.ListenerDrain
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -13,6 +18,26 @@ class PlanAuditSpec extends AnyFunSuite {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, TestSpark.sfDir).queryExecution.executedPlan.toString
+
+  /** Executed plan of the last `localCheckpoint` action that building
+    * `name` runs. An incremental dedup query's result is a checkpoint
+    * scan, so its verify shape is visible only in the action that
+    * materialized it, the verify's own barrier, which is that query's
+    * last. */
+  private def lastCheckpointPlan(name: String): String = {
+    val checkpoints = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") checkpoints.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries(name)(spark, TestSpark.sfDir)
+      ListenerDrain.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    checkpoints.asScala.last.executedPlan.toString
+  }
 
   test("q01: partial+final aggregation with pushed scan filter") {
     val p = plan("q01_tpch_q1")
@@ -177,8 +202,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("q81 incremental verify: byte-gated merge-walk — no verify exchange, never cartesian") {
-    plan("q81_dedup_incremental") // building the query captures the pre-checkpoint plan
-    val p = graft.operators.Dedup.lastIncrementalPlan
+    val p = lastCheckpointPlan("q81_dedup_incremental")
     assert(p.nonEmpty)
     // r16 re-pin: the verify's sets side is candidate-id-pruned — batch-
     // sized plus index collisions, NOT index-sized — so under the byte
@@ -201,8 +225,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("q81b forced semi prune: left-semi pruning of the verify sets, same SHUFFLE_HASH verify") {
-    plan("q81b_dedup_incremental_semi")
-    val p = graft.operators.Dedup.lastIncrementalPlan
+    val p = lastCheckpointPlan("q81b_dedup_incremental_semi")
     assert(p.contains("LeftSemi"), p.take(3000))
     assert(p.contains("ShuffledHashJoin"), p.take(3000))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.GraphRank
 import graft.tools.StageStats
 
 /** The diagnostics mains' one stage-statistics listener: every read sees
@@ -38,6 +39,20 @@ class StageStatsSpec extends AnyFunSuite {
       // the shuffle map stages run from AQE's threads, whose own call
       // site is a CompletableFuture frame
       assert(stages.size > 1 && stages.forall(_.where.contains("StageStatsSpec")), stages)
+    } finally stats.close()
+  }
+
+  test("a lineage barrier's stages are labelled with the operator that took it") {
+    import spark.implicits._
+    val edges = (1L to 30L).flatMap(i => Seq((i, i % 7 + 1), (i, (i * 3) % 30 + 1)))
+      .toDF("src", "dst")
+    val stats = new StageStats(spark.sparkContext)
+    try {
+      // both of triangleCounts' barriers go through Dedup.truncateLineage
+      GraphRank.triangleCounts(edges).collect()
+      val stages = stats.stages
+      assert(stages.exists(_.where.contains("GraphRank$.triangleCounts")), stages)
+      assert(!stages.exists(_.where.contains("truncateLineage")), stages)
     } finally stats.close()
   }
 }

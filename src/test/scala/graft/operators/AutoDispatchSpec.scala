@@ -94,16 +94,28 @@ class AutoDispatchSpec extends AnyFunSuite {
     assert(a.size < 400, "the saturated corpus has near-dups to drop")
   }
 
-  test("guard observability: lastGuardStats carries the histogram summary") {
-    val d = docs(organicDoc, 200)
-    val mp = Dedup.nearDupPairs(d, "doc_id", "text", 0.7)
+  test("guard observability: guardEstPairs carries the histogram summary") {
+    def estimate(d: DataFrame) = {
+      val mp = Dedup.nearDupPairs(d, "doc_id", "text", 0.7)
+      try mp.guardEstPairs finally mp.close()
+    }
+    val est = estimate(docs(organicDoc, 200))
+    assert(est >= 0L, s"guard ran, its estimate must be real: $est")
+    // the rest of the summary is in a tripped guard's message: a budget
+    // one pair under a colliding corpus's returned estimate trips the
+    // guard on the same histogram
+    val saturated = docs(saturatedDoc, 200)
+    val hot = estimate(saturated)
+    assert(hot > 1L, s"the saturated corpus has band collisions: $hot")
+    spark.conf.set("graft.dedup.candidatePairBudget", (hot - 1L).toString)
     try {
-      val (est, maxB, nB) = Dedup.lastGuardStats
-      assert(est >= 0L && nB > 0L && maxB >= 1L,
-        s"guard ran, stats must be real: ($est, $maxB, $nB)")
-      assert(mp.guardEstPairs === est,
-        "ManagedPairs surfaces the same estimate the guard enforced")
-    } finally mp.close()
+      val e = intercept[IllegalStateException](estimate(saturated))
+      val summary = """~(\d+) candidate pairs \(largest visited bucket (\d+) of (\d+) buckets\)""".r
+      val Some(m) = summary.findFirstMatchIn(e.getMessage): @unchecked
+      val (tripped, maxB, nB) = (m.group(1).toLong, m.group(2).toLong, m.group(3).toLong)
+      assert(nB > 0L && maxB >= 1L, s"guard ran, stats must be real: ($tripped, $maxB, $nB)")
+      assert(tripped === hot, "guardEstPairs is the estimate the guard enforces")
+    } finally spark.conf.unset("graft.dedup.candidatePairBudget")
   }
 
   test("incremental probe-side guard (opt-in): hot index buckets trip before the probe join") {

@@ -88,7 +88,7 @@ class DedupSpec extends AnyFunSuite {
       .groupBy(col("sid"))
       .agg(sort_array(collect_set(TextHashing.gramHash(col("g")))).as("gs"))
     val cands = Seq((0L, 1L), (0L, 2L)).toDF("id_a", "id_b")
-    val verify = Dedup.minHashVerify(cands, sets, useBroadcastMap = false)
+    val verify = Dedup.minHashVerify(cands, sets)
     val plan = verify.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastHashJoin") && !plan.contains("BroadcastExchange"),
       s"fallback verify plan still broadcasts a side:\n$plan")
@@ -98,20 +98,24 @@ class DedupSpec extends AnyFunSuite {
 
   test("broadcast verify: a candidate id missing from the sets map is a named error") {
     // The pipelines derive candidates from the bands of the same sets they
-    // verify against, but the public verify (and a hand-built DedupIndex)
-    // accept any candidate relation, so a missing id is reachable.
-    val sets = Dedup.gramSets(docs, "doc_id", "text")
-    val cands = Seq((0L, 1L), (0L, 99L)).toDF("id_a", "id_b")
-    val e = intercept[org.apache.spark.SparkException](
-      Dedup.minHashVerify(cands, sets, useBroadcastMap = true).collect())
+    // verify against, but a hand-built DedupIndex pairs any bands with any
+    // sets, so a missing id is reachable: this index bands doc 0 without
+    // its gram set, and the batch carries a copy of doc 0's text.
+    val built = Dedup.dedupIndex(docs, "doc_id", "text")
+    val index = built.copy(sets = built.sets.filter(col("sid") =!= 0L))
+    val batch = docs.filter(col("doc_id") === 0L)
+      .select((col("doc_id") + 10L).as("doc_id"), col("text"))
+    def pairs(forceSemiPrune: Boolean) =
+      Dedup.incrementalPairs(index, batch, "doc_id", "text", 0.7, forceSemiPrune)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val e = intercept[org.apache.spark.SparkException](pairs(forceSemiPrune = false))
     val named = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(_.isInstanceOf[MissingGramSetException])
     assert(named || e.getMessage.contains("MissingGramSetException"), e.toString)
-    assert(e.getMessage.contains("candidate doc id 99"), e.getMessage)
+    assert(e.getMessage.contains("candidate doc id 0 "), e.getMessage)
     // the shuffle verify's inner joins drop the pair instead
-    val shuffled = Dedup.minHashVerify(cands, sets, useBroadcastMap = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(shuffled === Seq((0L, 1L)))
+    val shuffled = pairs(forceSemiPrune = true)
+    assert(shuffled.contains((1L, 10L)) && !shuffled.exists(_._1 == 0L), shuffled)
   }
 
   test("canonicalizeKeepBest keeps the highest-score member, ties to larger id") {

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /**
-  * Job floor of the iterative operators. On small inputs every job runs a
+  * Job floor of the iterative operators (and of triangleCounts, whose
+  * count has no round term). On small inputs every job runs a
   * single task over KB of data, so a call's cost is its job count; each
   * round of a many-round operator pays a fixed number of jobs. This spec
   * pins the exact count of a call plus the action that forces its result
@@ -71,6 +72,13 @@ class IterativeJobFloorSpec extends AnyFunSuite {
     assertFloor("bpeMerges", 1, 2)((1 to 3).map { r =>
       (r, jobsIn(Bpe.bpeMerges(corpus, "text", r).collect()))
     })
+  }
+
+  test("triangleCounts: 10 jobs, the forcing action included") {
+    // the orientation barrier, the per-vertex barrier and the collect;
+    // a wedge census aggregate over the orientation, read by nothing but
+    // diagnostics, once made this 13
+    assert(jobsIn(GraphRank.triangleCounts(clicks).collect()) == 10)
   }
 
   test("distributed connectedComponents: 7 jobs of set-up and result, then 3 per round") {

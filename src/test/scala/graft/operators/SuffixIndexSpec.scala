@@ -55,7 +55,9 @@ class SuffixIndexSpec extends AnyFunSuite {
     assert(run(docs) === bruteRanks(docs))
     // ⌈log2 maxLen⌉ + 1 is the hard ceiling; the all-unique exit may stop
     // earlier — it must never exceed the bound
-    assert(SuffixIndex.lastRounds <= 5)
+    import spark.implicits._
+    val t = SuffixIndex.build(docs.toDF("doc_id", "text"), "doc_id", "text")
+    try assert(t.rounds >= 1 && t.rounds <= 5, s"rounds=${t.rounds}") finally t.close()
   }
 
   test("generalized-SA ties: identical docs keep equal ranks everywhere") {
@@ -182,8 +184,7 @@ class SuffixIndexSpec extends AnyFunSuite {
     val t = SuffixIndex.build(docs, "doc_id", "text", capTokens = 1024)
     try {
       assert(t.ranks.count() === 1000009L)
-      assert(SuffixIndex.lastRounds <= 11,
-        s"rounds=${SuffixIndex.lastRounds} exceeded the cap bound")
+      assert(t.rounds <= 11, s"rounds=${t.rounds} exceeded the cap bound")
       assert(t.maxLen === 1000000)
     } finally t.close()
   }
