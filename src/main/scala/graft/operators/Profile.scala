@@ -69,82 +69,20 @@ object Profile {
     * `row_number().over(partitionBy(g).orderBy(v))` serializes each
     * group onto ONE task (per-group parallelism = 1 — at 100 TB with ~20
     * sources that is corpus/20 through a single external sort). Instead
-    * the SuffixIndex.rangeDenseRank shape, specialized to grouped row
-    * numbers: range-repartition on (g, v) — equal and adjacent keys
-    * co-locate, every partition holds a contiguous slice of the (g, v)
-    * order — local 1-based per-group counters in one imperative
-    * per-partition pass (the sanctioned mapPartitions case), then
-    * per-(partition, group) offsets. The offsets pull is bounded by
-    * P + G − 1 rows (each partition holds a contiguous slice, so the sum
-    * of distinct groups per partition telescopes) — the q70 sizing-class
-    * driver pull, NOT O(rows). Returns (input columns, rn) plus the
-    * per-group total relation (g, n) computed from the same offsets for
-    * free. Ranks are invariant to the sampled range boundaries; tied
-    * values get arbitrary rank ORDER but the value AT a rank is still
-    * the r-th smallest — all any percentile interpolation reads. */
-  private def rangeGroupRowNumbers(sel: DataFrame)
-    : (DataFrame, DataFrame, () => Unit) = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
-    val spark = sel.sparkSession
-    // RESOLVED partition count via SQLConf: a raw conf.get(...).toInt
-    // throws on the non-numeric values managed platforms set ("auto"
-    // under AQE-managed partitioning), killing winsorizedStats/
-    // reliabilityCurve there; defaultParallelism is the honest fallback
-    // if even SQLConf cannot resolve the string.
-    val p = scala.util.Try(
-        org.apache.spark.sql.graftshim.ConfAccess.numShufflePartitions(spark))
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    // pin the input: RangePartitioner samples in a separate pass, an
-    // unpinned input would execute twice (the rangeDenseRank doctrine)
-    val pinnedIn = Dedup.truncateLineage(sel)
-    val sorted = pinnedIn.repartitionByRange(p, col("g"), col("v"))
-      .sortWithinPartitions(col("g"), col("v"))
-    val schema = sel.schema.add("wz_pid", IntegerType).add("wz_lr", LongType)
-    val gIdx = sel.schema.fieldIndex("g")
-    val withLr = spark.createDataFrame(
-      sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        var lr = 0L
-        var prev: Any = null
-        var started = false
-        it.map { r =>
-          val g = r.get(gIdx)
-          if (!started || g != prev) { lr = 0L; prev = g; started = true }
-          lr += 1
-          Row.fromSeq(r.toSeq :+ pid :+ lr)
-        }
-      }, schema)
-    // one materialization read by BOTH consumers (ranks + offsets), so
-    // they cannot see different range boundaries
-    val pinned = Dedup.truncateLineage(withLr)
-    // truncateLineage is EAGER — pinned now holds the rows, so the input
-    // pin's corpus-sized blocks are dead weight from here on (the r10
-    // storage-accumulation finding: two never-released pins per call)
-    Dedup.releaseTruncated(pinnedIn)
-    val offs = pinned.groupBy(col("wz_pid"), col("g"))
-      .agg(max(col("wz_lr")).as("nk")).collect()
-      .map(r => (r.getInt(0), r.get(1), r.getLong(2)))
-    val gType = sel.schema("g").dataType
-    val offRows = offs.groupBy(_._2).toSeq.flatMap { case (g, rows) =>
-      var acc = 0L
-      rows.sortBy(_._1).map { case (pid, _, nk) =>
-        val o = acc; acc += nk; Row(pid, g, o)
-      }
-    }
-    val cntRows = offs.groupBy(_._2).toSeq.map { case (g, rows) =>
-      Row(g, rows.map(_._3).sum)
-    }
-    val offDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(offRows, 1),
-      new StructType().add("wz_pid", IntegerType).add("g", gType)
-        .add("wz_off", LongType))
-    val cntDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(cntRows, 1),
-      new StructType().add("g", gType).add("n", LongType))
-    val ranked = pinned.join(broadcast(offDf), Seq("wz_pid", "g"))
-      .withColumn("rn", col("wz_lr") + col("wz_off"))
-      .drop("wz_pid", "wz_lr", "wz_off")
-    (ranked, cntDf, () => Dedup.releaseTruncated(pinned))
+    * the engine's one range rank, [[SuffixIndex.rangeRank]], in its
+    * row_number form over (g, v): every partition holds a contiguous slice
+    * of the (g, v) order and offsets come per (partition, group). Returns
+    * `sel` plus `rn` and the group's row count `n`; the caller releases the
+    * rank pin with [[Dedup.releaseTruncated]]. Tied values get arbitrary
+    * rank ORDER but the value AT a rank is still the r-th smallest — all
+    * any percentile interpolation reads.
+    *
+    * `sel` is pinned for the call: the range sampler and the exchange
+    * both read it, and unpinned each would replay its scan. */
+  private def groupRowNumbers(sel: DataFrame): DataFrame = {
+    val in = Dedup.truncateLineage(sel)
+    try SuffixIndex.rangeRank(in, Seq("g"), Seq("v"), "rn", dense = false)._1
+    finally Dedup.releaseTruncated(in)
   }
 
   /** Per-group WINSORIZED statistics: clamp `value` to its group's
@@ -160,7 +98,7 @@ object Profile {
     * aggregation cell (the q103-class state bomb: a 10B-row source is a
     * multi-GB cell). And NOT via a per-group window sort — that
     * serializes each group onto one task (per-group parallelism 1, the
-    * fixed-parallelism scale killer). [[rangeGroupRowNumbers]] ranks
+    * fixed-parallelism scale killer). [[groupRowNumbers]] ranks
     * WITHIN groups in parallel; both percentiles' ≤8 bracketing rows per
     * group come out of ONE filter pass; the |groups|-sized threshold
     * relation joins back under AQE's own broadcast sizing (no forced
@@ -173,8 +111,7 @@ object Profile {
                       pLo: Double, pHi: Double): DataFrame = {
     require(pLo >= 0 && pHi <= 1 && pLo < pHi, "need 0 <= pLo < pHi <= 1")
     val sel = df.select(col(group).as("g"), col(value).cast("double").as("v"))
-    val (ranked, cntDf, release) = rangeGroupRowNumbers(sel)
-    val withN = ranked.join(broadcast(cntDf), "g")
+    val withN = groupRowNumbers(sel)
     // pos is 1-based: 1 + p*(n-1); keep floor and ceil ranks only
     def pos(p: Double) = lit(1.0) + lit(p) * (col("n") - 1).cast("double")
     def interp(p: Double) = {
@@ -197,13 +134,13 @@ object Profile {
       .agg(interp(pLo).as("t_lo"), interp(pHi).as("t_hi"))
     // the per-group threshold relation is the ONLY thing downstream
     // reads from the ranked pass: pin it (eager, |groups| rows — the
-    // same cardinality class as the offsets pull above) and release the
-    // two corpus-sized rank pins NOW, instead of leaking them for the
-    // session lifetime (the r10 storage-accumulation finding). The
-    // returned plan reads sel + this small pin; the ContextCleaner
-    // reclaims its blocks once the caller drops the DataFrame.
+    // same cardinality class as the rank's offsets pull) and release the
+    // corpus-sized rank pin NOW, instead of leaking it for the session
+    // lifetime (the r10 storage-accumulation finding). The returned plan
+    // reads sel + this small pin; the ContextCleaner reclaims its blocks
+    // once the caller drops the DataFrame.
     val thresholds = Dedup.truncateLineage(thresholds0)
-    release()
+    Dedup.releaseTruncated(withN)
     val clipped = sel
       .join(thresholds, "g")
       .withColumn("w", least(greatest(col("v"), col("t_lo")), col("t_hi")))
@@ -288,7 +225,7 @@ object Profile {
     *
     * Bucketing needs a corpus-wide rank. NOT a window (`row_number()
     * OVER (ORDER BY …)` is a single-task global sort — the q152 lesson,
-    * corpus-wide this time): [[rangeGroupRowNumbers]] under a constant
+    * corpus-wide this time): [[groupRowNumbers]] under a constant
     * group ranks in parallel, ordered by (score, id) — a TOTAL order, so
     * tied scores with different labels land deterministically and the
     * oracle replays bucket membership exactly. bucket = (rn−1)·k div n
@@ -303,8 +240,8 @@ object Profile {
     require(buckets >= 2, "need at least two buckets")
     val sel = df.select(lit(0).as("g"), struct(score, id).as("v"),
       score.cast("long").as("s"), label.cast("int").as("y"))
-    val (ranked, cntDf, release) = rangeGroupRowNumbers(sel)
-    val out0 = ranked.join(broadcast(cntDf), "g")
+    val ranked = groupRowNumbers(sel)
+    val out0 = ranked
       .withColumn("bucket", expr(s"((rn - 1) * $buckets) div n"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_docs"),
@@ -316,11 +253,11 @@ object Profile {
         graft.Tables.r6(col("n_pos").cast("double") /
           col("n_docs").cast("double")).as("pos_rate"))
     // the report is ≤ `buckets` rows: pin it eagerly and release the
-    // corpus-sized rank pins here, instead of leaking them until the
-    // session dies (the r10 storage-accumulation finding). Eagerness is
-    // native to this operator — the rank pass already ran jobs.
+    // corpus-sized rank pin here, instead of leaking it until the session
+    // dies (the r10 storage-accumulation finding). Eagerness is native to
+    // this operator — the rank pass already ran jobs.
     val out = Dedup.truncateLineage(out0)
-    release()
+    Dedup.releaseTruncated(ranked)
     out
   }
 

@@ -810,7 +810,7 @@ object SimilaritySearch {
     val v6 = df.select(transform(col(vec), x =>
       round(x.cast("double") * 1e6).cast("long")).as("v6"))
     // HOT PATH (r16 rewrite; the sanctioned imperative-per-partition
-    // class, rangeDenseRank's scaladoc): ONE mapPartitions pass
+    // class, SuffixIndex's object doc): ONE mapPartitions pass
     // accumulates the d(d+1)/2 upper-triangle product sums, the d per-dim
     // sums, and the row count into per-partition LONG arrays, emitting
     // d(d+1)/2 + d + 1 partial rows per partition. The previous form —

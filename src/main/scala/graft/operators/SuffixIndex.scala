@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.graftshim.ConfAccess
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /**
  * Distributed generalized suffix array over the corpus TOKEN stream, built
@@ -21,16 +22,17 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
  * 1000-executor corpus. DC3's recursion would serialize on a driver-side
  * subproblem.
  *
- * Dense ranking WITHOUT a global window: a partition-less
+ * Ranking WITHOUT a global window: a partition-less
  * `dense_rank().over(orderBy(...))` collapses to one task — the exact
- * single-point-of-failure the 100 TB rubric names. Instead
- * [[rangeDenseRank]] range-repartitions on the key (equal keys co-locate by
- * the RangePartitioner contract), sorts within partitions, assigns LOCAL
- * dense ranks in one imperative per-partition pass (the sanctioned
- * mapPartitions case: the declarative alternative — a window keyed by
- * spark_partition_id — would pay one extra full exchange per doubling
- * round), and adds per-partition offsets (one max-rank row per partition —
- * a partition-count-bounded driver pull, the q70 sizing-class pull). Ranks
+ * single-point-of-failure the 100 TB rubric names. Instead [[rangeRank]],
+ * the engine's one range rank (Profile's grouped row numbers use it too),
+ * range-repartitions on the key (equal keys co-locate by the
+ * RangePartitioner contract), sorts within partitions, assigns LOCAL ranks
+ * in one imperative per-partition pass (the sanctioned mapPartitions case:
+ * the declarative alternative — a window keyed by spark_partition_id —
+ * would pay one extra full exchange per doubling round), and adds
+ * per-partition offsets (one max-rank row per partition and group — a
+ * partition-count-bounded driver pull, the q70 sizing-class pull). Ranks
  * are invariant to the sampled partition boundaries, so the answer is
  * deterministic even though the boundaries are not.
  *
@@ -113,84 +115,71 @@ object SuffixIndex {
       (ranks +: levels.map(_._2)).distinct.foreach(Dedup.releaseTruncated(_))
   }
 
-  /** Per-level pair-table survivor counts of the last
-    * [[crossDocRepeats]] call run with `levelStats = true`:
-    * ("start", n) for the adjacent cross-doc pair table, ("prefilter", n)
-    * after the minLen rank-equality prefilter, then (h.toString, n) after
-    * each level's dead-pair prune. Empty after a levelStats = false call.
-    * Diagnostics only (SCALING.md cost attribution), never control
-    * flow. */
-  def lastLevelSurvivors: Vector[(String, Long)] = lastSurvivors.get()
-  private val lastSurvivors =
-    new java.util.concurrent.atomic.AtomicReference(Vector.empty[(String, Long)])
-
-  /** Dense global rank of `df` by `keys` (ascending, binary string order —
-    * identical to DuckDB's), scale-safe per the object doc. Output adds
-    * `out` (LongType, 1-based) and drops nothing else. */
-  private[operators] def rangeDenseRank(df: DataFrame, keys: Seq[String],
-                                        out: String,
-                                        pinInput: Boolean = true): DataFrame =
-    rangeDenseRankN(df, keys, out, pinInput)._1
-
-  /** [[rangeDenseRank]] plus the number of distinct keys (the last offset
-    * cumsum — free observability the doubling loop uses for its
-    * all-unique early exit without an extra action).
+  /** Rank of every row of `df` within its `groups` by `order` (ascending,
+    * binary string order — identical to DuckDB's), scale-safe per the
+    * object doc. One per-partition counter gives both semantics: `dense`
+    * = dense_rank (equal keys share a rank), otherwise row_number (tied
+    * keys get an arbitrary order, but the value AT a rank is still the
+    * rank-th smallest). Output adds `out` (LongType, 1-based) and `n` (the
+    * group's highest rank) and drops nothing else; the returned Long is
+    * `n` summed over the groups — the number of distinct keys when
+    * `groups` is empty and `dense` holds.
     *
-    * `pinInput = false` (r16): skip the input barrier when the input is
-    * CHEAP to execute twice — a row-local projection off a scan (round
-    * 1's slice stream) or an already-checkpointed block scan
-    * (crossDocRepeats' total-order rank over `Tables.ranks`). For those,
-    * the sampling pass re-reads source/blocks instead of paying a full
-    * corpus-position block write + read; the doubling loop's successor
-    * JOIN keeps the barrier (re-executing a two-exchange join for the
-    * sampling pass is the cost the barrier was measured against). */
-  private def rangeDenseRankN(df: DataFrame, keys: Seq[String],
-                              out: String,
-                              pinInput: Boolean = true): (DataFrame, Long) = {
+    * The input is taken as given. The range sampler reads it in a pass of
+    * its own before the exchange reads it again, so a caller whose input
+    * is costly to replay (a join, a scan) pins it and releases the pin
+    * after this returns; a block scan or a row-local projection is read
+    * twice as is. */
+  private[operators] def rangeRank(df: DataFrame, groups: Seq[String],
+                                   order: Seq[String], out: String,
+                                   dense: Boolean): (DataFrame, Long) = {
     val spark = df.sparkSession
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // materialize the INPUT before the range exchange: RangePartitioner
-    // SAMPLES its input in a separate pass, so an unpinned input (the
-    // doubling round's successor join) would execute its shuffle TWICE —
-    // once for boundary sampling, once for the real exchange. One
-    // checkpoint turns both passes into cached-block reads. Local sf0.1
-    // timing is flat (per-job fixed costs dominate 270k-row shuffles);
-    // the point is the cluster regime, where this is the difference
-    // between one and two corpus shuffles per doubling round. (Dense
-    // ranks are range-boundary-invariant, so an unpinned double
-    // execution is a pure cost question, never a correctness one.)
-    val pinnedIn = if (pinInput) Dedup.truncateLineage(df) else df
-    val sorted = pinnedIn.repartitionByRange(p, keys.map(col): _*)
-      .sortWithinPartitions(keys.map(col): _*)
-    val schema = df.schema.add("gdr_pid", IntegerType).add("gdr_lr", LongType)
-    val keyIdx = keys.map(df.schema.fieldIndex).toArray
+    // RESOLVED partition count via SQLConf: a raw conf.get(...).toInt
+    // throws on the non-numeric values managed platforms set ("auto"
+    // under AQE-managed partitioning); defaultParallelism is the honest
+    // fallback if even SQLConf cannot resolve the string
+    val p = scala.util.Try(ConfAccess.numShufflePartitions(spark))
+      .getOrElse(spark.sparkContext.defaultParallelism)
+    val keys = (groups ++ order).map(col)
+    val sorted = df.repartitionByRange(p, keys: _*).sortWithinPartitions(keys: _*)
+    val gIdx = groups.map(df.schema.fieldIndex)
+    val kIdx = order.map(df.schema.fieldIndex)
     val withLr = spark.createDataFrame(
       sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
+        // local rank: restarts at a group change, then advances on every
+        // row (row_number) or on every order-key change (dense_rank)
         var lr = 0L
-        var prev: IndexedSeq[Any] = null
+        var prev: Row = null
+        def differs(r: Row, idx: Seq[Int]) = idx.exists(i => r.get(i) != prev.get(i))
         it.map { r =>
-          val k: IndexedSeq[Any] = keyIdx.map(r.get).toIndexedSeq
-          if (prev == null || k != prev) { lr += 1; prev = k }
+          if (prev == null || differs(r, gIdx)) lr = 0L
+          if (!dense || lr == 0L || differs(r, kIdx)) lr += 1
+          prev = r
           Row.fromSeq(r.toSeq :+ pid :+ lr)
         }
-      }, schema)
+      }, df.schema.add("rr_pid", IntegerType).add("rr_lr", LongType))
     // one materialization read by BOTH consumers (local ranks + offsets), so
     // they cannot see different range boundaries
     val pinned = Dedup.truncateLineage(withLr)
-    val offs = pinned.groupBy(col("gdr_pid"))
-      .agg(max(col("gdr_lr")).as("nk")).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offRows = offs.map { case (pid, nk) =>
-      val o = acc; acc += nk; Row(pid, o)
+    // (pid, group…, local max); each partition holds a contiguous slice of
+    // the key order, so the pull is bounded by partitions + groups − 1 rows
+    val nk = pinned.groupBy((col("rr_pid") +: groups.map(col)): _*)
+      .agg(max(col("rr_lr"))).collect().toSeq
+    val gw = groups.size
+    val offRows = nk.groupBy(_.toSeq.slice(1, 1 + gw)).values.toSeq.flatMap { rows =>
+      val n = rows.map(_.getLong(1 + gw)).sum
+      var acc = 0L
+      rows.sortBy(_.getInt(0)).map { r =>
+        val o = acc; acc += r.getLong(1 + gw)
+        Row.fromSeq(r.toSeq.init :+ o :+ n)
+      }
     }
-    val offDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(offRows.toSeq, 1),
-      new org.apache.spark.sql.types.StructType()
-        .add("gdr_pid", IntegerType).add("gdr_off", LongType))
-    (pinned.join(broadcast(offDf), "gdr_pid")
-      .withColumn(out, col("gdr_lr") + col("gdr_off"))
-      .drop("gdr_pid", "gdr_lr", "gdr_off"), acc)
+    val offSchema = groups.foldLeft(new StructType().add("rr_pid", IntegerType))(
+      (st, g) => st.add(df.schema(g))).add("rr_off", LongType).add("n", LongType)
+    val offDf = spark.createDataFrame(spark.sparkContext.parallelize(offRows, 1), offSchema)
+    (pinned.join(broadcast(offDf), "rr_pid" +: groups)
+      .withColumn(out, col("rr_lr") + col("rr_off"))
+      .drop("rr_pid", "rr_lr", "rr_off"), nk.map(_.getLong(1 + gw)).sum)
   }
 
   /** (d, ts) split-token arrays, one row per doc; empty text contributes
@@ -238,8 +227,7 @@ object SuffixIndex {
     * spec-pinned). */
   def build(docs: DataFrame, id: String, text: String,
             capTokens: Int = DefaultCapTokens,
-            startWidth: Int = DefaultStartWidth,
-            pinSlices: Boolean = false): Tables = {
+            startWidth: Int = DefaultStartWidth): Tables = {
     require(capTokens >= 0, "capTokens must be >= 0 (0 = uncapped)")
     require(startWidth >= 1 && (startWidth & (startWidth - 1)) == 0,
       "startWidth must be a power of two (the level ladder is binary)")
@@ -258,14 +246,15 @@ object SuffixIndex {
     val arr1 =
       if (arr0.rdd.getNumPartitions < par) arr0.repartition(par, col("d"))
       else arr0
-    // pinSlices (r17): the LCP walk consumes every sub-width slice level
-    // TWICE (A/B sides) — without a pin that is 2·log2(startWidth)
-    // corpus-wide split+posexplode replays. A LAZY barrier materializes
-    // the token-array relation with the sizing action below and the walk
-    // reads blocks; rank-only consumers (suffixRanks/q143) keep the
-    // unpinned form — for them the r16 pinInput=false measurement stands
-    // (one extra source replay beats a corpus block write).
-    val arr = if (pinSlices) Dedup.truncateLineageLazy(arr1) else arr1
+    // The LCP walk consumes every sub-width slice level TWICE (A/B sides)
+    // and round 1's range sampler and exchange both read the width-w
+    // slices: unpinned, each is a corpus-wide split+posexplode replay. A
+    // LAZY barrier materializes the token-array relation with the sizing
+    // action below, and every slice pass reads blocks. Rank-only callers
+    // take it too: build plus a ranks write ran 30 jobs pinned vs 31
+    // unpinned at sf0.01, and 6.46–6.88 s vs 6.61–6.84 s at sf0.1
+    // (local[4] on a 4-core host).
+    val arr = Dedup.truncateLineageLazy(arr1)
     // 1-row sizing pull (sanctioned): longest doc bounds the rounds; total
     // positions bounds the all-unique early exit. Computed on the per-DOC
     // relation (pre-explode) — one narrow pass.
@@ -283,14 +272,15 @@ object SuffixIndex {
     // rounds never run. Levels BELOW w exist only for the LCP walk's
     // EQUALITY tests, so they are lazy slice tables (col `r` is the slice
     // array; array equality ⟺ level-rank equality, exactly — identical
-    // doc/segment cut, see [[sliceStream]]). pinInput = false: the slice
-    // stream is a projection off the scan, so the range sampler's second
-    // execution re-reads the source instead of paying a corpus-position
-    // block write.
+    // doc/segment cut, see [[sliceStream]]). The slice stream is a
+    // row-local projection off the token-array blocks, so it goes to the
+    // rank unpinned.
     val w = startWidth
-    val (r0, n0) =
-      rangeDenseRankN(sliceStream(arr, w, capTokens), Seq("sw"), "r",
-        pinInput = false)
+    val (r0, n0) = rangeRank(sliceStream(arr, w, capTokens), Nil, Seq("sw"), "r",
+      dense = true)
+    // only the slice levels read the token-array blocks after round 1;
+    // with startWidth 1 there are none
+    if (w == 1) Dedup.releaseTruncated(arr)
     var r = r0.select(col("d"), col("p"), col("r"))
     var nDistinct = n0
     var levels = Vector.empty[(Int, DataFrame)]
@@ -312,8 +302,15 @@ object SuffixIndex {
         // identical to the doc-end cut
         succ = succ.filter(
           expr(s"(p - 1) div $capTokens") === expr(s"(p - 1 + $h) div $capTokens"))
-      val paired = r.join(succ, Seq("d", "p"), "left").na.fill(0L, Seq("rs"))
-      val (rNext, nd) = rangeDenseRankN(paired, Seq("r", "rs"), "r2")
+      // pin the successor join: unpinned, the range sampler and the
+      // exchange would each run its two exchanges (the cluster regime's
+      // difference between one and two corpus shuffles per round); its
+      // blocks are dead once the rank holds the rows
+      val paired = Dedup.truncateLineage(
+        r.join(succ, Seq("d", "p"), "left").na.fill(0L, Seq("rs")))
+      val (rNext, nd) =
+        try rangeRank(paired, Nil, Seq("r", "rs"), "r2", dense = true)
+        finally Dedup.releaseTruncated(paired)
       r = rNext.select(col("d"), col("p"), col("r2").as("r"))
       nDistinct = nd
       h *= 2
@@ -367,34 +364,19 @@ object SuffixIndex {
     * almost nothing), exactly the tail the r9 plan audit flagged. */
   def crossDocRepeats(docs: DataFrame, id: String, text: String,
                       minLen: Int = 3, topK: Int = 10,
-                      capTokens: Int = DefaultCapTokens,
-                      levelStats: Boolean = false): DataFrame = {
-    val t = build(docs, id, text, capTokens, pinSlices = true)
+                      capTokens: Int = DefaultCapTokens): DataFrame = {
+    val t = build(docs, id, text, capTokens)
     val lens = docs.select(col(id).as("d"), size(split(col(text), " ")).as("len"))
-    // total order (r, d, p) -> srow; keys are unique so dense rank = row
-    // number. pinInput = false (r16): t.ranks is already a checkpointed
-    // block scan, so re-pinning it would write a second copy of the
-    // corpus-position table just for the range sampler.
-    val rn = rangeDenseRank(t.ranks, Seq("r", "d", "p"), "srow", pinInput = false)
+    // total order (r, d, p) -> srow, a row number (the keys are unique).
+    // t.ranks is a checkpointed block scan, so it goes to the rank unpinned.
+    val rn = rangeRank(t.ranks, Nil, Seq("r", "d", "p"), "srow", dense = false)._1
     val a = rn.select(col("d").as("da"), col("p").as("pa"), col("srow"))
     val b = rn.select(col("d").as("db"), col("p").as("pb"), (col("srow") - 1).as("srow"))
     def effEnd(len: Column, pos: Column): Column =
       if (capTokens > 0)
         least(len, ((pos - 1).cast("long") / capTokens).cast("long") * capTokens + capTokens)
       else len
-    var stats = Vector.empty[(String, Long)]
-    def checkpointed(df: DataFrame, label: String): DataFrame =
-      if (!levelStats) df
-      else {
-        // diagnostic mode: materialize each stage so the count is a
-        // cached-block read and the next level starts from blocks instead
-        // of replaying the walk — linear, not quadratic, in levels
-        val pinned = Dedup.truncateLineage(df)
-        stats = stats :+ (label -> pinned.count())
-        pinned
-      }
-    var pairs = checkpointed(
-      a.join(b, "srow").filter(col("da") =!= col("db")), "start")
+    var pairs = a.join(b, "srow").filter(col("da") =!= col("db"))
     // MINLEN RANK-EQUALITY PREFILTER — the lever the dead-pair prune
     // lacks at early levels: for minLen = 3 the prune (lcp + 2h−1 ≥
     // minLen on lcp = 0) passes EVERYTHING until h = 1, so every
@@ -409,7 +391,7 @@ object SuffixIndex {
     // itself is untouched, the prefilter only removes pairs the final
     // lcp ≥ minLen filter was guaranteed to remove anyway.
     //
-    // MEASURED honesty (levelStats counters, SCALING.md): how much this
+    // MEASURED honesty (SCALING.md's q144 cost attribution): how much this
     // prunes is a DATA property — adjacent pairs in suffix order share
     // prefixes by construction, so on the 48-word shared-vocab driver
     // corpus only 0.4% of pairs differ in their first 2 tokens (260k of
@@ -419,14 +401,13 @@ object SuffixIndex {
     // removes 20% (2.17M → 1.73M); organic corpora with real vocabulary
     // growth sit closer to the latter. Cost when it doesn't bite: two
     // cached-level equi-joins, PE-normalized-unmeasurable at sf0.1.
-    for ((h0, lev0) <- t.levels.filter(_._1 <= minLen).lastOption) {
+    for ((_, lev0) <- t.levels.filter(_._1 <= minLen).lastOption) {
       val ga = lev0.select(col("d").as("da"), col("p").as("pa"), col("r").as("g_ra"))
       val gb = lev0.select(col("d").as("db"), col("p").as("pb"), col("r").as("g_rb"))
-      pairs = checkpointed(
-        pairs.join(ga, Seq("da", "pa"))
-          .join(gb, Seq("db", "pb"))
-          .filter(col("g_ra") === col("g_rb"))
-          .drop("g_ra", "g_rb"), s"prefilter_h$h0")
+      pairs = pairs.join(ga, Seq("da", "pa"))
+        .join(gb, Seq("db", "pb"))
+        .filter(col("g_ra") === col("g_rb"))
+        .drop("g_ra", "g_rb")
     }
     pairs = pairs
       .join(lens.select(col("d").as("da"), col("len").as("la")), "da")
@@ -439,9 +420,7 @@ object SuffixIndex {
       val lb = lev.select(col("d").as("db"), col("p").as("qb"), col("r").as(s"rb$i"))
       val headroom = least(col("ea") - col("pa") + 1,
         col("eb") - col("pb") + 1) - col("lcp")
-      pairs = checkpointed(
-        pairs.filter(col("lcp") + least(lit(2L * h - 1), headroom) >= minLen),
-        s"level_h$h")
+      pairs = pairs.filter(col("lcp") + least(lit(2L * h - 1), headroom) >= minLen)
         .withColumn("qa", col("pa") + col("lcp"))
         .withColumn("qb", col("pb") + col("lcp"))
         .join(la, Seq("da", "qa"), "left")
@@ -455,7 +434,6 @@ object SuffixIndex {
           .otherwise(col("lcp")))
         .drop("qa", "qb", s"ra$i", s"rb$i")
     }
-    lastSurvivors.set(stats)
     val top = pairs.filter(col("lcp") >= minLen)
       .orderBy(col("lcp").desc, col("da"), col("pa"), col("db"), col("pb"))
       .limit(topK)

@@ -403,22 +403,6 @@ object ScalingBench {
         }
       }
 
-      // q144 COST ATTRIBUTION: one instrumented crossDocRepeats run per
-      // tier — per-level pair-table survivor counts (start, minLen
-      // rank-equality prefilter, then each level's dead-pair prune), the
-      // r12 verdict's ask. Diagnostic mode checkpoints per level, so its
-      // wall time is NOT comparable to the sweep's fused run; the counts
-      // are the deliverable.
-      if (selects("q144_lcp_repeats")) {
-        import graft.operators.SuffixIndex
-        reclaim()
-        SuffixIndex.crossDocRepeats(docs(), "doc_id", "text", levelStats = true)
-          .write.format("noop").mode("overwrite").save()
-        val counts = SuffixIndex.lastLevelSurvivors
-          .map { case (l, n) => s"$l=$n" }.mkString(" ")
-        println(s"[scaling] q144_level_survivors         $dir $counts")
-      }
-
       // WINNOWING pairs (select q196_winnow_neardup): the third pairing
       // family at the tiers — df-capped fingerprint equi-join, recall vs
       // the planted mutations. The fingerprint universe is token-5-gram

@@ -50,6 +50,16 @@ class IterativeJobFloorSpec extends AnyFunSuite {
     "aaaa banana bandana lower lowest",
     "the quick brown fox jumps over the lazy dog").toDF("text")
 
+  /** `docs` documents of `len` tokens drawn from {a, b}: the doc-end
+    * suffixes tie across documents, so the doubling never exits early
+    * and the round count is set by `len` alone. */
+  private def abDocs(docs: Int, len: Int) = {
+    val rnd = new scala.util.Random(5)
+    (1L to docs.toLong).map(d =>
+      d -> Seq.fill(len)(if (rnd.nextBoolean()) "a" else "b").mkString(" "))
+      .toDF("doc_id", "text")
+  }
+
   /** Each (rounds, jobs) run is exactly `setUp + perRound × rounds`. */
   private def assertFloor(what: String, setUp: Int, perRound: Int)(runs: Seq[(Int, Int)]): Unit =
     runs.foreach { case (rounds, jobs) =>
@@ -95,5 +105,38 @@ class IterativeJobFloorSpec extends AnyFunSuite {
     }
     assert(runs.map(_._1).distinct.size == 3, runs)
     assertFloor("connectedComponents", 7, 3)(runs)
+  }
+
+  test("SuffixIndex.build + a ranks write: 9 jobs of set-up and round 1, then 10 per doubling round") {
+    // per doubling round: the successor join's pin, the range sampler,
+    // the local-rank pin and the offsets pull; round 1 ranks the
+    // row-local slices instead of a join, after the sizing pull that
+    // fills the token-array barrier
+    val runs = Seq(20, 100).map { len =>
+      var rounds = 0
+      val jobs = jobsIn {
+        val t = SuffixIndex.build(abDocs(4, len), "doc_id", "text")
+        try {
+          rounds = t.rounds
+          t.ranks.write.format("noop").mode("overwrite").save()
+        } finally t.close()
+      }
+      (rounds - 1, jobs)
+    }
+    assert(runs.map(_._1).distinct.size == 2, runs)
+    assertFloor("build", 9, 10)(runs)
+  }
+
+  test("crossDocRepeats + collect: 30 jobs of set-up and round 1, then 13 per doubling round") {
+    // per doubling round: the build's 10, plus 3 for the level it adds to
+    // the LCP walk
+    val runs = Seq(20, 100).map { len =>
+      val docs = abDocs(4, len)
+      val t = SuffixIndex.build(docs, "doc_id", "text")
+      val rounds = try t.rounds finally t.close()
+      (rounds - 1, jobsIn(SuffixIndex.crossDocRepeats(docs, "doc_id", "text").collect()))
+    }
+    assert(runs.map(_._1).distinct.size == 2, runs)
+    assertFloor("crossDocRepeats", 30, 13)(runs)
   }
 }

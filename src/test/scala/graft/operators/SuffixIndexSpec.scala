@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -191,10 +193,33 @@ class SuffixIndexSpec extends AnyFunSuite {
 
   test("build close() releases every level's blocks after consumption") {
     import spark.implicits._
-    val docs = Seq(1L -> "a b c d", 2L -> "b c d e").toDF("doc_id", "text")
-    val t = SuffixIndex.build(docs, "doc_id", "text")
-    assert(t.ranks.count() === 8L) // consume first (the lifecycle contract)
-    t.close()                      // deterministic release, no throw
+    // six 400-token docs over {a, b}: doc-end suffixes tie across docs, so
+    // the doubling runs until h covers the longest doc (several rounds,
+    // each pinning a successor join and a rank table)
+    val rnd = new scala.util.Random(3)
+    val docs = (1L to 6L).map(d =>
+      d -> Seq.fill(400)(if (rnd.nextBoolean()) "a" else "b").mkString(" "))
+      .toDF("doc_id", "text")
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def rddIds(df: DataFrame) =
+      df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    // startWidth 1 has no slice level, so nothing but round 1 reads the
+    // token-array barrier
+    for (w <- Seq(SuffixIndex.DefaultStartWidth, 1)) {
+      val before = persisted
+      val t = SuffixIndex.build(docs, "doc_id", "text", startWidth = w)
+      assert(t.rounds >= 2, s"startWidth $w: rounds=${t.rounds}")
+      // every block set the build left is read by the ranks or a level:
+      // no input pin is orphaned
+      val pins = persisted -- before
+      val read = (t.ranks +: t.levels.map(_._2)).flatMap(rddIds).toSet
+      assert(pins.nonEmpty && pins.subsetOf(read),
+        s"startWidth $w: pins $pins, read by the tables $read")
+      assert(t.ranks.count() === 2400L) // consume first (the lifecycle contract)
+      t.close()
+      assert((persisted -- before).isEmpty,
+        s"startWidth $w: left after close(): ${persisted -- before}")
+    }
   }
 
   test("crossDocRepeats: no cross-doc repeat of minLen yields empty") {
