@@ -328,14 +328,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val artifact = artifactPath(cpus)
     val spark = session()
-    // Ad-hoc session conf (diagnostic captures only — e.g. the r15 guard
-    // on/off table sets graft.dedup.candidatePairBudget=0): "k=v;k=v".
-    sys.env.get("SPARK_GRAFT_SESSION_CONF").foreach { kvs =>
-      kvs.split(';').filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      }
-    }
     // Subset runs for diagnostics (QuerySelect); the full capture
     // leaves the filter unset. Selects from ALL registered queries, not
     // just the headline set — diagnostic tables need the forced twins

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -25,31 +22,6 @@ import org.apache.spark.unsafe.types.UTF8String
  * Exactness doctrine: all three outputs are integers; the only float op
  * (the index division) happens downstream under r6 from exact operands.
  */
-case class CharStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_char_stats"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires a string argument, got ${other.sql}")
-    }
-
-  override def nullSafeEval(a: Any): Any =
-    CharStats.compute(a.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.CharStats.compute($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): CharStats =
-    copy(child = newChild)
-}
-
 object CharStats {
 
   /** One pass over the string's codepoints; HashMap<Int codepoint, long

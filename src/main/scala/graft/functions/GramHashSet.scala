@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -17,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * short-text edge cases — but without materializing ~|text| intermediate
  * 3-char UTF8Strings per row and without the interpreted higher-order
  * `transform` lambda. On the sf0.1 dedup corpus the composable chain was
- * the single hottest projection in q44; this expression keeps the whole
+ * the single hottest projection in q44; this kernel keeps the whole
  * scan inside whole-stage codegen. The DuckDB oracle is unchanged: it
  * already recomputes the same polynomial from SQL (gramHashSql).
  *
@@ -29,41 +26,12 @@ import org.apache.spark.unsafe.types.UTF8String
  * is then exactly gram-set Jaccard on CJK-heavy corpora too (the SURVEY
  * §8.5 scope note). Mirrored by TextHashing.cpGramHashSql.
  */
-case class GramHashSet(child: Expression, wide: Boolean = false)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String =
-    if (wide) "graft_gram_hash_set_cp" else "graft_gram_hash_set"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires a string argument, got ${other.sql}")
-    }
-
-  override def nullSafeEval(s: Any): Any =
-    GramHashSet.compute(s.asInstanceOf[UTF8String], wide)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.GramHashSet.compute($s, $wide);")
-
-  override protected def withNewChildInternal(newChild: Expression): GramHashSet =
-    copy(child = newChild)
-}
-
 object GramHashSet {
 
-  /** One-pass gram-hash-set kernel, shared by eval and codegen. Code-point
-    * semantics mirror Spark's substr/ascii (both count code points), so the
-    * result matches the composable formulation on any input, not just the
-    * ASCII corpus. `wide` selects the base-2^21 codepoint polynomial. */
-  def compute(s: UTF8String): ArrayData = compute(s, wide = false)
-
+  /** One-pass gram-hash-set kernel. Code-point semantics mirror Spark's
+    * substr/ascii (both count code points), so the result matches the
+    * composable formulation on any input, not just the ASCII corpus.
+    * `wide` selects the base-2^21 codepoint polynomial. */
   def compute(s: UTF8String, wide: Boolean): ArrayData = {
     val cps = s.toString.codePoints().toArray
     val n = cps.length

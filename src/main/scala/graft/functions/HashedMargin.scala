@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -23,32 +20,6 @@ import org.apache.spark.unsafe.types.UTF8String
  * unchanged (md5Hash48Sql). Same doctrine as graft_simhash32: turn a
  * per-token interpreted pipeline into map-side codegen'd work.
  */
-case class HashedMargin(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_hashed_margin"
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires a string argument, got ${other.sql}")
-    }
-
-  override def nullSafeEval(s: Any): Any =
-    HashedMargin.compute(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.HashedMargin.compute($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): HashedMargin =
-    copy(child = newChild)
-}
-
 object HashedMargin {
 
   private val digest = new ThreadLocal[java.security.MessageDigest] {

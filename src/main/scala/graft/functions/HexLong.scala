@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -21,41 +18,6 @@ import org.apache.spark.unsafe.types.UTF8String
  * (hexParseSql still states the polynomial — HexLongSpec pins
  * kernel ≡ polynomial on full md5s, truncated strings, and uppercase).
  */
-case class HexLong(child: Expression, start: Int, digits: Int)
-    extends UnaryExpression {
-
-  // validated at expression construction (plan time), so SQL misuse via
-  // the registered function fails with a clear message instead of an
-  // executor ArrayIndexOutOfBounds (start<=0) or a silently mod-64
-  // wrapped shift (digits>15 — the polynomial's documented ceiling)
-  require(start >= 1, s"graft_hex_long: start must be >= 1, got $start")
-  require(digits >= 1 && digits <= 15,
-    s"graft_hex_long: digits must be in 1..15, got $digits")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_hex_long"
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires a string argument, got ${other.sql}")
-    }
-
-  override def nullSafeEval(s: Any): Any =
-    HexLong.parse(s.asInstanceOf[UTF8String], start, digits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.HexLong.parse($s, $start, $digits);")
-
-  override protected def withNewChildInternal(newChild: Expression): HexLong =
-    copy(child = newChild)
-}
-
 object HexLong {
 
   /** Mirrors ascii(substring(h, pos, 1)): the code point of the char at
@@ -67,7 +29,10 @@ object HexLong {
       if (sub.numBytes == 0) 0 else sub.toString.codePointAt(0)
     }
 
-  def parse(s: UTF8String, start: Int, digits: Int): Long = {
+  /** `start` >= 1 and `digits` in 1..15 (checked at registration): a
+    * smaller start would index before the string, more digits would
+    * wrap the shift mod 64 (the polynomial's documented ceiling). */
+  def compute(s: UTF8String, start: Int, digits: Int): Long = {
     val bytes = s.getBytes
     val n = bytes.length
     // ASCII fast path: every hex string this engine parses is ASCII;

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /**
  * Exact integer dot product over two Array[Int] quantized-code columns —
@@ -11,8 +8,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
  * ANN path (SimilaritySearch.quantizedTopK): the composable
  * `aggregate(zip_with(a,b,*), 0L, +)` form evaluates interpreted
  * higher-order lambdas per candidate pair, the last interpreted HOF in a
- * pair loop; this expression fuses the same arithmetic into whole-stage
- * codegen.
+ * pair loop; this kernel runs the same arithmetic as one loop called
+ * from whole-stage codegen.
  *
  * Semantics match the composable form exactly (IntDotEquivalenceSpec pins
  * it property-based):
@@ -25,60 +22,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
  *    associative, but keeping the order makes the equivalence exact by
  *    construction, not just by value).
  */
-case class IntDotProduct(left: Expression, right: Expression) extends BinaryExpression {
+object IntDotProduct {
 
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_qdot"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    (left.dataType, right.dataType) match {
-      case (ArrayType(IntegerType, _), ArrayType(IntegerType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires two array<int> arguments, " +
-            s"got ${left.dataType.sql} and ${right.dataType.sql}")
-    }
-  }
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xa = a.asInstanceOf[ArrayData]
-    val xb = b.asInstanceOf[ArrayData]
-    if (xa.numElements() != xb.numElements()) return null
-    val n = xa.numElements()
+  /** Null on unequal lengths or a null element in either array. */
+  def compute(a: ArrayData, b: ArrayData): java.lang.Long = {
+    val n = a.numElements()
+    if (b.numElements() != n) return null
     var acc = 0L
     var i = 0
     while (i < n) {
-      if (xa.isNullAt(i) || xb.isNullAt(i)) return null
-      acc += xa.getInt(i).toLong * xb.getInt(i).toLong
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
+      acc += a.getInt(i).toLong * b.getInt(i).toLong
       i += 1
     }
-    acc
+    java.lang.Long.valueOf(acc)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $acc += (long) $a.getInt($i) * (long) $b.getInt($i);
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): IntDotProduct =
-    copy(left = newLeft, right = newRight)
 }

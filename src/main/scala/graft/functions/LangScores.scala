@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -31,31 +28,6 @@ import org.apache.spark.unsafe.types.UTF8String
  * allocation-free indexOf scans behind one call site, the same
  * one-pass-kernel pattern as graft_minhash_sig / graft_char_stats.
  */
-case class LangScores(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_lang_scores"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires a string argument, got ${other.sql}")
-    }
-
-  override def nullSafeEval(a: Any): Any =
-    LangScores.compute(a.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.LangScores.compute($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): LangScores =
-    copy(child = newChild)
-}
-
 object LangScores {
 
   /** Padded marker patterns per language, frozen from LangMarkers at

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /**
  * max over the rows s of `right` (an array<array<float>> literal — the
@@ -23,69 +20,24 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
  * null-propagates identically); an EMPTY selected set → null (callers
  * switch to the pure-relevance score on round 1, as mmrSelect does).
  */
-case class MaxRoundedCosine(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_max_r6_cosine"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(ArrayType(FloatType, _), _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (array<float>, array<array<float>>), " +
-            s"got ${l.sql} and ${r.sql}")
-    }
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    MaxRoundedCosine.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val out = ctx.freshName("mx")
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""Object $out = graft.functions.MaxRoundedCosine.compute($a, $b);
-         |if ($out == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((java.lang.Double) $out).doubleValue(); }
-         |""".stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): MaxRoundedCosine =
-    copy(left = newLeft, right = newRight)
-}
-
 object MaxRoundedCosine {
 
   /** Spark's Round(x, 0) on DoubleType: BigDecimal HALF_UP, NaN/∞ pass
-    * through — the exact r6 the composable chain computes. */
-  private def r6(x: Double): Double =
+    * through — the exact r6 the composable chain computes (and the PQ
+    * kernels' distance rounding, Tables.drnd(c, 6)). */
+  private[functions] def r6(x: Double): Double =
     if (x.isNaN || x.isInfinite) x
     else java.math.BigDecimal.valueOf(x * 1e6)
       .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue() / 1e6
 
-  /** Shared by eval and codegen. Returns null (not -∞) for an empty
-    * selected set. Boxed Double so codegen can branch on null. */
+  /** Null (not -∞) for an empty selected set. */
   def compute(e: ArrayData, m: ArrayData): java.lang.Double = {
     val k = m.numElements()
     if (k == 0) return null
     var best = Double.NegativeInfinity
     var r = 0
     while (r < k) {
-      val s = m.getArray(r)
-      val n = math.min(e.numElements(), s.numElements())
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < n) {
-        val x = e.getFloat(i).toDouble
-        val y = s.getFloat(i).toDouble
-        dot += x * y; na += x * x; nb += y * y
-        i += 1
-      }
-      best = math.max(best, r6(dot / (math.sqrt(na) * math.sqrt(nb))))
+      best = math.max(best, r6(CosineSimilarity.compute(e, m.getArray(r))))
       r += 1
     }
     java.lang.Double.valueOf(best)

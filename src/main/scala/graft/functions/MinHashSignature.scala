@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 import graft.operators.TextHashing
 
@@ -31,43 +28,6 @@ import graft.operators.TextHashing
  * it recomputes the same polynomials from SQL (minHashJSql /
  * minHashJWideSql).
  */
-case class MinHashSignature(child: Expression, k: Int = 16, wide: Boolean = false)
-    extends UnaryExpression {
-
-  require(k > 0 && k <= MinHashSignature.MaxK,
-    s"graft_minhash_sig supports 1..${MinHashSignature.MaxK} hashes, got $k")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = MinHashSignature.name(k, wide)
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires an array<bigint> argument, got ${other.sql}")
-    }
-
-  // empty set → null, mirroring array_min(empty) in the composable form
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any): Any =
-    MinHashSignature.compute(a.asInstanceOf[ArrayData], k, wide)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val out = ctx.freshName("sig")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"""org.apache.spark.sql.catalyst.util.ArrayData $out =
-         |  graft.functions.MinHashSignature.compute($a, $k, $wide);
-         |if ($out == null) { ${ev.isNull} = true; } else { ${ev.value} = $out; }
-         |""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
-}
-
 object MinHashSignature {
 
   private val A: Array[Long] = TextHashing.MinHashParamsScaled.map(_._1).toArray
@@ -82,7 +42,7 @@ object MinHashSignature {
     "graft_minhash_sig" + (if (k == 16) "" else k.toString) +
       (if (wide) "_wide" else "")
 
-  /** One-pass k-min kernel, shared by eval and codegen. Plain JVM long
+  /** One-pass k-min kernel. Plain JVM long
     * arithmetic == Spark's non-ANSI `*`/`+`/`%` on BIGINT, so the values
     * match the composable formulation bit-for-bit even where h*a+b would
     * wrap. Null elements are skipped and a set with no non-null element

@@ -1,27 +1,24 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 
 /**
- * Native product-quantization kernels. The composable forms (a
- * zip_with+aggregate squared-L2 inside an aggregate argmin fold, per
- * subspace, per cell) are evaluated through interpreted higher-order
- * lambdas; at production codebook geometry (m=8, k=256) encoding ONE
- * vector costs m·k = 2048 interpreted lambda folds — measured at 17+ s
+ * Native product-quantization kernels (graft_pq_sub_dists,
+ * graft_pq_argmin). The composable forms (a zip_with+aggregate
+ * squared-L2 inside an aggregate argmin fold, per subspace, per cell)
+ * are evaluated through interpreted higher-order lambdas; at production
+ * codebook geometry (m=8, k=256) encoding ONE vector costs m·k = 2048
+ * interpreted lambda folds — measured at 17+ s
  * for a 6k-vector corpus where the arithmetic itself (m·k·w ≈ 16k
  * multiplies/vector) is sub-second native work. Same argument as
- * CosineSimilarity: these participate in whole-stage codegen with one
- * fused loop.
+ * CosineSimilarity: each is one loop called from whole-stage codegen.
  *
  * Exactness: per-cell distances accumulate left-to-right in double
  * (the zip_with order) and are rounded through the SAME decimal path as
- * Tables.r6 / Spark's Round(DoubleType): BigDecimal.valueOf(d·10⁶)
- * .setScale(0, HALF_UP) / 10⁶ — PqEquivalenceSpec pins bit-parity with
- * the composable form on random vectors, so the DuckDB oracles gate the
- * native path unchanged.
+ * Tables.r6 / Spark's Round(DoubleType) (MaxRoundedCosine.r6:
+ * BigDecimal.valueOf(d·10⁶).setScale(0, HALF_UP) / 10⁶) —
+ * PqEquivalenceSpec pins bit-parity with the composable form on random
+ * vectors, so the DuckDB oracles gate the native path unchanged.
  *
  * Sub-vector element type: both kernels accept array<float> (raw
  * embedding slices — the q147 path) AND array<double> (residual slices,
@@ -38,20 +35,13 @@ import org.apache.spark.sql.types._
  * null distance skips the cell in argmin (the composable when(d < acc)
  * fold keeps acc on a null comparison) and stays null in the LUT.
  */
-object PqKernels {
-
-  /** Exactly Tables.drnd(c, 6) for a nonnegative double: Spark's
-    * Round(DoubleType, 0) routes through BigDecimal.valueOf (shortest
-    * decimal repr, HALF_UP) — this must stay bit-identical to it. */
-  def r6d(v: Double): Double =
-    java.math.BigDecimal.valueOf(v * 1e6)
-      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue() / 1e6
+object PqSubDists {
 
   /** Squared L2 between a sub-vector (float or double elements, per
     * `svIsDouble`) and a double centroid, left-to-right (the zip_with
     * order), r6'd. Null on length mismatch — the composable
     * zip_with+aggregate null-propagation, NOT a silent prefix score. */
-  def dist2R6(sv: ArrayData, cent: ArrayData, svIsDouble: Boolean): java.lang.Double = {
+  private[functions] def dist2R6(sv: ArrayData, cent: ArrayData, svIsDouble: Boolean): java.lang.Double = {
     val n = sv.numElements()
     if (cent.numElements() != n) return null
     var acc = 0.0
@@ -62,34 +52,14 @@ object PqKernels {
       acc += d * d
       i += 1
     }
-    java.lang.Double.valueOf(r6d(acc))
+    java.lang.Double.valueOf(MaxRoundedCosine.r6(acc))
   }
 
-  /** Argmin over (cid, centroid) struct cells: first strict minimum in
-    * array (= cid-ascending) order; -1 on an empty cell array — the
-    * contract of the composable fold it replaces. Null-distance cells
-    * (length-mismatched centroids) are skipped, matching the composable
-    * when(d < acc.d) fold's null-comparison keep-acc behavior. */
-  def argmin(sv: ArrayData, cells: ArrayData, svIsDouble: Boolean): Long = {
-    var bestCid = -1L
-    var bestD = Double.MaxValue
-    var i = 0
-    val n = cells.numElements()
-    while (i < n) {
-      val cell = cells.getStruct(i, 2)
-      val d = dist2R6(sv, cell.getArray(1), svIsDouble)
-      if (d != null && d.doubleValue() < bestD) {
-        bestD = d.doubleValue(); bestCid = cell.getLong(0)
-      }
-      i += 1
-    }
-    bestCid
-  }
-
-  /** Dense LUT row: r6'd distance per centroid slot, null slots stay
-    * null (empty sign buckets — no corpus code references them);
-    * length-mismatched centroids also yield null (see class doc). */
-  def subDists(sv: ArrayData, cents: ArrayData, svIsDouble: Boolean): ArrayData = {
+  /** One query's dense ADC LUT row for one subspace: r6'd distance per
+    * centroid slot, null slots stay null (empty sign buckets — no corpus
+    * code references them); length-mismatched centroids also yield null
+    * (see the doc above). */
+  def compute(sv: ArrayData, cents: ArrayData, svIsDouble: Boolean): ArrayData = {
     val n = cents.numElements()
     val out = new Array[Any](n)
     var i = 0
@@ -102,72 +72,27 @@ object PqKernels {
   }
 }
 
-/** codes cell: nearest-centroid cid for one subspace's slice against its
-  * cid-sorted (cid, centroid) cells. */
-case class PqArgmin(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_pq_argmin"
+object PqArgmin {
 
-  private lazy val svIsDouble: Boolean = left.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _),
-            ArrayType(StructType(Array(a, b)), _))
-        if a.dataType == LongType &&
-           b.dataType.isInstanceOf[ArrayType] &&
-           b.dataType.asInstanceOf[ArrayType].elementType == DoubleType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (array<float|double>, array<struct<cid: bigint, " +
-            s"centroid: array<double>>>), got ${other._1.sql} and ${other._2.sql}")
+  /** codes cell: the nearest-centroid cid for one subspace's slice over
+    * its cid-sorted (cid, centroid) struct cells — first strict minimum
+    * in array (= cid-ascending) order; -1 on an empty cell array, the
+    * contract of the composable fold it replaces. Null-distance cells
+    * (length-mismatched centroids) are skipped, matching the composable
+    * when(d < acc.d) fold's null-comparison keep-acc behavior. */
+  def compute(sv: ArrayData, cells: ArrayData, svIsDouble: Boolean): Long = {
+    var bestCid = -1L
+    var bestD = Double.MaxValue
+    var i = 0
+    val n = cells.numElements()
+    while (i < n) {
+      val cell = cells.getStruct(i, 2)
+      val d = PqSubDists.dist2R6(sv, cell.getArray(1), svIsDouble)
+      if (d != null && d.doubleValue() < bestD) {
+        bestD = d.doubleValue(); bestCid = cell.getLong(0)
+      }
+      i += 1
     }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    PqKernels.argmin(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], svIsDouble)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.PqKernels.argmin($a, $b, $svIsDouble);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqArgmin =
-    copy(left = newLeft, right = newRight)
-}
-
-/** One query's dense ADC LUT row for one subspace: r6'd squared-L2 per
-  * centroid slot (null-preserving). */
-case class PqSubDists(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def prettyName: String = "graft_pq_sub_dists"
-
-  private lazy val svIsDouble: Boolean = left.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
+    bestCid
   }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _), ArrayType(ArrayType(DoubleType, _), _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (array<float|double>, array<array<double>>), " +
-            s"got ${other._1.sql} and ${other._2.sql}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    PqKernels.subDists(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], svIsDouble)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.PqKernels.subDists($a, $b, $svIsDouble);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqSubDists =
-    copy(left = newLeft, right = newRight)
 }

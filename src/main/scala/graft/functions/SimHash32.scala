@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -13,53 +10,22 @@ import org.apache.spark.unsafe.types.UTF8String
  * A document's SimHash depends only on its OWN tokens, so the
  * explode→groupBy(doc) formulation (operators.Dedup
  * .simHashFingerprintsAggregate) ships |corpus tokens| rows through a
- * shuffle to compute what is really a projection. This expression removes
+ * shuffle to compute what is really a projection. This kernel removes
  * that shuffle entirely — at 100 TB the fingerprint stage becomes pure
  * map-side work fused into the scan. Values are bit-identical to the
  * aggregate form (SimHashSigSpec pins corpus + degenerate/unicode inputs);
  * the DuckDB oracle is unchanged (same polynomial from SQL, tokenHashSql).
  *
  * Null/empty contract: a doc with no non-empty token produces NO row in
- * the aggregate form (its tokens are all filtered), so this expression
+ * the aggregate form (its tokens are all filtered), so this kernel
  * returns null there and callers filter nulls — same visible set.
  */
-case class SimHash32(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash32"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires a string argument, got ${other.sql}")
-    }
-
-  override def nullSafeEval(s: Any): Any =
-    SimHash32.compute(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val boxed = ctx.freshName("fp")
-    nullSafeCodeGen(ctx, ev, s =>
-      s"""Object $boxed = graft.functions.SimHash32.compute($s);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((Long) $boxed).longValue(); }
-         |""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash32 =
-    copy(child = newChild)
-}
-
 object SimHash32 {
 
-  /** Row-local SimHash kernel, shared by eval and codegen. Mirrors the
-    * composable chain split(text,' ') → filter(length>0) → tokenHash →
-    * 32 ±1 counters → sign bits: code-point semantics for ascii/substr/
-    * length, Java long arithmetic, counter>0 sets the bit (ties → 0).
+  /** Row-local SimHash kernel. Mirrors the composable chain
+    * split(text,' ') → filter(length>0) → tokenHash → 32 ±1 counters →
+    * sign bits: code-point semantics for ascii/substr/length, Java long
+    * arithmetic, counter>0 sets the bit (ties → 0).
     * Returns null (boxed) when no non-empty token exists. */
   def compute(s: UTF8String): java.lang.Long = {
     val cps = s.toString.codePoints().toArray

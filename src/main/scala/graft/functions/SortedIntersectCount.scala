@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /**
  * |A ∩ B| for two SORTED, DISTINCT array<bigint> columns via a linear merge
@@ -16,55 +13,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
  * (use sort_array(array_distinct(...))); the count is then exactly
  * cardinality(array_intersect(a, b)).
  */
-case class SortedIntersectCount(left: Expression, right: Expression) extends BinaryExpression {
+object SortedIntersectCount {
 
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_sorted_intersect_count"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires two array<bigint> arguments, " +
-            s"got ${left.dataType.sql} and ${right.dataType.sql}")
-    }
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xa = a.asInstanceOf[ArrayData]
-    val xb = b.asInstanceOf[ArrayData]
-    val na = xa.numElements(); val nb = xb.numElements()
+  def compute(a: ArrayData, b: ArrayData): Int = {
+    val na = a.numElements(); val nb = b.numElements()
     var i = 0; var j = 0; var n = 0
     while (i < na && j < nb) {
-      val va = xa.getLong(i); val vb = xb.getLong(j)
+      val va = a.getLong(i); val vb = b.getLong(j)
       if (va == vb) { n += 1; i += 1; j += 1 }
       else if (va < vb) i += 1
       else j += 1
     }
     n
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val va = ctx.freshName("va"); val vb = ctx.freshName("vb")
-      val n = ctx.freshName("n")
-      s"""
-         |int $na = $a.numElements(); int $nb = $b.numElements();
-         |int $i = 0; int $j = 0; int $n = 0;
-         |while ($i < $na && $j < $nb) {
-         |  long $va = $a.getLong($i); long $vb = $b.getLong($j);
-         |  if ($va == $vb) { $n++; $i++; $j++; }
-         |  else if ($va < $vb) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $n;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
 }

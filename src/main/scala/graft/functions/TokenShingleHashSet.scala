@@ -2,10 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /**
  * Sorted distinct md5-48 hash set of the TOKEN k-shingles of an
@@ -30,40 +27,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
  * joined string, and stays inside whole-stage codegen. TokenShingleSpec
  * pins kernel ≡ composable form; the DuckDB oracle keeps the SQL form.
  */
-case class TokenShingleHashSet(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  require(k >= 1, s"graft_token_shingle_hash_set needs k >= 1, got $k")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_token_shingle_hash_set"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires an array<string> argument, got ${other.sql}")
-    }
-
-  override def nullSafeEval(a: Any): Any =
-    TokenShingleHashSet.compute(a.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.TokenShingleHashSet.compute($a, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenShingleHashSet =
-    copy(child = newChild)
-}
-
 object TokenShingleHashSet {
 
   private val md5 = ThreadLocal.withInitial[MessageDigest](
     () => MessageDigest.getInstance("MD5"))
 
-  /** One-pass shingle-hash-set kernel, shared by eval and codegen. */
+  /** One-pass shingle-hash-set kernel (k >= 1, checked at registration). */
   def compute(ts: ArrayData, k: Int): ArrayData = {
     val n = ts.numElements()
     val g = math.max(n - k + 1, 1)

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 
 /**
  * Occurrence count of the MOST frequent adjacent word bigram within one
@@ -18,31 +15,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
  * value parity with the aggregate shape and the Exchange-free plan).
  * Returns 0 when the doc has fewer than 2 tokens (no bigrams).
  */
-case class TopBigramCount(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_top_bigram_count"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires an array<string> argument, got ${other.sql}")
-    }
-
-  override def nullSafeEval(a: Any): Any =
-    TopBigramCount.compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.TopBigramCount.compute($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): TopBigramCount =
-    copy(child = newChild)
-}
-
 object TopBigramCount {
 
   /** Row-local top-bigram kernel. Bigram identity is the space-joined

@@ -267,7 +267,7 @@ object Dedup {
   /** (sid, gs) with gs = SORTED DISTINCT gram-hash array per doc — the one
     * scan both the signature and verify stages derive from. gramHash is
     * injective, so set ops on these arrays equal set ops on the grams.
-    * Computed by the codegen'd one-pass graft_gram_hash_set expression;
+    * Computed by the codegen'd one-pass graft_gram_hash_set kernel;
     * semantics (and the DuckDB oracle) are those of the composable
     * sort_array(array_distinct(transform(shingles3(text), gramHash))) —
     * GramHashSpec pins the equivalence.

@@ -39,8 +39,8 @@ object SimilaritySearch {
 
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine via the native codegen'd expression (graft.functions
-    * .CosineSimilarity, registered by GraftExtensions). Bit-identical to
+  /** Cosine via the native kernel (graft.functions.CosineSimilarity
+    * .compute, registered by GraftExtensions). Bit-identical to
     * dot(a,b)/(l2norm(a)*l2norm(b)) — same widen-to-double, same
     * left-to-right accumulation — but fused into whole-stage codegen
     * instead of interpreted lambda evaluation per pair. */
@@ -274,8 +274,8 @@ object SimilaritySearch {
   }
 
   /** Exact integer dot product of two quantized code arrays, via the
-    * native codegen'd expression (graft.functions.IntDotProduct,
-    * registered by GraftExtensions) — the pair-loop hot path of
+    * native kernel (graft.functions.IntDotProduct.compute, registered
+    * by GraftExtensions) — the pair-loop hot path of
     * [[quantizedTopK]] stays inside whole-stage codegen instead of
     * evaluating interpreted higher-order lambdas per candidate.
     * Value-identical to [[qdotHof]] (IntDotEquivalenceSpec). */

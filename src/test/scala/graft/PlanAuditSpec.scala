@@ -558,9 +558,13 @@ class PlanAuditSpec extends AnyFunSuite {
     import TextHashing.LshBanding
     // file-backed scan: a LocalRelation would be constant-folded away
     val docs = Tables.load(spark, TestSpark.sfDir, "documents")
-    def once(p: String, fn: String): Unit = {
-      val evals = s"$fn\\(".r.findAllIn(p).size
-      assert(evals == 1, s"$fn evaluated $evals times:\n${p.take(3000)}")
+    // the plan prints a kernel as its compute call; a variant is told
+    // apart by its trailing literal arguments
+    def once(p: String, kernel: String, lits: String): Unit = {
+      val evals = s"$kernel\\.compute\\(".r.findAllIn(p).size
+      val variant = s"$kernel\\.compute\\((?:[^()]|\\([^()]*\\))*, $lits\\)".r.findAllIn(p).size
+      assert(evals == 1 && variant == 1,
+        s"$kernel evaluated $evals times, ($lits) $variant times:\n${p.take(3000)}")
     }
     val token = Dedup.signaturesFromSets(Dedup.tokenShingleSets(docs, "doc_id", "text"),
       LshBanding.Scaled, wide = true).queryExecution.executedPlan.toString
@@ -570,12 +574,12 @@ class PlanAuditSpec extends AnyFunSuite {
       LshBanding.Scaled).queryExecution.executedPlan.toString
     for (p <- Seq(token, cp, char))
       assert(!p.toLowerCase.contains("lambdafunction"), p.take(3000))
-    once(token, "graft_token_shingle_hash_set")
-    once(token, "graft_minhash_sig30_wide")
-    once(cp, "graft_gram_hash_set_cp")
-    once(cp, "graft_minhash_sig_wide")
-    once(char, "graft_gram_hash_set")
-    once(char, "graft_minhash_sig30")
+    once(token, "TokenShingleHashSet", "3")
+    once(token, "MinHashSignature", "30, true")
+    once(cp, "GramHashSet", "true")
+    once(cp, "MinHashSignature", "16, true")
+    once(char, "GramHashSet", "false")
+    once(char, "MinHashSignature", "30, false")
   }
 
   test("q190 mean pool: one aggregation, no join, map-side partials") {

@@ -44,6 +44,7 @@ class HashedMarginSpec extends AnyFunSuite {
     val p = docs.select(TextAnalysis.hashedLinearScore(col("text")))
       .queryExecution.executedPlan.toString
     // the "*(n)" prefix is toString's WholeStageCodegen marker
-    assert(p.contains("*(1) Project [graft_hashed_margin"), p.take(2000))
+    assert(p.contains("*(1) Project [static_invoke(graft.functions.HashedMargin.compute("),
+      p.take(2000))
   }
 }

@@ -50,7 +50,7 @@ class MinHashSigSpec extends AnyFunSuite {
     val docs = graft.Tables.load(spark, TestSpark.sfDir, "documents")
     val plan = Dedup.signaturesFromSets(Dedup.gramSets(docs, "doc_id", "text"))
       .queryExecution.executedPlan.toString
-    val evals = "graft_minhash_sig".r.findAllIn(plan).size
+    val evals = "MinHashSignature\\.compute\\(".r.findAllIn(plan).size
     assert(evals == 1, s"expected one kernel eval in the plan, got $evals:\n${plan.take(2000)}")
   }
 
@@ -132,7 +132,8 @@ class MinHashSigSpec extends AnyFunSuite {
     assert(a.nonEmpty && a == c)
     // the profile's kernel is the k = 20 one, not a 30-min superset
     val plan = Dedup.signaturesFromSets(sets, b).queryExecution.executedPlan.toString
-    assert("graft_minhash_sig20\\(".r.findAllIn(plan).size == 1, plan.take(2000))
+    assert("MinHashSignature\\.compute\\([^()]*, 20, false\\)".r.findAllIn(plan).size == 1,
+      plan.take(2000))
   }
 
   test("empty gram set yields null signature (array_min semantics)") {

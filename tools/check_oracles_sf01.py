@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """sf0.1 oracle check for the scale-sensitive gate subset (r12 verdict #2).
 
-Same normalize-and-compare as check_oracles.py, but sequential with
+Same table views and normalize (imported from check_oracles.py) with
+its own value compare (atol=1e-9 on floats), but sequential with
 unbuffered per-query progress, a memory/temp-bounded DuckDB connection
 (the suffix oracles spill hundreds of GB unbounded), and a per-query
 wall-clock report so pathological oracles are identified instead of
@@ -17,13 +18,7 @@ import time
 import duckdb
 import pandas as pd
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
-
-
-def norm(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
+from check_oracles import TABLES, norm
 
 
 CACHE_DIR = "/root/.cache/graft_oracle_sf01"
