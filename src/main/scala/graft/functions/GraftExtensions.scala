@@ -126,6 +126,9 @@ object GraftExtensions {
       Seq(Col(Floats, Doubles), Col(ArrayType(Doubles))), bound = svIsDouble),
     Kernel("graft_char_stats", CharStats, LongSet, Seq(Col(StringType))),
     Kernel("graft_lang_scores", LangScores, LongSet, Seq(Col(StringType))),
+    Kernel("graft_punct_count", QualityCounts, IntegerType, Seq(Col(StringType)), bound = _ => Seq(true)),
+    Kernel("graft_ws_token_count", QualityCounts, IntegerType, Seq(Col(StringType)),
+      bound = _ => Seq(false)),
     Kernel("graft_hashed_margin", HashedMargin, LongType, Seq(Col(StringType)))
   ) ++ (
     // one name per (k, wide) signature kernel: k = a banding profile's

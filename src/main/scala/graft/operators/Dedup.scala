@@ -596,20 +596,26 @@ object Dedup {
     * storms trip this under ANY profile, which is precisely when the cap
     * is wanted.
     *
-    * Cost: one top-k scan of the corpus + three aggregates over the
+    * Cost: one top-k scan of the corpus, which hashes each document once
+    * (the md5-48 key is a projected column and the top-k compares
+    * attributes; ordering by the hash expression itself re-ran md5 on
+    * both rows of every comparison), + three aggregates over the
     * ≤ `sampleDocs`-row sample — safe to run unconditionally before any
     * large dedup job. RecommendProfileSpec pins all three regimes on the
-    * generators that measured them. */
+    * generators that measured them; PlanAuditSpec pins the attribute-only
+    * sort key. */
   def recommendProfile(docs: DataFrame, id: String, text: String,
                        sampleDocs: Int = 2048): DedupProfileRecommendation = {
     require(sampleDocs >= 64, "recommendProfile needs sampleDocs >= 64")
-    val h = graft.operators.TextAnalysis.md5Hash48(col("t"))
+    // the md5-48 key is projected once per row: a sort on the expression
+    // re-hashes both rows of every top-k comparison
     val sample = truncateLineage(docs
       .select(col(id).as("sid"), col(text).as("t"))
       .filter(col("t").isNotNull && length(col("t")) > 0)
-      .orderBy(h, col("sid"))
+      .select(col("sid"), col("t"), graft.operators.TextAnalysis.md5Hash48(col("t")).as("_k"))
+      .orderBy(col("_k"), col("sid"))
       .limit(sampleDocs)
-      .select(col("sid"), col("t"), (h % 2 === 0).as("_half")))
+      .select(col("sid"), col("t"), (col("_k") % 2 === 0).as("_half")))
 
     // Σ non-ASCII chars / Σ chars (integer pair — stripping the ASCII
     // range leaves exactly the non-ASCII chars) + the sample count, one

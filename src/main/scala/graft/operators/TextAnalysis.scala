@@ -13,8 +13,11 @@ import graft.Tables.r6
  */
 object TextAnalysis {
 
-  /** Whitespace token count. */
-  def wsTokenCount(text: Column): Column = size(split(text, " "))
+  /** Whitespace token count: spaces + 1 from the one-pass byte-count
+    * kernel, the integer `size(split(text, " "))` gives; null text reads
+    * -1, the non-ANSI `size(null)` the engine's sessions run with. */
+  def wsTokenCount(text: Column): Column =
+    coalesce(call_function("graft_ws_token_count", text), lit(-1))
 
   /** BPE-ish token count: runs of letters, runs of digits, or single other
     * non-space chars — the shape of a byte-pair pre-tokenizer split. */
@@ -69,16 +72,22 @@ object TextAnalysis {
     when(total === 0, "und").otherwise(pred)
   }
 
-  /** documents → (scores projected once) → predicted column. The panel
-    * is ONE kernel call (graft_lang_scores, all langs in one pass); the
-    * element_at projections reference the non-cheap `_ls` array k times,
-    * so CollapseProject keeps the barrier instead of inlining the kernel
-    * once per score (the signaturesFromSets precedent). */
+  /** documents → (scores computed once) → predicted column. The panel
+    * is ONE kernel call (graft_lang_scores, all langs in one pass), made
+    * the output of a one-element Generate, `explode(array(kernel(text)))`.
+    * A projection is no barrier: a caller's filter on `predicted` or
+    * `s_*` is pushed below it with the aliases substituted, and the
+    * funnel's filter then ran the kernel 17 times per row (once per score
+    * reference in the argmax CASE). Predicate pushdown cannot move a
+    * condition on a generated column below its Generate, so the filter
+    * reads the scores; the Generate stays inside whole-stage codegen and
+    * yields exactly one row per input row. LangScoresSpec and
+    * PlanAuditSpec pin one evaluation under a filter. */
   def langPredicted(df: org.apache.spark.sql.DataFrame, textCol: String, keep: Seq[String])
     : org.apache.spark.sql.DataFrame = {
     val scored = df
       .select(keep.map(col) :+
-        call_function("graft_lang_scores", col(textCol)).as("_ls"): _*)
+        explode(array(call_function("graft_lang_scores", col(textCol)))).as("_ls"): _*)
       .select(keep.map(col) ++
         LangMarkers.zipWithIndex.map { case ((lang, _), i) =>
           element_at(col("_ls"), i + 1).as(s"s_$lang") }: _*)
@@ -148,15 +157,28 @@ object TextAnalysis {
       lit(0L),
       (acc, x) => acc + x)
 
-  /** Punctuation ratio: non-alphanumeric-non-space chars / total. */
+  /** Punctuation ratio: non-alphanumeric-non-space chars / total, the
+    * count from the one-pass byte-count kernel. */
   def punctRatio(text: Column): Column =
-    r6(length(regexp_replace(text, "[a-zA-Z0-9 ]", "")).cast("double") /
-      greatest(length(text), lit(1)))
+    punctRatioOf(text, call_function("graft_punct_count", text))
 
   /** Mean word length over whitespace tokens. */
-  def meanWordLen(text: Column): Column =
-    r6((length(text) - (wsTokenCount(text) - 1)).cast("double") /
-      greatest(wsTokenCount(text), lit(1)))
+  def meanWordLen(text: Column): Column = meanWordLenOf(text, wsTokenCount(text))
+
+  private def punctRatioOf(text: Column, punct: Column): Column =
+    r6(punct.cast("double") / greatest(length(text), lit(1)))
+  private def meanWordLenOf(text: Column, tokens: Column): Column =
+    r6((length(text) - (tokens - 1)).cast("double") / greatest(tokens, lit(1)))
+
+  /** The composable forms of wsTokenCount, punctRatio and meanWordLen — a
+    * regexp rewrite or a split of the document per count — kept as the
+    * semantics documentation and the spec oracle of the byte-count
+    * kernel (QualityCountsSpec), the stopwordScore pattern. */
+  private[graft] def wsTokenCountComposable(text: Column): Column = size(split(text, " "))
+  private[graft] def punctRatioComposable(text: Column): Column =
+    punctRatioOf(text, length(regexp_replace(text, "[a-zA-Z0-9 ]", "")))
+  private[graft] def meanWordLenComposable(text: Column): Column =
+    meanWordLenOf(text, wsTokenCountComposable(text))
 
   /** Content fingerprint: md5 of whitespace-normalized lowercase text. The
     * positional rolling-hash variant lives in TextHashing (gramHash) and

@@ -2,7 +2,10 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ListenerDrain
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,7 +27,12 @@ class PlanAuditSpec extends AnyFunSuite {
     * scan, so its verify shape is visible only in the action that
     * materialized it, the verify's own barrier, which is that query's
     * last. */
-  private def lastCheckpointPlan(name: String): String = {
+  private def lastCheckpointPlan(name: String): String =
+    checkpointPlans(SparkEntry.queries(name)(spark, TestSpark.sfDir)).last.toString
+
+  /** Executed plans of the `localCheckpoint` actions that `run` runs, in
+    * order. */
+  private def checkpointPlans(run: => Any): Seq[SparkPlan] = {
     val checkpoints = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -33,10 +41,10 @@ class PlanAuditSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      SparkEntry.queries(name)(spark, TestSpark.sfDir)
+      run
       ListenerDrain.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
-    checkpoints.asScala.last.executedPlan.toString
+    checkpoints.asScala.toSeq.map(_.executedPlan)
   }
 
   test("q01: partial+final aggregation with pushed scan filter") {
@@ -582,9 +590,42 @@ class PlanAuditSpec extends AnyFunSuite {
     once(char, "MinHashSignature", "30, false")
   }
 
+  test("curation funnel: the language kernel runs once per row, no regexp rewrite or split") {
+    import graft.operators.TextAnalysis
+    // composed as the curation benchmark composes it: a filter on
+    // `predicted` and on the quality score above langPredicted
+    val docs = Tables.load(spark, TestSpark.sfDir, "documents")
+      .select(col("doc_id"), col("source"), col("lang"), col("text"))
+    val p = TextAnalysis.langPredicted(docs, "text", Seq("doc_id", "source", "lang", "text"))
+      .withColumn("quality", TextAnalysis.qualityScore(length(col("text")),
+        TextAnalysis.punctRatio(col("text")), TextAnalysis.meanWordLen(col("text"))))
+      .filter((col("predicted") === "en" ||
+        (col("predicted") === "und" && col("lang") === "en")) && col("quality") >= 0.5)
+      .select(col("doc_id"), col("source"), col("text"))
+      .queryExecution.executedPlan.toString
+    val evals = Seq("LangScores.compute(", "regexp_replace(", "split(")
+      .map(f => f -> (p.split(java.util.regex.Pattern.quote(f), -1).length - 1))
+    assert(evals == Seq("LangScores.compute(" -> 1, "regexp_replace(" -> 0, "split(" -> 0),
+      s"$evals\n${p.take(6000)}")
+  }
+
+  test("recommendProfile: the sample's top-k orders by projected attributes, the hash runs once per row") {
+    val docs = Tables.load(spark, TestSpark.sfDir, "documents")
+    val plans = checkpointPlans(graft.operators.Dedup.recommendProfile(docs, "doc_id", "text"))
+    val topK = plans.flatMap(p => PlanWalk.collect(p) { case t: TakeOrderedAndProjectExec => t })
+    assert(topK.size == 1, plans.mkString("\n"))
+    val order = topK.head.sortOrder
+    assert(order.forall(_.child.isInstanceOf[Attribute]), topK.head.toString)
+    val keys = order.mkString(", ")
+    assert(!keys.contains("md5(") && !keys.contains("HexLong.compute("), keys)
+  }
+
   test("q190 mean pool: one aggregation, no join, map-side partials") {
     val p = plan("q190_mean_pool")
     assert(!p.contains("Join"), p.take(2000))
     assert(p.contains("partial_count"), p.take(2000))
   }
 }
+
+/** Walks an executed plan through adaptive-execution wrappers. */
+private object PlanWalk extends AdaptiveSparkPlanHelper

@@ -54,10 +54,15 @@ class LangScoresSpec extends AnyFunSuite {
   }
 
   test("langPredicted evaluates the kernel once and keeps regexp out of the panel") {
-    val df = TextAnalysis.langPredicted(docs.toDF("text"), "text", Seq("text"))
-    val plan = df.queryExecution.optimizedPlan.toString
-    assert(plan.split("graft_lang_scores", -1).length - 1 <= 1,
-      s"kernel must be evaluated once, not once per score column:\n$plan")
+    // a filter on `predicted` is pushed below every projection: only a
+    // barrier pushdown cannot cross keeps it reading the scores (an RDD,
+    // not a local relation, which constant folding would evaluate away)
+    val df = TextAnalysis.langPredicted(spark.sparkContext.parallelize(docs, 2).toDF("text"),
+        "text", Seq("text"))
+      .filter(col("predicted") === "en")
+    val plan = df.queryExecution.executedPlan.toString
+    val evals = plan.split("LangScores.compute\\(", -1).length - 1
+    assert(evals == 1, s"kernel evaluated $evals times, not once:\n$plan")
     assert(!plan.toLowerCase.contains("regexp_replace"),
       s"the panel must not regex-rewrite the document:\n$plan")
   }
